@@ -2,8 +2,10 @@ package graft.engine
 
 import scala.collection.immutable.ListMap
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.model._
 import graft.ops.Ops
@@ -94,8 +96,10 @@ final class ParquetResolver(spark: SparkSession, dir: String, storeDir: Option[S
     // constants, like the reference's json_normalize(record_path=
     // 'data', meta=['study_code','view']) (Configurable_ETL_Python
     // .py:36-41) — a config may project or filter on them.
-    val flat = graft.io.NestedStore.flatten(
-      spark.read.parquet(s"$sd/study_code=$studyCode/view=$view"))
+    val viewDir = s"$sd/study_code=$studyCode/view=$view"
+    val reader = ParquetResolver.footerSchema(spark, viewDir)
+      .fold(spark.read)(spark.read.schema(_))
+    val flat = graft.io.NestedStore.flatten(reader.parquet(viewDir))
     // a payload field named like a key would make json_normalize raise
     // a conflicting-metadata error in the reference; fail equally loud.
     // Case-INSENSITIVE check: withColumn resolves case-insensitively
@@ -108,6 +112,43 @@ final class ParquetResolver(spark: SparkSession, dir: String, storeDir: Option[S
     flat.withColumn("study_code", lit(studyCode)).withColumn("view", lit(view))
   }
   def table(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
+}
+
+object ParquetResolver {
+
+  /** The schema `spark.read.parquet(dir).schema` reports, read on the
+    * driver so building a plan over the directory fires no Spark job
+    * (inference runs one job per read). It decodes the footer(s)
+    * inference would: with `spark.sql.parquet.mergeSchema` off,
+    * `_common_metadata`, else `_metadata`, else the first data file by
+    * path; with it on, every file (data files skipped when
+    * `spark.sql.parquet.respectSummaryFiles` is on). None for a
+    * missing directory, one with no data file, or one with
+    * subdirectories (partition discovery) — the caller then reads
+    * without a schema and Spark raises its usual error.
+    */
+  def footerSchema(spark: SparkSession, dir: String): Option[StructType] = {
+    import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
+    val path = new Path(dir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val listed =
+      try fs.listStatus(path).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    val visible = listed.filterNot(s => FooterSchema.hidden(s.getPath.getName))
+      .sortBy(_.getPath.toString)
+    val (summary, data) = visible.partition(s =>
+      Set("_common_metadata", "_metadata").contains(s.getPath.getName))
+    val (common, meta) = summary.partition(_.getPath.getName == "_common_metadata")
+    if (data.isEmpty || visible.exists(_.isDirectory)) None
+    else {
+      val touch =
+        if (spark.conf.get("spark.sql.parquet.mergeSchema").toBoolean) {
+          val respect = spark.conf.get("spark.sql.parquet.respectSummaryFiles").toBoolean
+          (if (respect) Nil else data) ++ meta ++ common
+        } else (common ++ meta ++ data).take(1)
+      FooterSchema.read(spark, touch)
+    }
+  }
 }
 
 object Interpreter {
@@ -469,29 +510,42 @@ object StudyRunner {
   /** process_study (Configurable_ETL_Python.py:589-604): derive each
     * analyte in order against one shared context; the first seeds the
     * per-subject accumulator, the rest left-join onto it on the stitch
-    * key. Analytes that later analytes re-read (AnalyteRef
-    * memoization) are cached — they feed ≥2 downstream plans.
+    * key. Pure plan construction: over store views served by
+    * [[ParquetResolver]] it fires no Spark job, so a refresh's only
+    * jobs are its sink's.
+    *
+    * An analyte that later analytes re-read (AnalyteRef memoization)
+    * is not persisted: its sub-plan appears once per reader in the one
+    * study plan, and AQE exchange reuse serves the later copies from
+    * the first one's shuffle. A cache would plan the sub-query eagerly,
+    * add a materialization barrier, and outlive the refresh (a later
+    * store upsert re-caches it against replaced files). Reading the
+    * sub-plan twice is sound because every copy computes the same rows:
+    * every order-dependent op (UNIQUE COLUMN, GROUPBY SLICE, SUMMARISE
+    * first/last) breaks sort-key ties with `rowHash`, a content hash,
+    * not an arrival order; an order-free UNIQUE COLUMN is
+    * `dropDuplicates`, whose survivor is arbitrary unless the dedup
+    * keys cover every column of the frame — true of the one such op in
+    * fixtures/clinical_study (`ds_death` on subject, subject_death). A
+    * config that re-reads an analyte built by an order-free UNIQUE
+    * COLUMN on a strict subset of its columns may see different
+    * survivors in the two copies.
     */
   def run(study: StudySpec, resolver: SourceResolver): DataFrame = {
-    val reused: Set[String] = study.analytes.flatMap(a =>
-      a.getData.filter(_.source == SourceKind.AnalyteRef).map(_.objectName)).toSet
-
     val (accOpt, ctxF) = study.analytes.foldLeft((Option.empty[DataFrame], PipelineContext())) {
       case ((acc, ctx), analyte) =>
         val ctx1 = Interpreter.deriveAnalyte(ctx, analyte, resolver)
-        // Rebind the UNSORTED frame and carry the order metadata
-        // forward: a later analyte that AnalyteRef-reads this one keeps
-        // order-dependent semantics (UNIQUE COLUMN, first/last, SLICE),
-        // and no range shuffle is planned ahead of the stitch join —
-        // joins would destroy the physical order anyway.
-        val logical = ctx1.df(analyte.name)
-        val res = if (reused.contains(analyte.name)) logical.cache() else logical
-        val ctx2 = ctx1.bind(analyte.name, res, ctx1.order(analyte.name))
+        // The catalog already holds the UNSORTED frame with its order
+        // metadata: a later analyte that AnalyteRef-reads this one
+        // keeps order-dependent semantics (UNIQUE COLUMN, first/last,
+        // SLICE), and no range shuffle is planned ahead of the stitch
+        // join — joins would destroy the physical order anyway.
+        val res = ctx1.df(analyte.name)
         val acc2 = acc match {
           case None => Some(res)
           case Some(a) => Some(Ops.namedJoin(a, res, Seq(study.stitchKey), "left"))
         }
-        (acc2, ctx2)
+        (acc2, ctx1)
     }
     val acc = accOpt.getOrElse(throw new IllegalArgumentException("study has no analytes"))
     // pandas' left merge preserves the LEFT frame's row order, so the
