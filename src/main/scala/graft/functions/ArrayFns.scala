@@ -1,11 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 private[functions] trait DoubleArrayInputs { self: BinaryExpression =>
@@ -283,124 +281,4 @@ case class Int8Quant(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): Int8Quant =
     copy(child = newChild)
-}
-
-object ArrayFns {
-
-  /** Register graft_dot / graft_cosine on the session's function
-    * registry (Column construction from a raw Expression is
-    * private[sql]; call_function over a registered builder is the
-    * public route). Idempotent.
-    *
-    * Two lifecycles exist deliberately: COLUMN-returning APIs
-    * (dotNative, Ivf.probeCentroids) resolve at the CALLER's later
-    * analysis, so they need this persistent registration; a
-    * DataFrame-returning operator analyzes its own plan eagerly and
-    * should use [[scoped]] instead, leaving the caller's session
-    * unchanged.
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_dot",
-      exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_cosine",
-      exprs => CosineSim(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash",
-      MinHashSigAgg.fromExprs, "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash",
-      exprs => SimHashAgg(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_ivf_cells",
-      exprs => NearestCentroids(exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction("graft_image_meta",
-      exprs => ImageMeta(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_audio_meta",
-      exprs => AudioMeta(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_video_meta",
-      exprs => VideoMeta(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_byte_stats",
-      exprs => ByteStats(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_byte_hist",
-      exprs => ByteHist(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_bloom",
-      BloomBuildAgg.fromExprs, "built-in")
-    reg.createOrReplaceTempFunction("graft_bloom_contains",
-      BloomMightContain.fromExprs, "built-in")
-    reg.createOrReplaceTempFunction("graft_cms_estimate",
-      CmsEstimate.fromExprs, "built-in")
-    reg.createOrReplaceTempFunction("graft_gram_hashes",
-      exprs => GramHashes(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_nfc",
-      exprs => NfcNormalize(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_bpe_encode",
-      exprs => BpeEncode(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_cdc_gear",
-      exprs => CdcGearChunks(exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction("graft_cdc_md5",
-      exprs => CdcMd5Chunks(exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash_bands",
-      exprs => MinHashBands(exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction("graft_shingles",
-      exprs => WordShingles(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_gopher",
-      exprs => GopherSignals(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_quality",
-      exprs => QualityScores(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_cdc_words",
-      exprs => CdcWordChunks(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_marker_count",
-      exprs => MarkerCount(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_band_hashes",
-      exprs => BandHashes(exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction("graft_dot_int",
-      exprs => IntDot(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_int8_quant",
-      exprs => Int8Quant(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_blocklist",
-      exprs => BlocklistStats(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_bpe_count",
-      exprs => BpeTokenCount(exprs(0), exprs(1)), "built-in")
-  }
-
-  private val registeredNames = Seq(
-    "graft_dot", "graft_cosine", "graft_minhash", "graft_simhash",
-    "graft_ivf_cells", "graft_image_meta", "graft_audio_meta",
-    "graft_video_meta", "graft_byte_stats", "graft_byte_hist",
-    "graft_bloom", "graft_bloom_contains", "graft_cms_estimate",
-    "graft_gram_hashes", "graft_nfc", "graft_bpe_encode", "graft_cdc_gear",
-    "graft_cdc_md5", "graft_minhash_bands", "graft_shingles", "graft_gopher",
-    "graft_quality", "graft_cdc_words", "graft_marker_count",
-    "graft_band_hashes", "graft_dot_int", "graft_int8_quant",
-    "graft_blocklist", "graft_bpe_count")
-
-  /** Run `body` with the graft functions registered, then drop any
-    * that were NOT already present — a library operator resolving its
-    * own native expressions must not permanently install temp
-    * functions in the caller's session (the registry is only needed
-    * at ANALYSIS time, which is eager at Dataset construction; the
-    * resolved plan keeps the expression objects, so dropping after
-    * `body` returns is safe). Functions the caller registered
-    * explicitly stay. Not re-entrancy-safe against a concurrent
-    * thread analyzing graft plans on the SAME session mid-body — the
-    * same caveat any temp-function lifecycle has.
-    */
-  def scoped[T](spark: SparkSession)(body: => T): T = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    val reg = spark.sessionState.functionRegistry
-    val pre = registeredNames.filter(n => reg.functionExists(FunctionIdentifier(n))).toSet
-    register(spark)
-    try body
-    finally registeredNames.filterNot(pre).foreach(n =>
-      reg.dropFunction(FunctionIdentifier(n)))
-  }
-
-  /** Fused native dot product — [[register]] the session first;
-    * arguments must already be array<double>. */
-  def dotNative(a: Column, b: Column): Column = call_function("graft_dot", a, b)
-
-  /** Fused native cosine similarity — [[register]] the session first. */
-  def cosineNative(a: Column, b: Column): Column = call_function("graft_cosine", a, b)
-
-  /** Fused native integer-code dot — [[register]] the session first;
-    * arguments must already be array<int>. */
-  def dotIntNative(a: Column, b: Column): Column = call_function("graft_dot_int", a, b)
 }

@@ -4,7 +4,7 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
@@ -88,27 +88,6 @@ case class BloomBuildAgg(
     copy(child = newChildren.head)
 }
 
-object BloomBuildAgg {
-  /** Builder for the function registry:
-    * graft_bloom(key, expectedItems, fpp).
-    */
-  def fromExprs(exprs: Seq[Expression]): BloomBuildAgg = {
-    require(exprs.size == 3, "graft_bloom(key, expectedItems, fpp)")
-    val n = exprs(1) match {
-      case Literal(v: Long, LongType) => v
-      case Literal(v: Int, IntegerType) => v.toLong
-      case other => throw new IllegalArgumentException(
-        s"graft_bloom expectedItems must be an integer literal, got $other")
-    }
-    val f = exprs(2) match {
-      case Literal(v: Double, DoubleType) => v
-      case other => throw new IllegalArgumentException(
-        s"graft_bloom fpp must be a double literal, got $other")
-    }
-    BloomBuildAgg(exprs.head, n, f)
-  }
-}
-
 /** Probe twin of [[BloomBuildAgg]]: true iff the key MIGHT be in the
   * filter the bytes encode. Deserialized once per expression instance
   * (the bit array is shared read-only across a task's rows), probed
@@ -162,19 +141,4 @@ case class BloomMightContain(child: Expression, bloomBytes: Array[Byte])
 
   override protected def withNewChildInternal(newChild: Expression): BloomMightContain =
     copy(child = newChild)
-}
-
-object BloomMightContain {
-  /** Builder for the function registry:
-    * graft_bloom_contains(key, bloomBytes-literal).
-    */
-  def fromExprs(exprs: Seq[Expression]): BloomMightContain = {
-    require(exprs.size == 2, "graft_bloom_contains(key, bloomBytes)")
-    val bytes = exprs(1) match {
-      case Literal(v: Array[Byte], BinaryType) => v
-      case other => throw new IllegalArgumentException(
-        s"graft_bloom_contains filter must be a binary literal, got $other")
-    }
-    BloomMightContain(exprs.head, bytes)
-  }
 }

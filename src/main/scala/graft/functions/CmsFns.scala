@@ -66,11 +66,3 @@ case class CmsEstimate(left: Expression, right: Expression)
       newLeft: Expression, newRight: Expression): CmsEstimate =
     copy(left = newLeft, right = newRight)
 }
-
-object CmsEstimate {
-  /** Builder for the function registry: graft_cms_estimate(sketch, value). */
-  def fromExprs(exprs: Seq[Expression]): CmsEstimate = {
-    require(exprs.size == 2, "graft_cms_estimate(sketch, value)")
-    CmsEstimate(exprs(0), exprs(1))
-  }
-}

@@ -4,7 +4,7 @@ import java.nio.ByteBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{Expression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -93,17 +93,4 @@ case class MinHashSigAgg(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): MinHashSigAgg =
     copy(child = newChildren.head)
-}
-
-object MinHashSigAgg {
-  /** Builder for the function registry: graft_minhash(sh, numPerm). */
-  def fromExprs(exprs: Seq[Expression]): MinHashSigAgg = {
-    require(exprs.size == 2, "graft_minhash(shingle, numPerm)")
-    val n = exprs(1) match {
-      case Literal(v: Int, IntegerType) => v
-      case other => throw new IllegalArgumentException(
-        s"graft_minhash numPerm must be an integer literal, got $other")
-    }
-    MinHashSigAgg(exprs.head, n)
-  }
 }

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Native
+
 /** Config-driven corpus curation — the reference engine's identity
   * (a pipeline is a TABLE of operation rows, not code; cf.
   * `/root/reference/Configurable_ETL_Python.py:456-522`'s
@@ -227,11 +229,8 @@ object CurationPipeline {
       // transform lambda; [[blocklistHitHof]] is the parity reference.
       val terms = list(st, "terms", Seq.empty)
       require(terms.nonEmpty, "BLOCKLIST FILTER needs terms=a,b,...")
-      graft.functions.ArrayFns.scoped(df.sparkSession) {
-        df.where(call_function("graft_blocklist",
-          coalesce(col(textCol).cast("string"), lit("")),
-          typedLit(terms.map(_.toLowerCase))).getField("n_hits") === 0)
-      }
+      df.where(Native.blocklist(coalesce(col(textCol).cast("string"), lit("")),
+        terms.map(_.toLowerCase)).getField("n_hits") === 0)
     case "EXACT DEDUP" =>
       Dedup.exactDedup(textCol, idCol)(df)
     case "NEAR DEDUP" =>

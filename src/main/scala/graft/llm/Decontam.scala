@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Native
+
 /** Benchmark decontamination: flag training documents that share word
   * n-grams with an evaluation/benchmark set — the standard published
   * leakage control for pretraining corpora (GPT-3-style 13-gram
@@ -180,28 +182,23 @@ object Decontam {
       bench: DataFrame,
       idCol: String,
       vecCol: String,
-      threshold: Double): DataFrame =
-    // DataFrame-returning operator: analysis is eager, so the native
-    // cosine resolves inside the scope and the caller's session keeps
-    // no graft registrations (the ArrayFns.scoped discipline)
-    graft.functions.ArrayFns.scoped(corpus.sparkSession) {
-      val b = bench.select(
-        col(idCol).as("__bench_id"),
-        col(vecCol).cast("array<double>").as("__bv"))
-      corpus
-        .select(col(idCol), col(vecCol).cast("array<double>").as("__cv"))
-        .crossJoin(broadcast(b))
-        .withColumn("__sim",
-          graft.functions.ArrayFns.cosineNative(col("__cv"), col("__bv")))
-        .groupBy(col(idCol))
-        .agg(min(when(col("__sim").isNotNull,
-          struct((-col("__sim")).as("ns"), col("__bench_id").as("nb")))).as("__m"))
-        .select(
-          col(idCol),
-          col("__m.nb").as("nearest_bench_id"),
-          (-col("__m.ns")).as("max_sim"),
-          coalesce(-col("__m.ns") >= threshold, lit(false)).as("contaminated"))
-    }
+      threshold: Double): DataFrame = {
+    val b = bench.select(
+      col(idCol).as("__bench_id"),
+      col(vecCol).cast("array<double>").as("__bv"))
+    corpus
+      .select(col(idCol), col(vecCol).cast("array<double>").as("__cv"))
+      .crossJoin(broadcast(b))
+      .withColumn("__sim", Native.cosine(col("__cv"), col("__bv")))
+      .groupBy(col(idCol))
+      .agg(min(when(col("__sim").isNotNull,
+        struct((-col("__sim")).as("ns"), col("__bench_id").as("nb")))).as("__m"))
+      .select(
+        col(idCol),
+        col("__m.nb").as("nearest_bench_id"),
+        (-col("__m.ns")).as("max_sim"),
+        coalesce(-col("__m.ns") >= threshold, lit(false)).as("contaminated"))
+  }
 }
 
 /** Near-duplicate contamination: the paraphrase-level complement of

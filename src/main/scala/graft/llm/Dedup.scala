@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Native
+
 /** Deduplication operators for training-data pipelines: exact,
   * MinHash-LSH near-dup, SimHash, and n-gram Jaccard verification.
   *
@@ -87,25 +89,12 @@ object Dedup {
     // byte spans of the original text (split on one char + rejoin
     // with it is the identity), so emission is pure slicing. Output
     // is bit-identical (LlmSpec parity pin; every shingle consumer's
-    // oracle hash-gates it). Registration rides the thread's active
-    // session — always set where query plans are built; a missing one
-    // falls back to the reference formulation rather than failing.
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) =>
-        graft.functions.ArrayFns.register(s)
-        call_function("graft_shingles", text, lit(k))
-      case None =>
-        // loud, not silent (r19): the HOF fallback is parity-identical
-        // but 2-3× slower — a plan built off-thread should say so
-        System.err.println("[graft] shinglesOf: no active SparkSession on this " +
-          "thread — falling back to the interpreted HOF shingle form (slower, " +
-          "same output); build plans on a thread with an active session")
-        shinglesOfHof(text, k)
-    }
+    // oracle hash-gates it).
+    Native.shingles(text, k)
 
   /** The pre-r18 column formulation of [[shinglesOf]] — kept as the
     * executable PARITY REFERENCE for the native expression that
-    * replaced it, and as the no-active-session fallback.
+    * replaced it.
     */
   private[graft] def shinglesOfHof(text: Column, k: Int = 3): Column = {
     val toks = split(text, " ")
@@ -144,7 +133,6 @@ object Dedup {
       numPerm: Int = 64,
       shingleK: Int = 3,
       cache: Boolean = false): DataFrame = {
-    graft.functions.ArrayFns.register(df.sparkSession)
     val sh = df.select(col(idCol),
       explode(array_distinct(shingles(textCol, shingleK))).as("__sh"))
     // graft_minhash (functions/MinHashAgg.scala): one xxhash64 per
@@ -152,7 +140,7 @@ object Dedup {
     // aggregate buffer — vs numPerm separate min() aggs each
     // re-hashing the string
     val sigs = sh.groupBy(col(idCol))
-      .agg(call_function("graft_minhash", col("__sh"), lit(numPerm)).as("__sig"))
+      .agg(Native.minhash(col("__sh"), numPerm).as("__sig"))
     // The candidate self-join consumes the signatures TWICE (probe +
     // build). They're tiny relative to the corpus (id + numPerm
     // longs ≈ 0.5 KB/doc), so persisting trades negligible memory for
@@ -175,23 +163,12 @@ object Dedup {
     // [[bandHashesHof]], the parity reference) — the last interpreted
     // HOF in the minhash chain after r18 went native on shingles and
     // signatures (r19 §4; LlmSpec parity pin, every banded consumer's
-    // candidate set is oracle-gated downstream). Registration rides
-    // the thread's active session, the [[shinglesOf]] discipline.
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) =>
-        graft.functions.ArrayFns.register(s)
-        call_function("graft_band_hashes", sig, lit(bands), lit(rows))
-      case None =>
-        System.err.println("[graft] bandHashes: no active SparkSession on this " +
-          "thread — falling back to the interpreted HOF band form (slower, " +
-          "same output); build plans on a thread with an active session")
-        bandHashesHof(sig, numPerm, bands)
-    }
+    // candidate set is oracle-gated downstream).
+    Native.bandHashes(sig, bands, rows)
   }
 
   /** The pre-r19 column formulation of [[bandHashes]] — the
-    * executable PARITY REFERENCE for the native expression, and the
-    * no-active-session fallback.
+    * executable PARITY REFERENCE for the native expression.
     */
   private[graft] def bandHashesHof(sig: Column, numPerm: Int, bands: Int): Column = {
     require(numPerm % bands == 0, s"bands ($bands) must divide numPerm ($numPerm)")
@@ -738,17 +715,9 @@ object Dedup {
     // hash values are Spark-internal (oracles compare gram strings),
     // only cross-doc equality matters; empty array for docs shorter
     // than k, so the explode emits nothing (the old guard's contract).
-    // Registration is scoped: analysis is eager at select, so the
-    // temp function resolves here and is dropped before returning —
-    // the caller's session keeps no graft registrations it didn't ask
-    // for (the same no-session-mutation discipline as eventsNanos'
-    // derived-session confs).
-    graft.functions.ArrayFns.scoped(df.sparkSession) {
-      val hashes = org.apache.spark.sql.functions.call_function(
-        "graft_gram_hashes", col(textCol), lit(k))
-      df.select(col(idCol), posexplode(hashes).as(Seq("pos", "gram_hash")))
-        .withColumn("pos", col("pos") + 1)
-    }
+    df.select(col(idCol),
+        posexplode(Native.gramHashes(col(textCol), k)).as(Seq("pos", "gram_hash")))
+      .withColumn("pos", col("pos") + 1)
   }
 
   /** Grams that appear in at least `minDocs` DISTINCT documents — the
@@ -1029,10 +998,9 @@ object Dedup {
       textCol: String,
       tokenHash: Column => Column = xxhash64(_),
       cache: Boolean = false): DataFrame = {
-    graft.functions.ArrayFns.register(df.sparkSession)
     val sigs = df.select(col(idCol), explode(split(col(textCol), " ")).as("__t"))
       .groupBy(col(idCol))
-      .agg(call_function("graft_simhash", tokenHash(col("__t"))).as("fp"))
+      .agg(Native.simhash(tokenHash(col("__t"))).as("fp"))
     // same trade as minhashSignatures: the pair self-join reads the
     // signatures twice, and they're 16 bytes/doc — persisting skips a
     // second full tokenize+hash pass. Session-scoped.
@@ -1109,15 +1077,12 @@ object Dedup {
     // interpreted md5Hash60 lambda per WORD plus array_join slices.
     // Bit-identical output: LlmSpec parity pin + the CDC consumers'
     // DuckDB oracles.
-    graft.functions.ArrayFns.scoped(df.sparkSession) {
-      df.select(col(idCol),
-          explode_outer(call_function("graft_cdc_words",
-            col(textCol), lit(divisor))).as("__chunk"))
-        .filter(col("__chunk").isNotNull)
-        .select(col(idCol),
-          col("__chunk.chunk_md5").as("chunk_md5"),
-          col("__chunk.n_words").as("n_words"))
-    }
+    df.select(col(idCol),
+        explode_outer(Native.cdcWords(col(textCol), divisor)).as("__chunk"))
+      .filter(col("__chunk").isNotNull)
+      .select(col(idCol),
+        col("__chunk.chunk_md5").as("chunk_md5"),
+        col("__chunk.n_words").as("n_words"))
   }
 
   /** The pre-r18 column formulation of [[cdcChunks]] — the executable

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.Native
+
 /** IVF (inverted-file) approximate nearest neighbour: a k-means
   * coarse quantizer assigns every vector to its nearest centroid;
   * a probe only scans the `nProbe` closest centroid lists instead of
@@ -193,16 +195,8 @@ object Ivf {
     * replaced was interpreted per centroid and dominated cold-run
     * planning.
     */
-  private def nearestCentroids(vec: org.apache.spark.sql.Column, model: IvfModel, nProbe: Int) = {
-    // a Column carries no session, so register against the active one
-    // — without this, probeCentroids on a fresh session resolves
-    // graft_ivf_cells only if assign/ivfTopK happened to run first
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .foreach(graft.functions.ArrayFns.register)
-    call_function("graft_ivf_cells", vec,
-      typedlit(model.centroids.map(_.toSeq).toSeq), lit(nProbe))
-  }
+  private def nearestCentroids(vec: org.apache.spark.sql.Column, model: IvfModel, nProbe: Int) =
+    Native.ivfCells(vec, model.centroids.map(_.toSeq).toSeq, nProbe)
 
   /** The `nProbe` nearest centroid ids for a probe vector (position
     * 0 = nearest) — the cell list a search would scan.
@@ -211,12 +205,10 @@ object Ivf {
     nearestCentroids(vec.cast("array<double>"), model, nProbe)
 
   /** Assign every corpus vector to its single nearest centroid. */
-  def assign(df: DataFrame, idCol: String, vecCol: String, model: IvfModel): DataFrame = {
-    graft.functions.ArrayFns.register(df.sparkSession)
+  def assign(df: DataFrame, idCol: String, vecCol: String, model: IvfModel): DataFrame =
     df.select(col(idCol), col(vecCol),
       element_at(nearestCentroids(col(vecCol).cast("array<double>"), model, 1), 1)
         .as("centroid_id"))
-  }
 
   /** ANN top-k: probes fan out to their `nProbe` nearest centroid
     * lists, candidates meet on centroid_id, exact cosine ranks within.
@@ -256,9 +248,8 @@ object Ivf {
     // inner loop of every in-cell pairing (ANN search, label
     // consistency), where the composed form's three array
     // materializations per pair dominate
-    graft.functions.ArrayFns.register(assigned.sparkSession)
     val scored = c.join(p, Seq("centroid_id"))
-      .withColumn("sim", graft.functions.ArrayFns.cosineNative(col("__cv"), col("__pv")))
+      .withColumn("sim", Native.cosine(col("__cv"), col("__pv")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("probe_id")).orderBy(col("sim").desc, col("neighbor_id").asc)
     scored.withColumn("__rn", row_number().over(w))
@@ -379,8 +370,7 @@ object Ivf {
       model: IvfModel,
       k: Int,
       nProbe: Int = 2,
-      maxBroadcastBytes: Long = 256L << 20): DataFrame =
-      graft.functions.ArrayFns.scoped(corpus.sparkSession) {
+      maxBroadcastBytes: Long = 256L << 20): DataFrame = {
     val qCorpus = assign(corpus, idCol, vecCol, model)
       .select(col(idCol).as("neighbor_id"), col("centroid_id").cast("int").as("centroid_id"),
         quantCodes(col(vecCol).cast("array<double>")).as("__cq"))
@@ -388,10 +378,8 @@ object Ivf {
   }
 
   private def quantCodes(v: org.apache.spark.sql.Column) =
-    // fused native quantizer (both callers register via scoped /
-    // quantAssigned's register) — see [[Quantize.int8Store]]
-    org.apache.spark.sql.functions.call_function("graft_int8_quant", v)
-      .getField("codes")
+    // fused native quantizer — see [[Quantize.int8Store]]
+    Native.int8Quant(v).getField("codes")
 
   /** The shared quantized-ranking half: probe-cell fan-out joins a
     * (neighbor_id, centroid_id, __cq codes) candidate frame and ranks
@@ -417,11 +405,10 @@ object Ivf {
         quantCodes(col("__pv")).as("__pq"))
     // native integer-code dot ([[graft.functions.IntDot]]) — three
     // dots per candidate pair inside the cell join ran interpreted in
-    // the composed form ([[Quantize.idotHof]], the parity reference);
-    // both quantRank callers wrap in ArrayFns.scoped, so the function
-    // is registered here (r19 §4)
+    // the composed form ([[Quantize.idotHof]], the parity reference;
+    // r19 §4)
     def idot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      graft.functions.ArrayFns.dotIntNative(a, b)
+      Native.dotInt(a, b)
     val normProd =
       sqrt(idot(col("__cq"), col("__cq")).cast("double")) *
         sqrt(idot(col("__pq"), col("__pq")).cast("double"))
@@ -456,8 +443,7 @@ object Ivf {
       k: Int,
       nProbe: Int = 2,
       rerankFactor: Int = 3,
-      maxBroadcastBytes: Long = 256L << 20): DataFrame =
-      graft.functions.ArrayFns.scoped(corpus.sparkSession) {
+      maxBroadcastBytes: Long = 256L << 20): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(rerankFactor >= 1, s"rerankFactor must be >= 1, got $rerankFactor")
     val cands = ivfQuantTopK(corpus, probes, idCol, vecCol, model,
@@ -470,8 +456,7 @@ object Ivf {
     val scored = fCorpus
       .join(broadcast(cands), Seq("neighbor_id"))
       .join(Similarity.maybeBroadcast(fProbes, maxBroadcastBytes), Seq("probe_id"))
-      .withColumn("sim",
-        graft.functions.ArrayFns.cosineNative(col("__cv"), col("__pv")))
+      .withColumn("sim", Native.cosine(col("__cv"), col("__pv")))
     val w = Window.partitionBy(col("probe_id"))
       .orderBy(col("sim").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w).cast("int"))
@@ -495,10 +480,9 @@ object Ivf {
       idCol: String,
       vecCol: String,
       model: IvfModel): DataFrame = {
-    graft.functions.ArrayFns.register(df.sparkSession)
     val vd = col(vecCol).cast("array<double>")
     // fused native quantizer — see [[Quantize.int8Store]]
-    val qz = org.apache.spark.sql.functions.call_function("graft_int8_quant", vd)
+    val qz = Native.int8Quant(vd)
     df.select(col(idCol),
       qz.getField("scale").as("scale"),
       qz.getField("codes").as("codes"),
@@ -561,8 +545,7 @@ object Ivf {
       model: IvfModel,
       k: Int,
       nProbe: Int = 2,
-      maxBroadcastBytes: Long = 256L << 20): DataFrame =
-      graft.functions.ArrayFns.scoped(spark) {
+      maxBroadcastBytes: Long = 256L << 20): DataFrame = {
     val cells = probes
       .select(explode(probeCentroids(col(vecCol).cast("array<double>"), model, nProbe)).as("c"))
       .distinct().collect().map(_.getInt(0))
@@ -592,8 +575,7 @@ object Ivf {
       df: DataFrame,
       vecCol: String,
       model: IvfModel,
-      quantScale: Long = 10000L): DataFrame = {
-    graft.functions.ArrayFns.register(df.sparkSession)
+      quantScale: Long = 10000L): DataFrame =
     df.select(col(vecCol).cast("array<double>").as("__v"))
       .where(col("__v").isNotNull && size(col("__v")) > 0)
       .withColumn("centroid_id",
@@ -603,7 +585,6 @@ object Ivf {
       .agg(
         sum(round(col("x") * quantScale).cast("long")).as("sum_q"),
         count(lit(1)).as("n_assigned"))
-  }
 
   /** `iters` full-corpus Lloyd iterations refining a (typically
     * sample-trained) model: assign every vector to its nearest
@@ -625,7 +606,6 @@ object Ivf {
       model: IvfModel,
       iters: Int = 1,
       spherical: Boolean = true): IvfModel = {
-    graft.functions.ArrayFns.register(df.sparkSession)
     var m = model
     for (_ <- 0 until iters) {
       val rows = df.select(col(vecCol).cast("array<double>").as("__v"))

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Native
+
 /** Multimodal column handling: image/audio/video as opaque `binary`
   * columns plus typed metadata. Metadata decode (PNG/JPEG/GIF header
   * parse) and feature extraction (byte histogram / entropy) are REAL
@@ -31,15 +33,6 @@ object Multimodal {
     df.withColumn("n_bytes", octet_length(col(binCol)))
       .withColumn("content_sha256", sha2(col(binCol), 256))
 
-  /** Run `body` with the native graft_* functions registered and
-    * deregistered around it — analysis is eager, so resolution
-    * happens in-scope and the CALLER's session registry is left
-    * unchanged (the ArrayFns.scoped discipline; a bare register would
-    * permanently install library internals into the session).
-    */
-  private def withNative(df: DataFrame)(body: DataFrame => DataFrame): DataFrame =
-    graft.functions.ArrayFns.scoped(df.sparkSession)(body(df))
-
   /** One byte of `c` as two hex chars — shared by the audio/video
     * fixture builders so an encoding fix cannot apply to one oracle's
     * fixture and miss the other. Assumes non-negative input (ids). */
@@ -54,7 +47,7 @@ object Multimodal {
     * downstream of this probe, not replace it.
     */
   def withImageMeta(binCol: String, outCol: String = "media_meta")(df: DataFrame): DataFrame =
-    withNative(df)(_.withColumn(outCol, call_function("graft_image_meta", col(binCol))))
+    df.withColumn(outCol, Native.imageMeta(col(binCol)))
 
   /** REAL audio metadata: parse the RIFF/WAVE header with the native
     * `graft_audio_meta` expression (functions/BinaryFns.scala) —
@@ -64,7 +57,7 @@ object Multimodal {
     * field, no sample decode.
     */
   def withAudioMeta(binCol: String, outCol: String = "audio_meta")(df: DataFrame): DataFrame =
-    withNative(df)(_.withColumn(outCol, call_function("graft_audio_meta", col(binCol))))
+    df.withColumn(outCol, Native.audioMeta(col(binCol)))
 
   /** REAL video metadata: walk the ISO-BMFF box structure with the
     * native `graft_video_meta` expression (functions/BinaryFns.scala)
@@ -75,7 +68,7 @@ object Multimodal {
     * downstream of this probe, not in place of it.
     */
   def withVideoMeta(binCol: String, outCol: String = "video_meta")(df: DataFrame): DataFrame =
-    withNative(df)(_.withColumn(outCol, call_function("graft_video_meta", col(binCol))))
+    df.withColumn(outCol, Native.videoMeta(col(binCol)))
 
   /** Deterministic MP4 FIXTURE for the correctness gate, completing
     * the image/audio/video trio: real ISO-BMFF byte streams — ftyp,
@@ -247,14 +240,12 @@ object Multimodal {
     // corpus bytes, and every mm oracle hash-gates it — so the HOF
     // face survives only as the parity reference
     // [[binaryCdcChunksHof]].
-    withNative(df)(d =>
-      d.select(col(idCol),
-          explode_outer(call_function("graft_cdc_md5",
-            col(binCol), lit(divisor), lit(window))).as("__chunk"))
-        .filter(col("__chunk").isNotNull)
-        .select(col(idCol),
-          col("__chunk.chunk_md5").as("chunk_md5"),
-          col("__chunk.n_bytes").as("n_bytes")))
+    df.select(col(idCol),
+        explode_outer(Native.cdcMd5(col(binCol), divisor, window)).as("__chunk"))
+      .filter(col("__chunk").isNotNull)
+      .select(col(idCol),
+        col("__chunk.chunk_md5").as("chunk_md5"),
+        col("__chunk.n_bytes").as("n_bytes"))
   }
 
   /** The pre-r18 column formulation of [[binaryCdcChunks]] — kept as
@@ -341,14 +332,12 @@ object Multimodal {
       divisor: Int = 4096,
       window: Int = 8)(df: DataFrame): DataFrame = {
     require(divisor >= 2 && window >= 1, s"bad divisor=$divisor / window=$window")
-    withNative(df)(d =>
-      d.select(col(idCol),
-          explode_outer(call_function("graft_cdc_gear",
-            col(binCol), lit(divisor), lit(window))).as("__chunk"))
-        .filter(col("__chunk").isNotNull)
-        .select(col(idCol),
-          col("__chunk.chunk_md5").as("chunk_md5"),
-          col("__chunk.n_bytes").as("n_bytes")))
+    df.select(col(idCol),
+        explode_outer(Native.cdcGear(col(binCol), divisor, window)).as("__chunk"))
+      .filter(col("__chunk").isNotNull)
+      .select(col(idCol),
+        col("__chunk.chunk_md5").as("chunk_md5"),
+        col("__chunk.n_bytes").as("n_bytes"))
   }
 
   /** The chunk-boundary detector as a VALUE, so every consumer of
@@ -882,7 +871,7 @@ object Multimodal {
     * batched feature-extract pass of the pipeline.
     */
   def withByteStats(binCol: String, outCol: String = "byte_stats")(df: DataFrame): DataFrame =
-    withNative(df)(_.withColumn(outCol, call_function("graft_byte_stats", col(binCol))))
+    df.withColumn(outCol, Native.byteStats(col(binCol)))
 
   /** Normalized `bins`-bin byte histogram (`graft_byte_hist`) — a
     * per-row array<double> feature vector with exact cross-engine
@@ -890,7 +879,7 @@ object Multimodal {
     * would plug in for [[Similarity]] ops downstream.
     */
   def withByteHist(binCol: String, bins: Int = 16, outCol: String = "byte_hist")(df: DataFrame): DataFrame =
-    withNative(df)(_.withColumn(outCol, call_function("graft_byte_hist", col(binCol), lit(bins))))
+    df.withColumn(outCol, Native.byteHist(col(binCol), bins))
 
   /** Deterministic image-byte FIXTURE for the correctness gate: real
     * PNG / JPEG byte streams (valid signature, IHDR / segment

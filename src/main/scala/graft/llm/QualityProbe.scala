@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Native
+
 /** Model-based quality filtering — the linear-probe form of the
   * classifier filters modern curation pipelines train over weak
   * labels (fastText in CCNet/DCLM, linear heads in FineWeb-Edu; all
@@ -46,23 +48,11 @@ object QualityProbe {
     // corpus (train aggregate + every scored row, twice in the gated
     // pipelines), and the lambda form also dropped the projection out
     // of whole-stage codegen. Bit-identical (LlmSpec parity pin + the
-    // probe consumers' oracles). Registration rides the thread's
-    // active session, the [[graft.llm.Dedup.shinglesOf]] discipline.
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(s) =>
-        graft.functions.ArrayFns.register(s)
-        call_function("graft_marker_count",
-          coalesce(col(textCol), lit("")), array(lit(marker)))
-      case None =>
-        System.err.println("[graft] markerCount: no active SparkSession on " +
-          "this thread — falling back to the interpreted HOF form (slower, " +
-          "same output); build plans on a thread with an active session")
-        markerCountHof(textCol, marker)
-    }
+    // probe consumers' oracles).
+    Native.markerCount(coalesce(col(textCol), lit("")), Seq(marker))
 
   /** The pre-r19 column formulation of [[markerCount]] — the
-    * executable PARITY REFERENCE for the native expression, and the
-    * no-active-session fallback.
+    * executable PARITY REFERENCE for the native expression.
     */
   private[graft] def markerCountHof(textCol: String, marker: String): Column =
     size(filter(split(coalesce(col(textCol), lit("")), " "),

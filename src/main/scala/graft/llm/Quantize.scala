@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Native
+
 /** Int8 embedding quantization with a reconstruction-error audit.
   *
   * At 100 TB an embedding store is dominated by the float32 vectors
@@ -83,11 +85,8 @@ object Quantize {
     // Interpreted per element, the composed pair was the per-row
     // cost of every quantized-store scan (r19 §4; parity-pinned in
     // LlmSpec, the quant consumers' oracles hash-gate the codes).
-    graft.functions.ArrayFns.scoped(df.sparkSession) {
-      df.select(col(idCol),
-          call_function("graft_int8_quant", asDouble(col(vecCol))).as("__qz"))
-        .select(col(idCol), col("__qz.scale").as("scale"), col("__qz.codes").as("codes"))
-    }
+    df.select(col(idCol), Native.int8Quant(asDouble(col(vecCol))).as("__qz"))
+      .select(col(idCol), col("__qz.scale").as("scale"), col("__qz.codes").as("codes"))
 
   /** The pre-r19 composed formulation of the integer-code dot — the
     * executable PARITY REFERENCE for [[graft.functions.IntDot]]
@@ -120,8 +119,7 @@ object Quantize {
       idCol: String,
       vecCol: String,
       k: Int,
-      maxBroadcastBytes: Long = 256L << 20): DataFrame =
-      graft.functions.ArrayFns.scoped(corpus.sparkSession) {
+      maxBroadcastBytes: Long = 256L << 20): DataFrame = {
     import org.apache.spark.sql.expressions.Window
 
     val qCorpus = int8Store(idCol, vecCol)(corpus)
@@ -144,7 +142,7 @@ object Quantize {
 
     val exact = topk(
       fCorpus.crossJoin(Similarity.maybeBroadcast(fProbes, maxBroadcastBytes))
-        .withColumn("__sim", graft.functions.ArrayFns.cosineNative(col("__cv"), col("__pv"))),
+        .withColumn("__sim", Native.cosine(col("__cv"), col("__pv"))),
       "__sim")
     // ONE codegen'd loop ([[graft.functions.IntDot]]) per dot in
     // place of the composed form below ([[idotHof]], the parity
@@ -153,10 +151,8 @@ object Quantize {
     // expression site of the quant family — and the composed
     // zip_with+aggregate pair ran interpreted per element there
     // (r19 §4; LlmSpec parity pin, the quant consumers' oracles
-    // hash-gate the rankings). Registration: this whole builder runs
-    // inside ArrayFns.scoped.
-    def idot(a: Column, b: Column): Column =
-      graft.functions.ArrayFns.dotIntNative(a, b)
+    // hash-gate the rankings).
+    def idot(a: Column, b: Column): Column = Native.dotInt(a, b)
     // zero-norm guard: an all-zero code vector would divide by 0.0 —
     // an ANSI DIVIDE_BY_ZERO task failure, not the IEEE NaN the
     // native exact-side expression produces. Emit null instead

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Native
+
 /** Similarity search over an embedding column (array<float>).
   *
   * Two paths, as a production pipeline needs both:
@@ -27,17 +29,11 @@ object Similarity {
 
   def l2norm(a: Column): Column = sqrt(dot(a, a))
 
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (l2norm(a) * l2norm(b))
-
-  /** The hot-path cosine: graft's fused native expression (one
-    * codegen'd loop, no intermediate arrays) — bit-identical results
-    * to [[cosine]]. Falls back transparently because register() is
-    * idempotent per session.
+  /** Composed cosine. The operators below rank with the fused native
+    * `Native.cosine` (one codegen'd loop, no intermediate arrays),
+    * bit-identical to this form.
     */
-  private def cosineFast(df: DataFrame)(a: Column, b: Column): Column = {
-    graft.functions.ArrayFns.register(df.sparkSession)
-    graft.functions.ArrayFns.cosineNative(a, b)
-  }
+  def cosine(a: Column, b: Column): Column = dot(a, b) / (l2norm(a) * l2norm(b))
 
   private def asDouble(c: Column): Column = c.cast("array<double>")
 
@@ -54,7 +50,7 @@ object Similarity {
     val probe = df.where(col(idCol) === probeId)
       .select(asDouble(col(vecCol)).as("__probe"))
     df.crossJoin(broadcast(probe))
-      .withColumn("sim", cosineFast(df)(asDouble(col(vecCol)), col("__probe")))
+      .withColumn("sim", Native.cosine(asDouble(col(vecCol)), col("__probe")))
       .select(col(idCol), col("sim"))
       .orderBy(col("sim").desc, col(idCol).asc)
       .limit(k)
@@ -89,7 +85,7 @@ object Similarity {
     val scored = corpus
       .select(col(idCol).as("neighbor_id"), asDouble(col(vecCol)).as("__cv"))
       .crossJoin(maybeBroadcast(p, maxBroadcastBytes))
-      .withColumn("sim", cosineFast(corpus)(col("__cv"), col("__pv")))
+      .withColumn("sim", Native.cosine(col("__cv"), col("__pv")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("probe_id")).orderBy(col("sim").desc, col("neighbor_id").asc)
     scored.withColumn("__rn", row_number().over(w))
@@ -132,7 +128,7 @@ object Similarity {
       .select(col(idCol).as("pair_id"), asDouble(col(vecCol)).as("__cv"))
       .crossJoin(maybeBroadcast(a, maxBroadcastBytes))
       .where(col("pair_id") =!= col("anchor_id"))
-      .withColumn("sim", cosineFast(corpus)(col("__cv"), col("__av")))
+      .withColumn("sim", Native.cosine(col("__cv"), col("__av")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("anchor_id")).orderBy(col("sim").desc, col("pair_id").asc)
     scored.withColumn("__rn", row_number().over(w))
@@ -161,22 +157,10 @@ object Similarity {
     // bit-identical to the composed form (identical ascending-index
     // double accumulation, ArrayFnsSpec pin) and codegen'd; the
     // composed zip_with+aggregate pair evaluated interpreted per
-    // element here (r19 §4). No-active-session callers keep the
-    // composed form — same output, the shinglesOf discipline.
-    val planeDot: (Column, Column) => Column =
-      org.apache.spark.sql.SparkSession.getActiveSession match {
-        case Some(s) =>
-          graft.functions.ArrayFns.register(s)
-          graft.functions.ArrayFns.dotNative
-        case None =>
-          System.err.println("[graft] lshBucket: no active SparkSession on " +
-            "this thread — falling back to the composed dot form (slower, " +
-            "same output); build plans on a thread with an active session")
-          dot
-      }
+    // element here (r19 §4).
     val bits: Seq[Column] = planes.zipWithIndex.map { case (plane, p) =>
       val planeCol = array(plane.map(lit): _*)
-      when(planeDot(vec, planeCol) > 0, shiftleft(lit(1L), p)).otherwise(lit(0L))
+      when(Native.dot(vec, planeCol) > 0, shiftleft(lit(1L), p)).otherwise(lit(0L))
     }
     // loud guard: a vector shorter/longer than the planes nulls every
     // hyperplane dot (zip_with pads with null), every when() falls to
@@ -234,7 +218,7 @@ object Similarity {
       // a pair can meet in several probed buckets — dedupe candidates
       // before ranking
       .dropDuplicates("probe_id", "neighbor_id")
-      .withColumn("sim", cosineFast(corpus)(col("__cv"), col("__pv")))
+      .withColumn("sim", Native.cosine(col("__cv"), col("__pv")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("probe_id")).orderBy(col("sim").desc, col("neighbor_id").asc)
     scored.withColumn("__rn", row_number().over(w))
@@ -266,7 +250,7 @@ object Similarity {
     val r = b.toDF("id_b", "vb", "__bucket")
     l.join(r, Seq("__bucket"))
       .where(col("id_a") < col("id_b"))
-      .withColumn("sim", cosineFast(df)(col("va"), col("vb")))
+      .withColumn("sim", Native.cosine(col("va"), col("vb")))
       .where(col("sim") >= threshold)
       .select("id_a", "id_b", "sim").distinct()
   }
@@ -341,7 +325,7 @@ object Similarity {
       }
     val drops = l.join(r, joinKeys)
       .where(col("__id_a") < col("__id_b"))
-      .where(cosineFast(df)(col("__va"), col("__vb")) >= threshold)
+      .where(Native.cosine(col("__va"), col("__vb")) >= threshold)
       .select(col("__id_b").as(idCol)).distinct()
     assigned.select(col(idCol), col("centroid_id"))
       .join(drops, Seq(idCol), "left_anti")

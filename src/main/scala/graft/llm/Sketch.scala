@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Native
+
 /** Approx/sketch audit family for corpus-scale statistics.
   *
   * At 100 TB the standard corpus-audit questions — "how many distinct
@@ -125,26 +127,22 @@ object Sketch {
       topN: Int = 20,
       eps: Double = 0.001,
       confidence: Double = 0.9999,
-      seed: Int = 42)(df: DataFrame): DataFrame =
-    // scoped, not bare register: analysis is eager inside the block,
-    // so graft_cms_estimate resolves here and the CALLER's session
-    // keeps no graft registrations (the ArrayFns.scoped discipline)
-    graft.functions.ArrayFns.scoped(df.sparkSession) {
-      val v = col(valueCol)
-      val nonNull = df.where(v.isNotNull)
-      val exactTop = nonNull.groupBy(v.as("value")).agg(count(lit(1)).as("exact_n"))
-        .orderBy(col("exact_n").desc, col("value").asc).limit(topN)
-      val sketch = nonNull.agg(
-        expr(s"count_min_sketch(`$valueCol`, CAST($eps AS DOUBLE), CAST($confidence AS DOUBLE), $seed)")
-          .as("__cms"),
-        count(v).as("__total"))
-      exactTop.crossJoin(broadcast(sketch))
-        .withColumn("__est", call_function("graft_cms_estimate", col("__cms"), col("value")))
-        .withColumn("cms_ok",
-          col("__est") >= col("exact_n") &&
-            col("__est") <= col("exact_n") + ceil(lit(eps) * col("__total")).cast("long"))
-        .select("value", "exact_n", "cms_ok")
-    }
+      seed: Int = 42)(df: DataFrame): DataFrame = {
+    val v = col(valueCol)
+    val nonNull = df.where(v.isNotNull)
+    val exactTop = nonNull.groupBy(v.as("value")).agg(count(lit(1)).as("exact_n"))
+      .orderBy(col("exact_n").desc, col("value").asc).limit(topN)
+    val sketch = nonNull.agg(
+      expr(s"count_min_sketch(`$valueCol`, CAST($eps AS DOUBLE), CAST($confidence AS DOUBLE), $seed)")
+        .as("__cms"),
+      count(v).as("__total"))
+    exactTop.crossJoin(broadcast(sketch))
+      .withColumn("__est", Native.cmsEstimate(col("__cms"), col("value")))
+      .withColumn("cms_ok",
+        col("__est") >= col("exact_n") &&
+          col("__est") <= col("exact_n") + ceil(lit(eps) * col("__total")).cast("long"))
+      .select("value", "exact_n", "cms_ok")
+  }
 
   /** Gate twin for GK percentiles: per group emits the exact p50
     * (integer-valued columns only — (a+b)/2 interpolation is

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Native
+
 /** Text-analysis operators for large-scale training-data pipelines:
   * token stats, quality scoring, language-ID heuristic, and document
   * fingerprinting. All pure Catalyst expressions (no UDFs) — each op
@@ -53,18 +55,16 @@ object TextAnalysis {
     * `changed` (true when cleanup altered the text — the corpus-health
     * metric a pipeline tracks release over release).
     */
-  def normalizeText(textCol: String)(df: DataFrame): DataFrame =
-    graft.functions.ArrayFns.scoped(df.sparkSession) {
-      val nfc = call_function("graft_nfc", col(textCol))
-      val cleaned = trim(regexp_replace(
-        regexp_replace(
-          regexp_replace(nfc, "[\\t\\r\\n]+", " "),
-          "[\\p{Cc}\\p{Cf}]", ""),
-        " +", " "))
-      df.withColumn("clean_text", cleaned)
-        .withColumn("n_chars_clean", length(col("clean_text")))
-        .withColumn("changed", col("clean_text") =!= col(textCol))
-    }
+  def normalizeText(textCol: String)(df: DataFrame): DataFrame = {
+    val cleaned = trim(regexp_replace(
+      regexp_replace(
+        regexp_replace(Native.nfc(col(textCol)), "[\\t\\r\\n]+", " "),
+        "[\\p{Cc}\\p{Cf}]", ""),
+      " +", " "))
+    df.withColumn("clean_text", cleaned)
+      .withColumn("n_chars_clean", length(col("clean_text")))
+      .withColumn("changed", col("clean_text") =!= col(textCol))
+  }
 
   /** True token counts under a trained BPE tokenizer — the number
     * token budgets, packing manifests, and mixture weights actually
@@ -81,37 +81,30 @@ object TextAnalysis {
     */
   def withBpeTokenCount(textCol: String, merges: Seq[(String, String)])(
       df: DataFrame): DataFrame =
-    graft.functions.ArrayFns.scoped(df.sparkSession) {
-      // ONE whole-document native pass ([[graft.functions
-      // .BpeTokenCount]]) in place of the per-word transform lambda +
-      // aggregate fold below (kept as [[withBpeTokenCountHof]], the
-      // parity reference): the per-word encode was already native,
-      // but every word still paid an interpreted HOF frame and the
-      // row an interpreted fold. Bit-identical (shared encode loop +
-      // LlmSpec parity pin + the fertility oracles).
-      val mergesLit = typedlit(merges.map { case (a, b) => Seq(a, b) })
-      df.withColumn("n_tokens_ws", size(tokens(col(textCol))))
-        .withColumn("n_tokens_bpe",
-          call_function("graft_bpe_count", col(textCol), mergesLit))
-        .withColumn("fertility",
-          col("n_tokens_bpe").cast("double") / col("n_tokens_ws"))
-    }
+    // ONE whole-document native pass ([[graft.functions
+    // .BpeTokenCount]]) in place of the per-word transform lambda +
+    // aggregate fold below (kept as [[withBpeTokenCountHof]], the
+    // parity reference): the per-word encode was already native,
+    // but every word still paid an interpreted HOF frame and the
+    // row an interpreted fold. Bit-identical (shared encode loop +
+    // LlmSpec parity pin + the fertility oracles).
+    df.withColumn("n_tokens_ws", size(tokens(col(textCol))))
+      .withColumn("n_tokens_bpe", Native.bpeCount(col(textCol), merges))
+      .withColumn("fertility",
+        col("n_tokens_bpe").cast("double") / col("n_tokens_ws"))
 
   /** The pre-r19 per-word lambda formulation of [[withBpeTokenCount]]
     * — the executable PARITY REFERENCE for the native count.
     */
   private[graft] def withBpeTokenCountHof(textCol: String, merges: Seq[(String, String)])(
-      df: DataFrame): DataFrame =
-    graft.functions.ArrayFns.scoped(df.sparkSession) {
-      val mergesLit = typedlit(merges.map { case (a, b) => Seq(a, b) })
-      val perWord = transform(tokens(col(textCol)),
-        w => size(call_function("graft_bpe_encode", w, mergesLit)))
-      df.withColumn("n_tokens_ws", size(tokens(col(textCol))))
-        .withColumn("n_tokens_bpe",
-          aggregate(perWord, lit(0), (acc, x) => acc + x))
-        .withColumn("fertility",
-          col("n_tokens_bpe").cast("double") / col("n_tokens_ws"))
-    }
+      df: DataFrame): DataFrame = {
+    val perWord = transform(tokens(col(textCol)), w => size(Native.bpeEncode(w, merges)))
+    df.withColumn("n_tokens_ws", size(tokens(col(textCol))))
+      .withColumn("n_tokens_bpe",
+        aggregate(perWord, lit(0), (acc, x) => acc + x))
+      .withColumn("fertility",
+        col("n_tokens_bpe").cast("double") / col("n_tokens_ws"))
+  }
 
   /** token_count + char_count + distinct-token count. */
   def withTokenStats(textCol: String)(df: DataFrame): DataFrame = {
@@ -136,13 +129,10 @@ object TextAnalysis {
     // filter lambda per token plus a full-text regexp_replace per
     // row. Bit-identical output — LlmSpec parity pin + the gated
     // consumers' oracles.
-    graft.functions.ArrayFns.scoped(df.sparkSession) {
-      val out = df.withColumn("__q",
-        call_function("graft_quality", col(textCol), typedLit(stopwords)))
-      Seq("n_tokens", "ttr", "mean_token_len", "stopword_ratio", "punct_ratio")
-        .foldLeft(out)((d, c) => d.withColumn(c, col(s"__q.$c")))
-        .drop("__q")
-    }
+    val out = df.withColumn("__q", Native.quality(col(textCol), stopwords))
+    Seq("n_tokens", "ttr", "mean_token_len", "stopword_ratio", "punct_ratio")
+      .foldLeft(out)((d, c) => d.withColumn(c, col(s"__q.$c")))
+      .drop("__q")
   }
 
   /** The pre-r18 column formulation of [[withQualityScores]] — the
@@ -184,21 +174,18 @@ object TextAnalysis {
     // text_langid / pipeline_preprocess oracles hash-gate it). A NULL
     // text scores NULL per profile and labels NULL — exactly the
     // size(filter(NULL)) propagation of the reference.
-    graft.functions.ArrayFns.scoped(df.sparkSession) {
-      val scores: Seq[(String, Column)] = profiles.map { case (lang, markers) =>
-        lang -> call_function("graft_marker_count", col(textCol),
-          array(markers.map(lit): _*)).cast("int")
-      }
-      val withScores = scores.foldLeft(df) {
-        case (d, (lang, s)) => d.withColumn(s"score_$lang", s)
-      }
-      val maxScore = greatest(scores.map { case (l, _) => col(s"score_$l") }: _*)
-      // first profile reaching the max wins — deterministic tie-break
-      val label = scores.foldRight(lit(null).cast("string")) { case ((lang, _), acc) =>
-        when(col(s"score_$lang") === maxScore, lit(lang)).otherwise(acc)
-      }
-      withScores.withColumn(outCol, label)
+    val scores: Seq[(String, Column)] = profiles.map { case (lang, markers) =>
+      lang -> Native.markerCount(col(textCol), markers).cast("int")
     }
+    val withScores = scores.foldLeft(df) {
+      case (d, (lang, s)) => d.withColumn(s"score_$lang", s)
+    }
+    val maxScore = greatest(scores.map { case (l, _) => col(s"score_$l") }: _*)
+    // first profile reaching the max wins — deterministic tie-break
+    val label = scores.foldRight(lit(null).cast("string")) { case ((lang, _), acc) =>
+      when(col(s"score_$lang") === maxScore, lit(lang)).otherwise(acc)
+    }
+    withScores.withColumn(outCol, label)
   }
 
   /** The pre-r19 lambda formulation of [[withLangId]] — the
@@ -434,7 +421,6 @@ object TextAnalysis {
       nMerges: Int,
       minFreq: Long = 2L)(df: DataFrame): Seq[BpeMerge] = {
     require(nMerges >= 1 && minFreq >= 1, s"bad nMerges=$nMerges / minFreq=$minFreq")
-    val spark = df.sparkSession
     val wordCounts = df
       .select(explode(tokens(col(textCol))).as("__w"))
       .where(length(col("__w")) >= 2) // <2 symbols can never carry a pair
@@ -445,24 +431,19 @@ object TextAnalysis {
     while (!done && out.length < nMerges) {
       val parts =
         if (out.isEmpty) split(col("__w"), "")
-        else {
-          val mergesLit = typedlit(out.map(m => Seq(m.lhs, m.rhs)).toSeq)
-          call_function("graft_bpe_encode", col("__w"), mergesLit)
-        }
-      val top = graft.functions.ArrayFns.scoped(spark) {
-        wordCounts.select(col("__n"), parts.as("__p"))
-          .select(col("__n"),
-            explode(when(size(col("__p")) >= 2,
-              transform(sequence(lit(1), size(col("__p")) - 1),
-                i => struct(element_at(col("__p"), i).as("l"),
-                  element_at(col("__p"), i + 1).as("r"))))
-              .otherwise(array().cast("array<struct<l:string,r:string>>"))).as("__pair"))
-          .groupBy(col("__pair.l").as("lhs"), col("__pair.r").as("rhs"))
-          .agg(sum(col("__n")).as("freq"))
-          .orderBy(col("freq").desc, col("lhs").asc, col("rhs").asc)
-          .limit(1)
-          .collect()
-      }
+        else Native.bpeEncode(col("__w"), out.map(m => (m.lhs, m.rhs)).toSeq)
+      val top = wordCounts.select(col("__n"), parts.as("__p"))
+        .select(col("__n"),
+          explode(when(size(col("__p")) >= 2,
+            transform(sequence(lit(1), size(col("__p")) - 1),
+              i => struct(element_at(col("__p"), i).as("l"),
+                element_at(col("__p"), i + 1).as("r"))))
+            .otherwise(array().cast("array<struct<l:string,r:string>>"))).as("__pair"))
+        .groupBy(col("__pair.l").as("lhs"), col("__pair.r").as("rhs"))
+        .agg(sum(col("__n")).as("freq"))
+        .orderBy(col("freq").desc, col("lhs").asc, col("rhs").asc)
+        .limit(1)
+        .collect()
       if (top.isEmpty || top(0).getAs[Long]("freq") < minFreq) done = true
       else out += BpeMerge(out.length, top(0).getString(0), top(0).getString(1),
         top(0).getAs[Long]("freq"))
@@ -708,13 +689,10 @@ object TextAnalysis {
     // isin) plus two full-text regexp_replace calls per row. Output
     // is bit-identical: LlmSpec pins native == HOF on the edge
     // fixtures, and every gated consumer hash-gates it.
-    graft.functions.ArrayFns.scoped(df.sparkSession) {
-      val out = df.withColumn("__g",
-        call_function("graft_gopher", col(textCol), typedLit(stopwords)))
-      (gopherSignalCols :+ "passes_gopher")
-        .foldLeft(out)((d, c) => d.withColumn(c, col(s"__g.$c")))
-        .drop("__g")
-    }
+    val out = df.withColumn("__g", Native.gopher(col(textCol), stopwords))
+    (gopherSignalCols :+ "passes_gopher")
+      .foldLeft(out)((d, c) => d.withColumn(c, col(s"__g.$c")))
+      .drop("__g")
   }
 
   /** The pre-r18 column formulation of [[withGopherSignals]] — the
@@ -810,20 +788,16 @@ object TextAnalysis {
     // out of whole-stage codegen. Bit-identical: LlmSpec pins
     // native == HOF on the edge fixtures, and the consumers'
     // oracles hash-gate it.
-    graft.functions.ArrayFns.scoped(df.sparkSession) {
-      df.select(col(idCol),
-          call_function("graft_blocklist", col(textCol), typedLit(terms))
-            .as("__b"))
-        .select(
-          col(idCol),
-          col("__b.n_hits").as("n_blocklist_hits"),
-          col("__b.n_terms").as("n_blocklist_terms"),
-          col("__b.n_words").as("__nw"))
-        .withColumn("frac_blocklist",
-          col("n_blocklist_hits").cast("double") / col("__nw").cast("double"))
-        .withColumn("flagged", col("n_blocklist_hits") > 0)
-        .drop("__nw")
-    }
+    df.select(col(idCol), Native.blocklist(col(textCol), terms).as("__b"))
+      .select(
+        col(idCol),
+        col("__b.n_hits").as("n_blocklist_hits"),
+        col("__b.n_terms").as("n_blocklist_terms"),
+        col("__b.n_words").as("__nw"))
+      .withColumn("frac_blocklist",
+        col("n_blocklist_hits").cast("double") / col("__nw").cast("double"))
+      .withColumn("flagged", col("n_blocklist_hits") > 0)
+      .drop("__nw")
   }
 
   /** The pre-r19 column formulation of [[blocklistScan]] — the

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.ArrayFns
+import graft.functions.Native
 
 /** Bloom-pruned equi-join: prune the PROBE side's rows before its
   * shuffle using a Bloom filter built from the build side's keys.
@@ -39,8 +39,7 @@ object BloomJoin {
       key: String,
       expectedItems: Long,
       fpp: Double = 0.01): Array[Byte] = {
-    ArrayFns.register(df.sparkSession)
-    df.agg(call_function("graft_bloom", col(key), lit(expectedItems), lit(fpp)).as("bf"))
+    df.agg(Native.bloom(col(key), expectedItems, fpp).as("bf"))
       .head().getAs[Array[Byte]]("bf")
   }
 
@@ -66,7 +65,7 @@ object BloomJoin {
       s"bloomPrunedJoin preserves semantics only for inner/left_semi joins, got $joinType")
     val items = expectedItems.getOrElse(build.select(col(key)).na.drop().count())
     val bytes = buildKeyBloom(build, key, items, fpp)
-    val pruned = probe.where(call_function("graft_bloom_contains", col(key), lit(bytes)))
+    val pruned = probe.where(Native.bloomContains(col(key), bytes))
     pruned.join(build, Seq(key), joinType)
   }
 }

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Native
+
 /** Entity resolution over record tables: blocking + pairwise
   * edit-distance matching, the classic dirty-master-data operator
   * (find the customer rows that are the same real-world customer
@@ -208,10 +210,8 @@ object EntityRes {
     // conv(16,10) string round-trip) per band PER SHINGLE, the
     // measured dominant term of er_pairs_minhash_sub. Output is
     // bit-identical — ErSpec pins native == HOF, and the query's
-    // DuckDB oracle hash-gates it. Consumers (the bands-Column entry
-    // points below) register the graft functions on their input's
-    // session before the column is analyzed.
-    call_function("graft_minhash_bands", c, lit(shingleK), lit(numBands))
+    // DuckDB oracle hash-gates it.
+    Native.minhashBands(c, shingleK, numBands)
   }
 
   /** The pre-r18 column formulation of [[minhashBands]] — kept as the
@@ -335,9 +335,6 @@ object EntityRes {
       bands: Column)(df: DataFrame): DataFrame = {
     require(blockCols.nonEmpty, "candidatePairsBanded needs at least one blocking column")
     require(maxDist >= 0 && maxBlock >= 2, s"bad maxDist=$maxDist / maxBlock=$maxBlock")
-    // the bands Column may carry a graft-native call ([[minhashBands]]);
-    // idempotent persistent registration, the Similarity/Ivf precedent
-    graft.functions.ArrayFns.register(df.sparkSession)
     Seq("__band", "__bkey").foreach(c => require(!df.columns.contains(c),
       s"candidatePairsBanded uses internal column $c — rename it first"))
     val sizes = blockSizes(blockCols)(df)
@@ -394,7 +391,6 @@ object EntityRes {
       bands: Column,
       samplePct: Int = 100)(df: DataFrame): DataFrame = {
     require(blockCols.nonEmpty, "bandedSubBlockRecall needs at least one blocking column")
-    graft.functions.ArrayFns.register(df.sparkSession)
     val sizes = hotBlockSample(blockCols, samplePct)(blockSizes(blockCols)(df))
     // inner join (not semi) so block_n rides along with every hot row
     // hot-frame barrier (r19, guide §3.3/§5): this frame — corpus scan
@@ -692,7 +688,6 @@ object EntityRes {
       bands: Column,
       adaptive: Boolean = false)(batch: DataFrame, master: DataFrame): DataFrame = {
     require(blockCols.nonEmpty, "incrementalPairsBanded needs at least one blocking column")
-    graft.functions.ArrayFns.register(batch.sparkSession)
     require(maxDist >= 0 && maxBlock >= 1, s"bad maxDist=$maxDist / maxBlock=$maxBlock")
     Seq("__band", "__bkey").foreach(c =>
       require(!batch.columns.contains(c) && !master.columns.contains(c),
@@ -781,7 +776,6 @@ object EntityRes {
       bands: Column,
       samplePct: Int = 100)(batch: DataFrame, master: DataFrame): DataFrame = {
     require(blockCols.nonEmpty, "incrementalBandedRecall needs at least one blocking column")
-    graft.functions.ArrayFns.register(batch.sparkSession)
     val hotKeys = hotBlockSample(blockCols, samplePct)(
       incrementalHotBlocks(blockCols, maxBlock)(batch, master))
     // NOTE (r19): a hotKeys localCheckpoint was tried here — the frame

@@ -62,9 +62,9 @@ object DotProductRewrite extends Rule[LogicalPlan] {
   * {{{ spark.sql.extensions=graft.plans.GraftExtensions }}}
   *
   * injects the graft_dot / graft_cosine SQL functions and the
-  * dot-product rewrite rule into every session — the
-  * SparkSessionExtensions integration path for clusters where
-  * code can't call ArrayFns.register explicitly.
+  * dot-product rewrite rule into every session — the integration path
+  * for SQL callers; Scala and DataFrame code build the same
+  * expressions with `graft.functions.Native`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

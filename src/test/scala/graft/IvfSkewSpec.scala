@@ -136,7 +136,7 @@ class IvfSkewSpec extends SparkSpec {
 
     val bytes = BloomJoin.buildKeyBloom(build, "k", expectedItems = 100L)
     val probed = probe.select(col("k"),
-      call_function("graft_bloom_contains", col("k"), lit(bytes)).as("hit"))
+      graft.functions.Native.bloomContains(col("k"), bytes).as("hit"))
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     // no false negatives, ever
     assert((1L to 100L).forall(i => probed(i * 3)))

@@ -1474,7 +1474,6 @@ class LlmSpec extends SparkSpec {
       "table query row row", "spark vector stream spark",
       "thethe the-x x", "夏目 the 漱石", "", "  ", null
     ).zipWithIndex.map(_.swap).toDF("id", "text")
-    graft.functions.ArrayFns.register(spark)
     // markerCount: single-marker native scan vs the filter lambda
     val mc = df.select(col("id"),
       QualityProbe.markerCount("text", "the").as("n"),
@@ -1483,7 +1482,7 @@ class LlmSpec extends SparkSpec {
     mc.foreach { case (id, n, h) => assert(n == h, s"id=$id: native $n != HOF $h") }
     // and a marker that can hit the empty tokens of a space run
     val mcEmpty = df.where(col("text").isNotNull).select(col("id"),
-      call_function("graft_marker_count", col("text"), array(lit(""))).as("n"),
+      graft.functions.Native.markerCount(col("text"), Seq("")).as("n"),
       size(filter(split(col("text"), " "), t => t === "")).cast("long").as("h"))
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
     mcEmpty.foreach { case (id, n, h) => assert(n == h, s"id=$id (empty marker): $n != $h") }
@@ -2118,7 +2117,6 @@ class LlmSpec extends SparkSpec {
   }
 
   test("mp4 probe rejects corrupt and foreign bytes loudly (null, not wrong)") {
-    graft.functions.ArrayFns.register(spark)
     val cases = Seq(
       ("truncated_ftyp", "0000001466747970"),              // size says 20, only 8 present
       ("size_lt_8", "00000004667479706973"),               // box size 4 < header
@@ -2131,19 +2129,18 @@ class LlmSpec extends SparkSpec {
         "000000106674797069736F6D00000200" + "000000106D6F6F76" + "000000086D766864")
     ).toDF("name", "hx")
     val out = cases.select(col("name"),
-        call_function("graft_video_meta", unhex(col("hx"))).as("m"))
+        graft.functions.Native.videoMeta(unhex(col("hx"))).as("m"))
       .collect().map(r => r.getString(0) -> r.isNullAt(1)).toMap
     assert(out.values.forall(identity), s"expected all null, got $out")
   }
 
   test("image probe nulls degenerate zero dimensions in every format, like the PNG branch") {
-    graft.functions.ArrayFns.register(spark)
     val cases = Seq(
       ("gif_zero_width", "474946383961" + "0000" + "0100"), // GIF89a, w=0 h=1
       ("jpeg_zero_height", "FFD8" + "FFC0" + "000B" + "08" + "0000" + "0010") // SOF h=0 (DNL case)
     ).toDF("name", "hx")
     val out = cases.select(col("name"),
-        call_function("graft_image_meta", unhex(col("hx"))).as("m"))
+        graft.functions.Native.imageMeta(unhex(col("hx"))).as("m"))
       .collect().map(r => r.getString(0) -> r.isNullAt(1)).toMap
     assert(out.values.forall(identity), s"expected all null, got $out")
   }
@@ -2585,13 +2582,12 @@ class LlmSpec extends SparkSpec {
   }
 
   test("CMS probe never underestimates and is partitioning-invariant") {
-    graft.functions.ArrayFns.register(spark)
     val df = spark.range(2000).selectExpr("CAST(id % 100 AS STRING) AS w")
     def estimates(parts: Int): Map[String, Long] = {
       val sk = df.repartition(parts)
         .agg(expr("count_min_sketch(w, CAST(0.01 AS DOUBLE), CAST(0.999 AS DOUBLE), 42)").as("cms"))
       df.distinct().crossJoin(broadcast(sk))
-        .select(col("w"), call_function("graft_cms_estimate", col("cms"), col("w")).as("est"))
+        .select(col("w"), graft.functions.Native.cmsEstimate(col("cms"), col("w")).as("est"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     }
     val e1 = estimates(1)

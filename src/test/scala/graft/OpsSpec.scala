@@ -1312,7 +1312,6 @@ class OpsSpec extends SparkSpec {
 
   test("minhashBands: native expression == higher-order-function reference, bit-exact") {
     import graft.ops.EntityRes
-    graft.functions.ArrayFns.register(spark)
     // names spanning the edges: normal, shorter-than-k, empty, NULL,
     // multi-byte chars (substr counts code points, not bytes)
     val df = Seq("smith john", "zz", "", "müller-lüdenscheidt", "夏目漱石", null)
@@ -1331,7 +1330,6 @@ class OpsSpec extends SparkSpec {
 
   test("minhashBands: deterministic, identity-collides, short-string path") {
     import graft.ops.EntityRes
-    graft.functions.ArrayFns.register(spark)
     val r = spark.range(1).select(
       EntityRes.minhashBands(lit("smith john"), 3, 4).as("a"),
       EntityRes.minhashBands(lit("smith john"), 3, 4).as("b"),

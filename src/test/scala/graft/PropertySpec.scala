@@ -48,13 +48,12 @@ class PropertySpec extends SparkSpec {
   }
 
   test("property: native dot product equals the composed form on random arrays (incl. unequal lengths)") {
-    graft.functions.ArrayFns.register(spark)
     val arr = Gen.chooseNum(0, 12).flatMap(n =>
       Gen.listOfN(n, Gen.chooseNum(-1e6, 1e6).map(x => math.rint(x) / 64.0)))
     checkProp(Prop.forAllNoShrink(Gen.listOfN(8, Gen.zip(arr, arr))) { pairs =>
       val df = pairs.map { case (a, b) => (a.toArray, b.toArray) }.toDF("a", "b")
       val rows = df.select(
-        graft.functions.ArrayFns.dotNative(col("a"), col("b")).as("n"),
+        graft.functions.Native.dot(col("a"), col("b")).as("n"),
         graft.llm.Similarity.dot(col("a"), col("b")).as("c")).collect()
       rows.forall { r =>
         (r.isNullAt(0) && r.isNullAt(1)) ||
