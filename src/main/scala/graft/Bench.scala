@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. A query that throws is reported in `errors`
@@ -75,24 +74,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // test tables are single smallish parquet files; the default
-      // 128m split size would put each scan on ONE core. 4m splits
-      // spread the scan across the local executor threads — the
-      // local analogue of sizing maxPartitionBytes to the cluster.
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      // per-invocation warehouse — see Verify.scala: concurrent runs
-      // must not share managed-table paths; recursively deleted at exit
-      .config("spark.sql.warehouse.dir",
-        SparkEntry.cleanedTempDir("graft_warehouse_bench_"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("bench", benchSplits = true)
     val all = headline.filter(SparkEntry.queries.contains) match {
       case Nil => SparkEntry.queries.keys.toSeq.sorted
       case hs => hs
@@ -106,55 +88,14 @@ object Bench {
         all.filter(keep.contains)
       case None => all
     }
-    // absorb one-time costs (codegen infra, parquet reader init,
-    // broadcast machinery) so per-query timings reflect steady state
-    // rather than charging session warmup to the first query. Guarded:
-    // a missing warmup table must degrade to per-query errors, not
-    // kill the run before any JSON is printed.
-    try {
-      spark.range(1000).selectExpr("sum(id)").collect()
-      Seq("lineitem", "orders", "customer").foreach(t =>
-        spark.read.parquet(s"$sfDir/$t.parquet").limit(1).count())
-      // exercise the expression/operator machinery the headline
-      // queries compile to (regex, hashes, explode+agg, window,
-      // broadcast join, array ops) on synthetic rows, so whole-stage
-      // codegen + JIT warmup isn't charged to whichever real query
-      // happens to run first. Warm runs measure 2-5x below cold ones
-      // (tools/WarmProf); this narrows that gap without ever touching
-      // a query's own input data or caching any of its work.
-      val syn = spark.range(2000).selectExpr(
-        "id", "concat('Doc text, sample #', id, ' word word') AS text",
-        "array(cast(id as double), 1.0, 2.0) AS vec")
-      // aggregate over ALL warmup columns — a max("a")-only agg lets
-      // column pruning delete the other expressions before they run
-      syn.selectExpr(
-        "md5(trim(regexp_replace(lower(text), '[^a-z0-9 ]', ''))) AS a",
-        "xxhash64(text, 42) AS b",
-        "sha2(text, 256) AS c",
-        "aggregate(zip_with(vec, vec, (x, y) -> x * y), 0d, (s, x) -> s + x) AS d")
-        .selectExpr("max(a)", "max(b)", "max(c)", "max(d)").collect()
-      syn.selectExpr("id % 7 AS k", "explode(split(text, ' ')) AS t")
-        .groupBy("k").agg(org.apache.spark.sql.functions.countDistinct("t"))
-        .collect()
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("k").orderBy("id")
-      syn.selectExpr("id", "id % 7 AS k")
-        .withColumn("rn", org.apache.spark.sql.functions.row_number().over(w))
-        .where("rn <= 2")
-        .join(org.apache.spark.sql.functions.broadcast(
-          spark.range(7).selectExpr("id AS k", "id * 2 AS v")), "k")
-        .collect()
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] warmup skipped: ${e.getMessage}")
-    }
+    GraftSession.warmUp(spark, sfDir)
     // median-of-N per query: single-run timings swung 0.25x-4.7x
     // between rounds on UNCHANGED code (whichever query first hits a
     // cold code path eats the JIT/codegen bill), which made real
     // regressions indistinguishable from noise. The median of 3
     // back-to-back runs is stable to ~1.2x; min/max spread is kept in
     // the JSON so a reader can see when a number is still noisy.
-    val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
+    val reps = GraftSession.reps(3)
     var timings = Vector.empty[(String, Seq[Double])]
     var errors = Vector.empty[(String, String)]
     names.foreach { name =>
@@ -205,10 +146,7 @@ object Bench {
           }
       }
     }
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.length % 2 == 1) s(s.length / 2) else (s(s.length / 2 - 1) + s(s.length / 2)) / 2
-    }
+    import GraftSession.median
     def jstr(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
       .replaceAll("[\\x00-\\x1f]", " ") + "\""
     // µs precision (r19): raw Double.toString printed 15-17 chars per

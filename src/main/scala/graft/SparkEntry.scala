@@ -26,7 +26,7 @@ object SparkEntry {
     */
   def entry(spark: SparkSession): DataFrame = {
     val dir = "/root/testdata/sf0.001"
-    val study = ConfigReader.readStudy(spark, "/root/repo/fixtures/study_demo")
+    val study = ConfigReader.readStudy(spark, Fixtures.path("study_demo"))
     StudyRunner.run(study, new ParquetResolver(spark, dir))
   }
 

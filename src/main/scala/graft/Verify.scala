@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,21 +8,7 @@ object Verify {
     val outDir = args(1)
     // optional name filter (debugging): Verify <sfDir> <outDir> [q1 q2 ...]
     val only: Set[String] = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // per-invocation warehouse: the bucketed-join query saves managed
-      // tables here; a shared fixed path lets two concurrent runs
-      // clobber each other's table files under one catalog entry.
-      // cleanedTempDir registers a recursive delete at JVM exit so the
-      // table files don't accumulate in /tmp run over run.
-      .config("spark.sql.warehouse.dir",
-        SparkEntry.cleanedTempDir("graft_warehouse_verify_"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("verify", benchSplits = false)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only.contains(name) }

@@ -85,7 +85,7 @@ object ClinicalDemo {
     * stitched per-subject frame with its 12 contract columns.
     */
   def run(spark: SparkSession, storeDir: String,
-      configDir: String = "/root/repo/fixtures/clinical_study"): DataFrame =
+      configDir: String = graft.Fixtures.path("clinical_study")): DataFrame =
     runStudy(spark, storeDir, ConfigReader.readStudy(spark, configDir))
 
   /** Same study driven by the ORIGINAL reference workbooks — no CSV

@@ -410,7 +410,7 @@ object EntityRes {
     // tried (widen the materialized layout into the ~6 consumers) and
     // REVERTED on measurement: wall was flat-to-worse (bench median
     // 3.0 → 3.9 s isolated, cold rep 8.5 s) while TOTAL task time
-    // inflated ~8× (R19Prof 13 → 99 s) — the audit's consumers are
+    // inflated ~8× (round-19 job profile: 13 → 99 s) — the audit's consumers are
     // broadcast builds over this frame, and 32-way inputs multiply
     // their per-task fixed cost without shortening the critical path.
     // The lexical audit (subBlockRecall) has the opposite profile —

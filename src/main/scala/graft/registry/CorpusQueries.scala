@@ -40,7 +40,7 @@ private[graft] object CorpusQueries {
     "pipeline_curation_config" -> ((s, d) =>
       graft.llm.CurationPipeline.run(doubledDocs(s, d),
         graft.llm.CurationPipeline.readRecipe(s,
-          "/root/repo/fixtures/curation_demo/recipe.csv"))
+          Fixtures.path("curation_demo/recipe.csv")))
         .select("doc_id", "source", "split")),
     // round-12 vocabulary: PII REDACT -> SEMANTIC DECONTAM (bench =
     // vectors of docs < 10, excluded from the corpus) -> NEAR DEDUP
@@ -57,7 +57,7 @@ private[graft] object CorpusQueries {
         .select(col("vec_id").as("doc_id"), col("embedding"))
       graft.llm.CurationPipeline.run(corpus,
         graft.llm.CurationPipeline.readRecipe(s,
-          "/root/repo/fixtures/curation_demo/recipe_v2.csv"),
+          Fixtures.path("curation_demo/recipe_v2.csv")),
         bench = Some(bench))
         .select("doc_id", "source", "ttr")
     }),

@@ -177,7 +177,7 @@ private[graft] object DedupQueries {
     // Banding (numPerm=64, bands=16, r=4) is tuned to the DATA, not
     // the threshold: the corpus's true near-dup pairs sit at jaccard
     // >= 0.9 (sf0.01) / >= 0.8 (sf0.1), nothing in [0.3, 0.8)
-    // (measured — tools/JaccardGap), where the r=4 S-curve gives
+    // (measured with Dedup.allPairsJaccard), where the r=4 S-curve gives
     // per-pair miss probability <= (1-0.8^4)^16 ≈ 2e-4, expected
     // misses ≈ 1.5e-3 across the 7 sf0.1 pairs in [0.8, 0.9) — safe
     // against the exact all-pairs oracle. That assumption is PINNED

@@ -89,14 +89,18 @@ private[graft] object EngineStoreQueries {
     }),
     "s9_parquet_append" -> ((s, d) => {
       // S9 evolving append sink: two writes with different schemas,
-      // read back with mergeSchema.
+      // read back with mergeSchema. The merged schema's column order
+      // follows whichever part file (random name) the listing yields
+      // first, so the read uses the merged fields in write order.
       val path = scratch("append_q")
       org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
         .delete(new org.apache.hadoop.fs.Path(path), true)
-      Export.writeParquetAppend(t(s, d, "region").select("r_regionkey", "r_name"), path)
-      Export.writeParquetAppend(
-        t(s, d, "nation").select(col("n_nationkey"), col("n_name")), path)
-      s.read.option("mergeSchema", "true").parquet(path)
+      val writes = Seq(t(s, d, "region").select("r_regionkey", "r_name"),
+        t(s, d, "nation").select("n_nationkey", "n_name"))
+      writes.foreach(Export.writeParquetAppend(_, path))
+      val merged = s.read.option("mergeSchema", "true").parquet(path).schema
+      s.read.schema(org.apache.spark.sql.types.StructType(
+        writes.flatMap(_.columns).distinct.map(merged(_)))).parquet(path)
     }),
     "s10_csv_sink" -> ((s, d) => {
       val path = scratch("csv_sink_q")
@@ -229,12 +233,12 @@ private[graft] object EngineStoreQueries {
         .select(col("vec_id"), col("centroid_id").cast("int").as("centroid_id"))
     }),
     "engine_pipeline" -> ((s, d) => {
-      val analyte = ConfigReader.readAnalyte(s, "cust_base", "/root/repo/fixtures/study_demo/cust_base")
+      val analyte = ConfigReader.readAnalyte(s, "cust_base", Fixtures.path("study_demo/cust_base"))
       Interpreter.deriveAnalyte(PipelineContext(), analyte, new ParquetResolver(s, d))
         .result("cust_base")
     }),
     "engine_study" -> ((s, d) => {
-      val study = ConfigReader.readStudy(s, "/root/repo/fixtures/study_demo")
+      val study = ConfigReader.readStudy(s, Fixtures.path("study_demo"))
       StudyRunner.run(study, new ParquetResolver(s, d))
     }),
     "engine_clinical_study" -> ((s, d) => {
@@ -262,40 +266,40 @@ private[graft] object EngineStoreQueries {
     // pd.read_sas-validated fixture (tools/make_sas_fixture.py);
     // contents are closed-form so the oracle needs no table
     "s5_sas_source" -> ((s, _) =>
-      graft.io.Ingestion.readFile(s, "/root/repo/fixtures/sas/graft_fixture.sas7bdat")),
+      graft.io.Ingestion.readFile(s, Fixtures.path("sas/graft_fixture.sas7bdat"))),
     // RLE-compressed (COMPRESS=CHAR) variant: rows stored as per-row
     // subheaders on meta pages, decompressed with the public SASYZCRL
     // command set; fixture validated by pd.read_sas's independent
     // decoder before commit (tools/make_sas_fixture.py)
     "s5_sas_compressed" -> ((s, _) =>
-      graft.io.Ingestion.readFile(s, "/root/repo/fixtures/sas/graft_fixture_rle.sas7bdat")),
+      graft.io.Ingestion.readFile(s, Fixtures.path("sas/graft_fixture_rle.sas7bdat"))),
     // RDC (COMPRESS=BINARY) variant: control-word scheme with RLE
     // runs AND sliding-window back-references; fixture validated by
     // pd.read_sas's independent rdc_decompress before commit
     "s5_sas_rdc" -> ((s, _) =>
-      graft.io.Ingestion.readFile(s, "/root/repo/fixtures/sas/graft_fixture_rdc.sas7bdat")),
+      graft.io.Ingestion.readFile(s, Fixtures.path("sas/graft_fixture_rdc.sas7bdat"))),
     // the DataSource V2 face: required-column pushdown reaches the
     // page parser (only the selected slices decode per row) and page
     // ranges surface as Spark-planned InputPartitions
     "s5_sas_dsv2" -> ((s, _) =>
       s.read.format("sas7bdat")
-        .load("/root/repo/fixtures/sas/graft_fixture_rle.sas7bdat")
+        .load(Fixtures.path("sas/graft_fixture_rle.sas7bdat"))
         .select("id", "tag")),
     // the format matrix's other quadrants: 32-bit scalars, big-endian
     // byte order, a mix page (metadata + inline rows — the layout of
     // every small real-world export), and windows-1252 text with
     // non-ASCII characters; all pd.read_sas-validated fixtures
     "s5_sas_variants" -> ((s, _) =>
-      graft.io.Sas.read(s, "/root/repo/fixtures/sas/graft_fixture_32le.sas7bdat")
+      graft.io.Sas.read(s, Fixtures.path("sas/graft_fixture_32le.sas7bdat"))
         .withColumn("variant", lit("32le"))
         .unionByName(
-          graft.io.Sas.read(s, "/root/repo/fixtures/sas/graft_fixture_64be.sas7bdat")
+          graft.io.Sas.read(s, Fixtures.path("sas/graft_fixture_64be.sas7bdat"))
             .withColumn("variant", lit("64be")))
         .unionByName(
-          graft.io.Sas.read(s, "/root/repo/fixtures/sas/graft_fixture_mix.sas7bdat")
+          graft.io.Sas.read(s, Fixtures.path("sas/graft_fixture_mix.sas7bdat"))
             .withColumn("variant", lit("mix")))
         .unionByName(
-          graft.io.Sas.read(s, "/root/repo/fixtures/sas/graft_fixture_w1252.sas7bdat")
+          graft.io.Sas.read(s, Fixtures.path("sas/graft_fixture_w1252.sas7bdat"))
             .withColumn("variant", lit("w1252")))),
     // pd.read_sas parity on files shortened in place: both fixtures
     // declare row_count=100 but physically carry stale trailing rows
@@ -303,11 +307,11 @@ private[graft] object EngineStoreQueries {
     // truncates at exactly 100 on both read paths — pandas-validated
     // at fixture generation (tools/make_sas_fixture.py)
     "s5_sas_stale" -> ((s, _) =>
-      graft.io.Sas.read(s, "/root/repo/fixtures/sas/graft_fixture_rle_stale.sas7bdat")
+      graft.io.Sas.read(s, Fixtures.path("sas/graft_fixture_rle_stale.sas7bdat"))
         .select("id", "val", "name").withColumn("variant", lit("rle"))
         .unionByName(
           s.read.format("sas7bdat")
-            .load("/root/repo/fixtures/sas/graft_fixture_plain_stale.sas7bdat")
+            .load(Fixtures.path("sas/graft_fixture_plain_stale.sas7bdat"))
             .select("id", "val", "name").withColumn("variant", lit("plain")))),
     // versioned store: publish v1 (subset) then v2 (full), read v1
     // back — time travel after a newer write; oracle reconstructs v1

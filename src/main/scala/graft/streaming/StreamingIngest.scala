@@ -520,33 +520,6 @@ object StreamingIngest {
       .select(col("window.start").as("window_start"), col(keyCol),
         col("n_events"), col("max_value"))
 
-  /** The whole ingest-curation stack as ONE streaming pipeline — the
-    * canonical "crawl feed → training store" gate:
-    *
-    *  1. quality rules ([[graft.llm.TextAnalysis.gopherFilter]]) —
-    *     stateless row predicate, drops junk before anything pays for
-    *     it;
-    *  2. benchmark decontamination
-    *     ([[graft.llm.Decontam.streamingDecontamFilter]]) — stateless
-    *     n-gram predicate over the embedded eval-gram set, so eval
-    *     data can never enter the store;
-    *  3. within-stream near-dup collapse
-    *     ([[streamingFingerprintDedup]]) — watermark-bounded state on
-    *     normalized-content fingerprints, catches the stream's own
-    *     redeliveries and trivial variants;
-    *  4. store-level incremental dedup
-    *     ([[streamingIncrementalIngest]]) — stream-static LEFT ANTI
-    *     against the accumulated corpus's digest set, stateless per
-    *     micro-batch.
-    *
-    * Ordering is cost-ordered: both stateless predicates run before
-    * the stateful dedup so rejected rows never enter the state store,
-    * and the store anti-join sees only survivors. Append-mode safe
-    * end to end (the only state is the watermarked fingerprint
-    * dedup). On a BATCH frame the same composition runs with plain
-    * dropDuplicates inside streamingFingerprintDedup's operator —
-    * StreamingSpec pins streaming == batch on identical input.
-    */
   /** Seed the [[erResolveStream]] master store: the resolved master
     * written under lifecycle partition `ingest_batch = -1` (the
     * pre-stream state — streaming micro-batches accrete novels into
@@ -1007,6 +980,33 @@ object StreamingIngest {
       }
   }
 
+  /** The whole ingest-curation stack as ONE streaming pipeline — the
+    * canonical "crawl feed → training store" gate:
+    *
+    *  1. quality rules ([[graft.llm.TextAnalysis.gopherFilter]]) —
+    *     stateless row predicate, drops junk before anything pays for
+    *     it;
+    *  2. benchmark decontamination
+    *     ([[graft.llm.Decontam.streamingDecontamFilter]]) — stateless
+    *     n-gram predicate over the embedded eval-gram set, so eval
+    *     data can never enter the store;
+    *  3. within-stream near-dup collapse
+    *     ([[streamingFingerprintDedup]]) — watermark-bounded state on
+    *     normalized-content fingerprints, catches the stream's own
+    *     redeliveries and trivial variants;
+    *  4. store-level incremental dedup
+    *     ([[streamingIncrementalIngest]]) — stream-static LEFT ANTI
+    *     against the accumulated corpus's digest set, stateless per
+    *     micro-batch.
+    *
+    * Ordering is cost-ordered: both stateless predicates run before
+    * the stateful dedup so rejected rows never enter the state store,
+    * and the store anti-join sees only survivors. Append-mode safe
+    * end to end (the only state is the watermarked fingerprint
+    * dedup). On a BATCH frame the same composition runs with plain
+    * dropDuplicates inside streamingFingerprintDedup's operator —
+    * StreamingSpec pins streaming == batch on identical input.
+    */
   def streamingCurationGate(
       docs: DataFrame,
       store: DataFrame,

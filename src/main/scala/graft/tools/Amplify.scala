@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Build an N×-amplified copy of a testdata scale dir for the
@@ -18,12 +17,7 @@ object Amplify {
     val Array(src, dst, copiesStr) = args
     val copies = copiesStr.toInt
     require(copies >= 1 && copies <= 16, s"copies $copies out of [1,16]")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.warehouse.dir",
-        graft.SparkEntry.cleanedTempDir("graft_warehouse_amplify_"))
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local("amplify", benchSplits = false)
     // customer joined the map in round 13 for the er_groups skew study:
     // identical-copy amplification multiplies every (nation, segment)
     // block's size by the copy count — the blocked self-join's

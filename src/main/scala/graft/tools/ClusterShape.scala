@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Cluster-shape rehearsal (SCALE.md / PLANS.md appendix): every plan
   * shape in PLANS.md was audited at `spark.sql.shuffle.partitions=32`;
   * the 1000-executor claim deserves proof that moving to a
@@ -32,13 +30,7 @@ object ClusterShape {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = (if (args.length > 1) args.drop(1).toSeq
                  else graft.Bench.headline).filter(graft.SparkEntry.queries.contains)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        graft.SparkEntry.cleanedTempDir("graft_warehouse_clustershape_"))
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local("clustershape", benchSplits = false)
 
     case class Shape(cartesian: Int, bnlj: Int, single: Int, bc: Int, smj: Int)
     def count(hay: String, needle: String): Int = needle.r.findAllMatchIn(hay).size

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** maxBlock sensitivity points for er_groups (SCALE.md "Round 13"):
   * runs `EntityRes.matchGroups` on a dir's customer table at a given
   * `maxBlock`, so the amplified protocol can measure the blocked
@@ -96,18 +94,8 @@ object ErScale {
     // fixture, so the 32x measurement refines what the gate pins
     val wideSpec = graft.ops.EntityRes.splitSegments(13, 6, 3)
     val subBlock = if (mode == "sub") Some(lastTwo) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.sql.warehouse.dir",
-        graft.SparkEntry.cleanedTempDir("graft_warehouse_erscale_"))
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/customer.parquet").limit(1).count()
+    val spark = graft.GraftSession.local("erscale", benchSplits = true)
+    graft.GraftSession.warmUp(spark, sfDir)
 
     // the ladder's driver-side step, shared by the rec* modes: ONE
     // recommendation per invocation (evidence -> refined spec ->
@@ -216,9 +204,9 @@ object ErScale {
       }
       (System.nanoTime() - t0) / 1e9
     }
-    val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5").toInt)
-    val ts = (0 until reps).map(_ => run()).sorted
-    val med = if (reps % 2 == 1) ts(reps / 2) else (ts(reps / 2 - 1) + ts(reps / 2)) / 2
+    val reps = graft.GraftSession.reps(5)
+    val ts = (0 until reps).map(_ => run())
+    val med = graft.GraftSession.median(ts)
     val refused = graft.ops.EntityRes.oversizedBlocks(
       Seq("c_nationkey", "c_mktsegment"), maxBlock)(
       spark.read.parquet(s"$sfDir/customer.parquet")).count()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -24,7 +24,7 @@ import org.apache.spark.sql.streaming.Trigger
   * inside the timed loop, so both faces pay the same CSV parse.
   *
   * usage: runMain graft.tools.ErStreamScale <sfDir> <maxBlock> <nBatches> [banded]
-  * env: SPARK_GRAFT_BENCH_REPS (default 3), SPARK_GRAFT_CPUS (default 32)
+  * env: SPARK_GRAFT_BENCH_REPS (default 3), SPARK_GRAFT_CPUS (default 4)
   */
 object ErStreamScale {
   def main(args: Array[String]): Unit = {
@@ -37,17 +37,8 @@ object ErStreamScale {
     val adaptive = args.length == 4 && args(3) == "adaptive"
     require(nBatches >= 1, s"bad nBatches=$nBatches")
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.sql.warehouse.dir",
-        graft.SparkEntry.cleanedTempDir("graft_warehouse_erstream_"))
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000).selectExpr("sum(id)").collect()
+    val spark = graft.GraftSession.local("erstream", benchSplits = true)
+    graft.GraftSession.warmUp(spark, sfDir)
 
     val masterSrc = spark.read.parquet(s"$sfDir/customer.parquet")
       .select("c_custkey", "c_name", "c_nationkey", "c_mktsegment")
@@ -156,12 +147,9 @@ object ErStreamScale {
       (streamSec, replaySec, a.count(), parity)
     }
 
-    val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
+    val reps = graft.GraftSession.reps(3)
     val runs = (0 until reps).map(_ => runOnce())
-    def med(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.length % 2 == 1) s(s.length / 2) else (s(s.length / 2 - 1) + s(s.length / 2)) / 2
-    }
+    import graft.GraftSession.{median => med}
     val sm = med(runs.map(_._1))
     val rm = med(runs.map(_._2))
     val parity = runs.forall(_._4)

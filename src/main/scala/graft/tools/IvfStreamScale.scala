@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -34,7 +34,7 @@ import org.apache.spark.sql.streaming.Trigger
   * stream must persist byte-identical codes to the batch face.
   *
   * usage: runMain graft.tools.IvfStreamScale <sfDir> <nBatches> [float|quant]
-  * env: SPARK_GRAFT_BENCH_REPS (default 3), SPARK_GRAFT_CPUS (32)
+  * env: SPARK_GRAFT_BENCH_REPS (default 3), SPARK_GRAFT_CPUS (default 4)
   */
 object IvfStreamScale {
   def main(args: Array[String]): Unit = {
@@ -46,17 +46,8 @@ object IvfStreamScale {
     require(nBatches >= 1, s"bad nBatches=$nBatches")
     require(mode == "float" || mode == "quant", s"bad mode=$mode")
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.sql.warehouse.dir",
-        graft.SparkEntry.cleanedTempDir("graft_warehouse_ivfstream_"))
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000).selectExpr("sum(id)").collect()
+    val spark = graft.GraftSession.local("ivfstream", benchSplits = true)
+    graft.GraftSession.warmUp(spark, sfDir)
 
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select("vec_id", "embedding")
@@ -183,12 +174,9 @@ object IvfStreamScale {
       (streamSec, replaySec, seedSec, probeSec, a.count(), parity)
     }
 
-    val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
+    val reps = graft.GraftSession.reps(3)
     val runs = (0 until reps).map(_ => runOnce())
-    def med(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.length % 2 == 1) s(s.length / 2) else (s(s.length / 2 - 1) + s(s.length / 2)) / 2
-    }
+    import graft.GraftSession.{median => med}
     val parity = runs.forall(_._6)
     println(s"""{"metric":"ivf_stream_scale","streamSec":${med(runs.map(_._1))},""" +
       s""""replaySec":${med(runs.map(_._2))},"seedSec":${med(runs.map(_._3))},""" +

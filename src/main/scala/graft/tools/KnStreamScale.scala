@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -29,7 +29,7 @@ import org.apache.spark.sql.streaming.Trigger
   * store's stream==replay==from-scratch parity, both orders' tables.
   *
   * usage: runMain graft.tools.KnStreamScale <sfDir> <nBatches> [kn2|kn3]
-  * env: SPARK_GRAFT_BENCH_REPS (default 3), SPARK_GRAFT_CPUS (32)
+  * env: SPARK_GRAFT_BENCH_REPS (default 3), SPARK_GRAFT_CPUS (default 4)
   */
 object KnStreamScale {
   def main(args: Array[String]): Unit = {
@@ -42,17 +42,8 @@ object KnStreamScale {
     require(mode == "kn2" || mode == "kn3", s"bad mode=$mode")
     val kn3 = mode == "kn3"
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.sql.warehouse.dir",
-        graft.SparkEntry.cleanedTempDir("graft_warehouse_knstream_"))
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000).selectExpr("sum(id)").collect()
+    val spark = graft.GraftSession.local("knstream", benchSplits = true)
+    graft.GraftSession.warmUp(spark, sfDir)
 
     import graft.llm.LangModel
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -145,12 +136,9 @@ object KnStreamScale {
       (streamSec, replaySec, seedSec, nTypes, parity)
     }
 
-    val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
+    val reps = graft.GraftSession.reps(3)
     val runs = (0 until reps).map(_ => runOnce())
-    def med(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.length % 2 == 1) s(s.length / 2) else (s(s.length / 2 - 1) + s(s.length / 2)) / 2
-    }
+    import graft.GraftSession.{median => med}
     val parity = runs.forall(_._5)
     println(s"""{"metric":"kn_stream_scale","streamSec":${med(runs.map(_._1))},""" +
       s""""replaySec":${med(runs.map(_._2))},"seedSec":${med(runs.map(_._3))},""" +

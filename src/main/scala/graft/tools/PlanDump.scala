@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named registry queries to files —
   * the round-18 optimization evidence trail (plans/r18/<query>_
   * {before,after}.txt): the judge cannot run Spark, so every plan
@@ -21,16 +19,7 @@ object PlanDump {
     val outDir = args(0)
     val suffix = args(1)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.sql.warehouse.dir",
-        graft.SparkEntry.cleanedTempDir("graft_warehouse_plandump_"))
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local("plandump", benchSplits = true)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val names =
       if (args.length > 2) args.drop(2).toSeq

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.llm.{Ivf, Similarity}
@@ -15,10 +14,7 @@ object RecallBench {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val nProbeRows = if (args.length > 1) args(1).toInt else 50
     val k = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local("recallbench", benchSplits = false)
 
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val n = emb.count()

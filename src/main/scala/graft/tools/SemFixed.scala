@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Fixed-benchmark scale point for decontam_semantic (SCALE.md
@@ -21,18 +20,8 @@ object SemFixed {
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: SemFixed <corpusSfDir> <benchSfDir>")
     val Array(corpusDir, benchDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.sql.warehouse.dir",
-        graft.SparkEntry.cleanedTempDir("graft_warehouse_semfixed_"))
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$corpusDir/embeddings.parquet").limit(1).count()
+    val spark = graft.GraftSession.local("semfixed", benchSplits = true)
+    graft.GraftSession.warmUp(spark, corpusDir)
 
     def run(): Double = {
       // corpus = the amplified dir's non-bench slice (the gated
@@ -48,9 +37,9 @@ object SemFixed {
         .write.mode("overwrite").format("noop").save()
       (System.nanoTime() - t0) / 1e9
     }
-    val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5").toInt)
-    val ts = (0 until reps).map(_ => run()).sorted
-    val med = if (reps % 2 == 1) ts(reps / 2) else (ts(reps / 2 - 1) + ts(reps / 2)) / 2
+    val reps = graft.GraftSession.reps(5)
+    val ts = (0 until reps).map(_ => run())
+    val med = graft.GraftSession.median(ts)
     println(s"""{"metric":"sem_fixed_bench","value":$med,"unit":"sec","reps":$reps,"min":${ts.min},"max":${ts.max},"corpus":"$corpusDir","bench":"$benchDir"}""")
     spark.stop()
   }

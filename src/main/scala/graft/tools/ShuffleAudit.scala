@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Generated shuffle-budget inventory: plans EVERY registered query
   * and tallies its physical exchanges, so SCALE.md's hand-written
   * shuffle table has a machine-checked companion that cannot drift.
@@ -20,12 +18,7 @@ object ShuffleAudit {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = if (args.length > 1) args(1) else "SHUFFLES.tsv"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.warehouse.dir",
-        graft.SparkEntry.cleanedTempDir("graft_warehouse_shufaudit_"))
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local("shuffleaudit", benchSplits = false)
 
     def count(hay: String, needle: String): Int =
       needle.r.findAllMatchIn(hay).size

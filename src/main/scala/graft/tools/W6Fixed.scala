@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Fixed-benchmark scale point for w6_curation_gate_twin (SCALE.md
@@ -20,19 +19,8 @@ object W6Fixed {
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: W6Fixed <docsSfDir> <benchSfDir>")
     val Array(docsDir, benchDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.sql.warehouse.dir",
-        graft.SparkEntry.cleanedTempDir("graft_warehouse_w6fixed_"))
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // same warmup spirit as Bench: don't charge session start to rep 1
-    spark.range(1000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$docsDir/documents.parquet").limit(1).count()
+    val spark = graft.GraftSession.local("w6fixed", benchSplits = true)
+    graft.GraftSession.warmUp(spark, docsDir)
 
     def run(): Double = {
       val docs = spark.read.parquet(s"$docsDir/documents.parquet")
@@ -50,9 +38,9 @@ object W6Fixed {
         .write.mode("overwrite").format("noop").save()
       (System.nanoTime() - t0) / 1e9
     }
-    val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5").toInt)
-    val ts = (0 until reps).map(_ => run()).sorted
-    val med = if (reps % 2 == 1) ts(reps / 2) else (ts(reps / 2 - 1) + ts(reps / 2)) / 2
+    val reps = graft.GraftSession.reps(5)
+    val ts = (0 until reps).map(_ => run())
+    val med = graft.GraftSession.median(ts)
     println(s"""{"metric":"w6_fixed_bench","value":$med,"unit":"sec","reps":$reps,"min":${ts.min},"max":${ts.max},"docs":"$docsDir","bench":"$benchDir"}""")
     spark.stop()
   }

@@ -227,9 +227,9 @@ class IoSpec extends SparkSpec {
     Files.writeString(java.nio.file.Paths.get(dir, "drop_DS_1.csv"),
       "project,Folder,Status\np1,f9,DONE\n")
     Ingestion.ingestRouted(spark, s"$dir/drop_ENROL_1.csv",
-      "/root/repo/fixtures/ingest_config.json", store)
+      Fixtures.path("ingest_config.json"), store)
     Ingestion.ingestRouted(spark, s"$dir/drop_DS_1.csv",
-      "/root/repo/fixtures/ingest_config.json", store)
+      Fixtures.path("ingest_config.json"), store)
     // the reference Lambda put_items one file and leaves other views
     // alone; a static overwrite would have truncated the ENROL data
     val enrol = NestedStore.flatten(
@@ -425,6 +425,23 @@ class IoSpec extends SparkSpec {
     assert(merged.count() == 2)
   }
 
+  test("s9_parquet_append reads back in write order on every run") {
+    // the two appended part files have random names, and the merged
+    // schema followed whichever one the listing yielded first; each
+    // run deletes the store and writes fresh part files
+    val dir = Files.createTempDirectory("graft_s9").toString
+    Seq((0L, "AFRICA", "x"), (1L, "AMERICA", "y")).toDF("r_regionkey", "r_name", "r_comment")
+      .write.parquet(s"$dir/region.parquet")
+    Seq((0L, "ALGERIA", 0L), (1L, "ARGENTINA", 1L), (2L, "BRAZIL", 1L))
+      .toDF("n_nationkey", "n_name", "n_regionkey").write.parquet(s"$dir/nation.parquet")
+    (1 to 8).foreach { run =>
+      val out = SparkEntry.queries("s9_parquet_append")(spark, dir)
+      assert(out.columns.toSeq == Seq("r_regionkey", "r_name", "n_nationkey", "n_name"),
+        s"run $run: ${out.columns.mkString(", ")}")
+      assert(out.count() == 2 + 3)
+    }
+  }
+
   test("CSV sink round-trips through the CSV source") {
     val dir = Files.createTempDirectory("graft_csv").toString + "/out"
     Export.writeCsv(Seq(("a", 1), ("b", 2)).toDF("k", "v"), dir)
@@ -537,7 +554,7 @@ class IoSpec extends SparkSpec {
 
   test("ingestion routing: substring match + reference special cases + end-to-end ingest") {
     import graft.io.Ingestion
-    val cfg = Ingestion.Routing.load("/root/repo/fixtures/ingest_config.json")
+    val cfg = Ingestion.Routing.load(Fixtures.path("ingest_config.json"))
     assert(cfg.targetColumns == Seq("study_code", "view", "data"))
     assert(Ingestion.Routing.route("study1_ENROL_20240101.csv", cfg) ==
       ("ENROL", Seq("project", "Folder")))
@@ -552,7 +569,7 @@ class IoSpec extends SparkSpec {
     Files.writeString(java.nio.file.Paths.get(dir, "drop_ENROL_1.csv"),
       "project,Folder,SiteGroup\np1,f1,US\np1,f1,DE\np1,f2,FR\n")
     val view = Ingestion.ingestRouted(spark, s"$dir/drop_ENROL_1.csv",
-      "/root/repo/fixtures/ingest_config.json", store)
+      Fixtures.path("ingest_config.json"), store)
     assert(view == "ENROL")
     val back = graft.io.NestedStore.flatten(
       spark.read.parquet(s"$store/project=p1/Folder=f1"))
@@ -590,7 +607,7 @@ class IoSpec extends SparkSpec {
   }
 
   test("config reader parses sheets, decision tables, and the study") {
-    val study = ConfigReader.readStudy(spark, "/root/repo/fixtures/study_demo")
+    val study = ConfigReader.readStudy(spark, Fixtures.path("study_demo"))
     assert(study.studyCode == "S001")
     assert(study.stitchKey == "c_custkey")
     assert(study.analytes.map(_.name) == Seq("cust_base", "cust_orders"))

@@ -214,7 +214,7 @@ class LlmSpec extends SparkSpec {
     * pins that MEASURED assumption: regenerated testdata that grows
     * pairs in the miss zone fails HERE with the real cause, not as an
     * opaque oracle hash-mismatch. (Distribution measured by
-    * tools/JaccardGap: sf0.01 has nothing in [0.1, 0.9); sf0.1 has 7
+    * Dedup.allPairsJaccard: sf0.01 has nothing in [0.1, 0.9); sf0.1 has 7
     * pairs in [0.8, 0.9), expected misses ≈ 1.5e-3.)
     */
   test("corpus assumption: no jaccard pairs in the LSH miss zone at either gate scale") {

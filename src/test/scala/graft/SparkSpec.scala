@@ -7,15 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * ~2s; per-suite sessions would dominate test time).
   */
 object TestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local("graft-test", benchSplits = false, cpus = 2)
 }
 
 trait SparkSpec extends AnyFunSuite {

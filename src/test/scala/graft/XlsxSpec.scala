@@ -133,7 +133,7 @@ class XlsxSpec extends SparkSpec {
 
   test("original reference workbooks parse to the transcribed fixture specs") {
     val fromXlsx = ConfigReader.readStudyXlsx(refStudy)
-    val fromCsv = ConfigReader.readStudy(spark, "/root/repo/fixtures/clinical_study")
+    val fromCsv = ConfigReader.readStudy(spark, Fixtures.path("clinical_study"))
     assert(fromXlsx.studyCode == fromCsv.studyCode)
     assert(fromXlsx.stitchKey == fromCsv.stitchKey)
     assert(fromXlsx.analytes.map(_.name) == fromCsv.analytes.map(_.name))
