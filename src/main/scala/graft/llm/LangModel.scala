@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.streaming.Streams
+
 /** Bigram language-model fluency scoring — the CCNet-style perplexity
   * quality filter (Wenzek et al. 2020, public): score every document
   * by its mean log-probability under an n-gram model trained on a
@@ -327,9 +329,7 @@ object LangModel {
     * the store and replays can overwrite their own partition.
     */
   def seedKnModel(ref: DataFrame, textCol: String, modelDir: String): Unit =
-    refBigramCounts(ref, textCol)
-      .withColumn("ingest_batch", lit(-1L))
-      .write.partitionBy("ingest_batch").mode("overwrite").parquet(modelDir)
+    Streams.writeBatch(refBigramCounts(ref, textCol), modelDir, Streams.Seed)
 
   /** Incremental model maintenance: the ARRIVING reference slice's
     * bigram counts appended as their own `ingest_batch` partition —
@@ -345,10 +345,7 @@ object LangModel {
       textCol: String,
       modelDir: String,
       batchId: Long): Unit =
-    refBigramCounts(batch, textCol)
-      .withColumn("ingest_batch", lit(batchId))
-      .write.partitionBy("ingest_batch").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic").parquet(modelDir)
+    Streams.writeBatch(refBigramCounts(batch, textCol), modelDir, batchId)
 
   /** Deletion propagation for the KN model store: counts are
     * ADDITIVE, so erasing a reference slice is an EXACT negative
@@ -369,11 +366,8 @@ object LangModel {
       textCol: String,
       modelDir: String,
       batchId: Long): Unit =
-    refBigramCounts(erased, textCol)
-      .withColumn("__cb", -col("__cb"))
-      .withColumn("ingest_batch", lit(batchId))
-      .write.partitionBy("ingest_batch").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic").parquet(modelDir)
+    Streams.writeBatch(refBigramCounts(erased, textCol).withColumn("__cb", -col("__cb")),
+      modelDir, batchId)
 
   /** Merge the per-batch count deltas into the live model table.
     * Counts are ADDITIVE, so `groupBy(bg).sum(cb)` over the deltas
@@ -408,9 +402,7 @@ object LangModel {
       spark: org.apache.spark.sql.SparkSession,
       modelDir: String,
       outDir: String): Unit =
-    loadKnCounts(spark, modelDir)
-      .withColumn("ingest_batch", lit(-1L))
-      .write.partitionBy("ingest_batch").mode("overwrite").parquet(outDir)
+    Streams.writeBatch(loadKnCounts(spark, modelDir), outDir, Streams.Seed)
 
   // ===== trigram (two-order) model store =====
 
@@ -432,9 +424,7 @@ object LangModel {
     * column; deltas per batch, merged at read ([[loadKn3Counts]]).
     */
   def seedKn3Model(ref: DataFrame, textCol: String, modelDir: String): Unit =
-    kn3Deltas(ref, textCol)
-      .withColumn("ingest_batch", lit(-1L))
-      .write.partitionBy("ingest_batch").mode("overwrite").parquet(modelDir)
+    Streams.writeBatch(kn3Deltas(ref, textCol), modelDir, Streams.Seed)
 
   /** Incremental two-order maintenance — the [[ingestKnModel]]
     * idempotence contract (dynamic partition overwrite keyed on the
@@ -448,10 +438,7 @@ object LangModel {
       textCol: String,
       modelDir: String,
       batchId: Long): Unit =
-    kn3Deltas(batch, textCol)
-      .withColumn("ingest_batch", lit(batchId))
-      .write.partitionBy("ingest_batch").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic").parquet(modelDir)
+    Streams.writeBatch(kn3Deltas(batch, textCol), modelDir, batchId)
 
   /** Deletion propagation for the two-order store — the
     * [[eraseKnModel]] argument verbatim: negate the erased slice's
@@ -464,11 +451,8 @@ object LangModel {
       textCol: String,
       modelDir: String,
       batchId: Long): Unit =
-    kn3Deltas(erased, textCol)
-      .withColumn("__c", -col("__c"))
-      .withColumn("ingest_batch", lit(batchId))
-      .write.partitionBy("ingest_batch").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic").parquet(modelDir)
+    Streams.writeBatch(kn3Deltas(erased, textCol).withColumn("__c", -col("__c")),
+      modelDir, batchId)
 
   /** Merge the two-order delta store into the live (trigram, bigram)
     * count tables [[withKn3ScoreFromCounts]] consumes. One
@@ -478,12 +462,18 @@ object LangModel {
   def loadKn3Counts(
       spark: org.apache.spark.sql.SparkSession,
       modelDir: String): (DataFrame, DataFrame) = {
-    val merged = spark.read.parquet(modelDir)
-      .groupBy("__k", "__g").agg(sum("__c").as("__c"))
-      .where(col("__c") > 0L)
+    val merged = mergeKn3(spark, modelDir)
     (merged.where(col("__k") === 3).select(col("__g").as("__g3"), col("__c").as("__c3")),
       merged.where(col("__k") === 2).select(col("__g").as("__bg"), col("__c").as("__cb")))
   }
+
+  /** The two-order delta store merged per (order, gram), positive
+    * counts only — what [[loadKn3Counts]] splits and
+    * [[compactKn3Model]] persists. */
+  private def mergeKn3(spark: org.apache.spark.sql.SparkSession, modelDir: String): DataFrame =
+    spark.read.parquet(modelDir)
+      .groupBy("__k", "__g").agg(sum("__c").as("__c"))
+      .where(col("__c") > 0L)
 
   /** Offline compaction of the two-order delta store — the
     * [[compactKnModel]] contract: every partition merged into a
@@ -494,12 +484,8 @@ object LangModel {
       spark: org.apache.spark.sql.SparkSession,
       modelDir: String,
       outDir: String): Unit =
-    spark.read.parquet(modelDir)
-      .groupBy("__k", "__g").agg(sum("__c").as("__c"))
-      .where(col("__c") > 0L)
-      .select(col("__g"), col("__c"), col("__k"))
-      .withColumn("ingest_batch", lit(-1L))
-      .write.partitionBy("ingest_batch").mode("overwrite").parquet(outDir)
+    Streams.writeBatch(mergeKn3(spark, modelDir).select(col("__g"), col("__c"), col("__k")),
+      outDir, Streams.Seed)
 
   /** CCNet's head/middle/tail split (Wenzek et al. 2020 §4.4): rank
     * every document by mean KN log-probability (fluent first) and cut

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Native
+import graft.streaming.Streams
 
 /** Multimodal column handling: image/audio/video as opaque `binary`
   * columns plus typed metadata. Metadata decode (PNG/JPEG/GIF header
@@ -818,8 +819,8 @@ object Multimodal {
       indexDir: String,
       idCol: String,
       ids: DataFrame): (graft.io.LayoutErase.LayoutEraseStats, graft.io.LayoutErase.LayoutEraseStats) =
-    (graft.io.LayoutErase.eraseByIds(spark, storeDir, Seq("ingest_batch"), idCol, ids),
-      graft.io.LayoutErase.eraseByIds(spark, indexDir, Seq("ingest_batch"), idCol, ids))
+    (graft.io.LayoutErase.eraseByIds(spark, storeDir, Seq(Streams.BatchCol), idCol, ids),
+      graft.io.LayoutErase.eraseByIds(spark, indexDir, Seq(Streams.BatchCol), idCol, ids))
 
   /** Per-binary duplicate coverage at CDC-chunk granularity — the
     * byte-level twin of [[graft.llm.Dedup.cdcDupCoverage]]: the

@@ -8,6 +8,7 @@ import graft.io.{ConfigReader, Export, NestedStore, Standardized}
 import graft.llm.{Dedup, Multimodal, Similarity, Sketch, TextAnalysis}
 import graft.model._
 import graft.ops.Ops
+import graft.streaming.Streams
 
 /** Query registry — multimodal binary columns: header decodes (PNG/JPEG/WAV/MP4), byte stats, chunking, feature stubs.
   *
@@ -208,15 +209,9 @@ private[graft] object MultimodalQueries {
       // accrete a second partition the batch way so the erase crosses
       // partition boundaries (seed = -1, batch = 0)
       val idx0 = s.read.parquet(indexDir).select("doc_id", "chunk_md5", "n_bytes")
-      Multimodal.ingestBinaryChunkIndex("content", "doc_id",
-        Multimodal.Md5Chunker(16, 8))(docs.where(col("doc_id") % 5 === 0), idx0)
-        .withColumn("ingest_batch", lit(0L))
-        .write.partitionBy("ingest_batch").mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic").parquet(indexDir)
-      docs.where(col("doc_id") % 5 === 0)
-        .withColumn("ingest_batch", lit(0L))
-        .write.partitionBy("ingest_batch").mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic").parquet(storeDir)
+      Streams.writeBatch(Multimodal.ingestBinaryChunkIndex("content", "doc_id",
+        Multimodal.Md5Chunker(16, 8))(docs.where(col("doc_id") % 5 === 0), idx0), indexDir, 0L)
+      Streams.writeBatch(docs.where(col("doc_id") % 5 === 0), storeDir, 0L)
       Multimodal.eraseBinaryStore(s, storeDir, indexDir, "doc_id",
         docs.where(col("doc_id") % 7 === 0).select("doc_id"))
       s.read.parquet(indexDir).select("doc_id", "chunk_md5", "n_bytes")

@@ -10,10 +10,14 @@ import graft.io.{Ingestion, NestedStore}
 
 /** Structured Streaming surface. The reference's only "stream" is an
   * event-at-a-time Lambda (Data_Ingestion_Python.py:196-275 —
-  * at-least-once, per-file micro-batch); readStream file-source +
-  * foreachBatch reproduces exactly that contract with checkpointed
-  * exactly-once batches. Watermarked windows and mapGroupsWithState
-  * are the beyond-reference operators a training-data feed needs.
+  * at-least-once, per-file micro-batch); a readStream file source
+  * lifted over a named batch step by [[Streams.lift]] reproduces
+  * exactly that contract with checkpointed batches, and
+  * [[Streams.writeBatch]] makes every replay idempotent. Each
+  * `*Stream` twin is `lift(csvSource, checkpoint)(its *Step)`, so the
+  * step is also the twin's batch face. Watermarked windows and
+  * mapGroupsWithState are the beyond-reference operators a
+  * training-data feed needs.
   */
 object StreamingIngest {
 
@@ -28,40 +32,17 @@ object StreamingIngest {
       .option("maxFilesPerTrigger", 16)
       .csv(watchDir)
 
-  /** Streaming equivalent of the ingestion Lambda: watch a directory
-    * for CSV drops, apply the same nullFill+metadata transforms, nest
-    * per micro-batch, append to the keyed store.
-    */
-  def ingestStream(
-      spark: SparkSession,
-      watchDir: String,
-      schema: StructType,
-      k1: String,
-      k2: String,
-      storeDir: String,
-      checkpointDir: String): DataStreamWriter[Row] = {
-    val raw = csvSource(spark, watchDir, schema)
-    val cleaned = Ingestion.withFileMetadata(Ingestion.nullFill(raw))
-    cleaned.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          NestedStore.nest(batch, k1, k2)
-            .write.mode("append").partitionBy(k1, k2).parquet(storeDir)
-      }
-  }
-
-  /** [[ingestStream]] with the reference Lambda's true sink
-    * semantics: each micro-batch UPSERTS its keys (per-key `put_item`,
+  /** Streaming equivalent of the ingestion Lambda with its true sink
+    * semantics: watch a directory for CSV drops and UPSERT each
+    * micro-batch's keys (per-key `put_item`,
     * Data_Ingestion_Python.py:132-139 — the new document replaces the
-    * old one for that (study_code, view)) instead of appending. Wired
-    * through [[NestedStore.upsert]]'s dynamic partition overwrite in
-    * foreachBatch, so a re-dropped file refreshes its own keys'
-    * partitions and never rewrites — or duplicates into — the rest of
-    * the store. foreachBatch is at-least-once on retry, and that is
-    * exactly why upsert is the right sink: replaying a batch rewrites
-    * the same partitions to the same content (idempotent), where the
-    * append sink would double the rows. Streaming == batch parity is
+    * old one for that (study_code, view)) through [[upsertStep]].
+    * A re-dropped file refreshes its own keys' partitions and never
+    * rewrites — or duplicates into — the rest of the store.
+    * foreachBatch is at-least-once on retry, and that is exactly why
+    * upsert is the right sink: replaying a batch rewrites the same
+    * partitions to the same content (idempotent), where an append
+    * sink would double the rows. Streaming == batch parity is
     * spec-pinned (StreamingSpec): the streamed store equals
     * write(A) + upsert(B) applied in batch.
     */
@@ -72,16 +53,17 @@ object StreamingIngest {
       k1: String,
       k2: String,
       storeDir: String,
-      checkpointDir: String): DataStreamWriter[Row] = {
-    val raw = csvSource(spark, watchDir, schema)
-    val cleaned = Ingestion.withFileMetadata(Ingestion.nullFill(raw))
-    cleaned.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          NestedStore.upsert(NestedStore.nest(batch, k1, k2), storeDir, k1, k2)
-      }
-  }
+      checkpointDir: String): DataStreamWriter[Row] =
+    Streams.lift(csvSource(spark, watchDir, schema), checkpointDir)(
+      upsertStep(k1, k2, storeDir))
+
+  /** [[upsertStream]]'s step: the batch ingestion transforms
+    * (nullFill + file metadata), nest on the two keys,
+    * [[NestedStore.upsert]] (dynamic partition overwrite). */
+  def upsertStep(k1: String, k2: String, storeDir: String)(batch: DataFrame, batchId: Long): Unit =
+    NestedStore.upsert(
+      NestedStore.nest(Ingestion.withFileMetadata(Ingestion.nullFill(batch)), k1, k2),
+      storeDir, k1, k2)
 
   /** Streaming data-quality gate: evaluate a declarative rule set
     * ([[graft.ops.DataQuality]]) over a CSV drop stream and append
@@ -112,19 +94,32 @@ object StreamingIngest {
   }
 
   /** Streaming incremental-view maintenance: fold each micro-batch
-    * into a persistent [[graft.ops.Ivm]] state store — the standing
-    * rollup refreshes as data arrives, reading state + delta, never
-    * history. The merge is NOT naturally idempotent (re-merging a
-    * replayed batch double-counts, unlike [[upsertStream]]'s
-    * overwrite), and foreachBatch is at-least-once on retry — so the
-    * commit is batch-id-gated: the staged state directory carries a
-    * `_ivm_batch` marker written BEFORE the atomic swap-in (underscore
-    * files are invisible to the parquet reader), and a batch whose id
-    * is already recorded is skipped. Marker and data commit in one
-    * rename — a crash between them is impossible, which upgrades
-    * at-least-once delivery to exactly-once state. Same stage-and-swap
-    * discipline as [[NestedStore.compact]], including stage-out
-    * rollback.
+    * into a persistent [[graft.ops.Ivm]] state store ([[ivmStateStep]])
+    * — the standing rollup refreshes as data arrives, reading state +
+    * delta, never history.
+    */
+  def ivmStateStream(
+      spark: SparkSession,
+      watchDir: String,
+      schema: StructType,
+      keys: Seq[String],
+      valueCol: String,
+      stateDir: String,
+      checkpointDir: String): DataStreamWriter[Row] =
+    Streams.lift(csvSource(spark, watchDir, schema), checkpointDir)(
+      ivmStateStep(keys, valueCol, stateDir, checkpointDir))
+
+  /** [[ivmStateStream]]'s step. The merge is NOT naturally idempotent
+    * (re-merging a replayed batch double-counts, unlike
+    * [[upsertStream]]'s overwrite), and foreachBatch is at-least-once
+    * on retry — so the commit is batch-id-gated: the staged state
+    * directory carries a `_ivm_batch` marker written BEFORE the atomic
+    * swap-in (underscore files are invisible to the parquet reader),
+    * and a batch whose id is already recorded is skipped. Marker and
+    * data commit in one rename — a crash between them is impossible,
+    * which upgrades at-least-once delivery to exactly-once state. Same
+    * stage-and-swap discipline as [[NestedStore.compact]], including
+    * stage-out rollback.
     *
     * Batch ids are only meaningful within ONE checkpoint lifecycle: a
     * fresh checkpointDir renumbers batches from 0 and re-reads every
@@ -135,101 +130,91 @@ object StreamingIngest {
     * stable across restarts of the same checkpoint, fresh when the
     * checkpoint is recreated — and a mismatch fails loudly instead of
     * guessing: resume with the original checkpoint, or start a fresh
-    * stateDir with the new one.
+    * stateDir with the new one. A batch caller passes a checkpoint
+    * path with no metadata; its query id reads as unknown.
     */
-  def ivmStateStream(
-      spark: SparkSession,
-      watchDir: String,
-      schema: StructType,
+  def ivmStateStep(
       keys: Seq[String],
       valueCol: String,
       stateDir: String,
-      checkpointDir: String): DataStreamWriter[Row] = {
-    val raw = csvSource(spark, watchDir, schema)
-    raw.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val state = new org.apache.hadoop.fs.Path(stateDir)
-          val fs = state.getFileSystem(s.sparkContext.hadoopConfiguration)
-          val marker = new org.apache.hadoop.fs.Path(stateDir, "_ivm_batch")
-          // The checkpoint's query id is the lifecycle identity batch
-          // ids are scoped to (written by Spark before the first batch;
-          // recreated checkpoint -> new id).
-          val metaPath = new org.apache.hadoop.fs.Path(checkpointDir, "metadata")
-          // the checkpoint may live on a different filesystem than the
-          // state dir (e.g. local ckpt + object-store state) — resolve
-          // its OWN fs or Hadoop throws "Wrong FS"
-          val ckptFs = metaPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-          val queryId: String =
-            if (ckptFs.exists(metaPath)) {
-              val in = ckptFs.open(metaPath)
-              val txt = try new String(
-                in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-              finally in.close()
-              "\"id\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(txt)
-                .map(_.group(1)).getOrElse("unknown")
-            } else "unknown"
-          val committed = fs.exists(marker) && {
-            val in = fs.open(marker)
-            val lines = try new String(
-              in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-              .trim.split("\n").toSeq
-            finally in.close()
-            val markerQid = lines.drop(1).headOption.map(_.trim)
-            if (markerQid.exists(q => q != "unknown" && queryId != "unknown" && q != queryId))
-              throw new IllegalStateException(
-                s"ivmStateStream: state at $stateDir was committed under streaming query " +
-                  s"${markerQid.get} but this run's checkpoint $checkpointDir is query " +
-                  s"$queryId — batch ids are not comparable across checkpoint lifecycles " +
-                  "(a fresh checkpoint renumbers from 0 and re-reads the whole watch dir, " +
-                  "so merging would double-count and skipping would lose data). Resume " +
-                  "with the original checkpoint, or point this run at a fresh stateDir.")
-            lines.head.trim.toLong >= batchId
-          }
-          if (!committed) {
-            val tmp = new org.apache.hadoop.fs.Path(stateDir + "__staging")
-            val old = new org.apache.hadoop.fs.Path(stateDir + "__prev")
-            // crash-window recovery FIRST — before the exists(state)
-            // probe below and before any delete: an attempt that died
-            // between the stage-out and swap-in renames left the ONLY
-            // copy of the rollup history at __prev with stateDir
-            // missing. Deleting __prev (or building `merged` off the
-            // missing state dir) would make the replayed batch commit
-            // delta-only state — silent loss of every prior batch.
-            // Restore it; the replay then re-merges onto the restored
-            // history (its marker holds the prior batch id, so
-            // `committed` above was correctly false).
-            if (fs.exists(old) && !fs.exists(state))
-              require(fs.rename(old, state),
-                s"ivmStateStream: could not restore staged-out state from $old")
-            val delta = graft.ops.Ivm.state(keys, valueCol)(batch)
-            val merged =
-              if (fs.exists(state))
-                graft.ops.Ivm.merge(keys)(s.read.parquet(stateDir), delta)
-              else delta
-            fs.delete(tmp, true); fs.delete(old, true)
-            merged.write.mode("overwrite").parquet(tmp.toString)
-            val out = fs.create(new org.apache.hadoop.fs.Path(tmp, "_ivm_batch"), true)
-            try out.write(s"$batchId\n$queryId"
-              .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            finally out.close()
-            val hadState = fs.exists(state)
-            if (hadState)
-              require(fs.rename(state, old), s"ivmStateStream: could not stage out $stateDir")
-            if (!fs.rename(tmp, state)) {
-              val restored = !hadState || fs.rename(old, state)
-              throw new IllegalStateException(
-                s"ivmStateStream: could not swap in $tmp" +
-                  (if (restored) s" (previous state restored at $stateDir)"
-                   else s" (STATE MISSING at $stateDir — manual repair from $old)"))
-            }
-            fs.delete(old, true)
-            ()
-          }
-        }
+      checkpointDir: String)(batch: DataFrame, batchId: Long): Unit = {
+    val s = batch.sparkSession
+    val state = new org.apache.hadoop.fs.Path(stateDir)
+    val fs = state.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val marker = new org.apache.hadoop.fs.Path(stateDir, "_ivm_batch")
+    // The checkpoint's query id is the lifecycle identity batch
+    // ids are scoped to (written by Spark before the first batch;
+    // recreated checkpoint -> new id).
+    val metaPath = new org.apache.hadoop.fs.Path(checkpointDir, "metadata")
+    // the checkpoint may live on a different filesystem than the
+    // state dir (e.g. local ckpt + object-store state) — resolve
+    // its OWN fs or Hadoop throws "Wrong FS"
+    val ckptFs = metaPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val queryId: String =
+      if (ckptFs.exists(metaPath)) {
+        val in = ckptFs.open(metaPath)
+        val txt = try new String(
+          in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+        finally in.close()
+        "\"id\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(txt)
+          .map(_.group(1)).getOrElse("unknown")
+      } else "unknown"
+    val committed = fs.exists(marker) && {
+      val in = fs.open(marker)
+      val lines = try new String(
+        in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+        .trim.split("\n").toSeq
+      finally in.close()
+      val markerQid = lines.drop(1).headOption.map(_.trim)
+      if (markerQid.exists(q => q != "unknown" && queryId != "unknown" && q != queryId))
+        throw new IllegalStateException(
+          s"ivmStateStream: state at $stateDir was committed under streaming query " +
+            s"${markerQid.get} but this run's checkpoint $checkpointDir is query " +
+            s"$queryId — batch ids are not comparable across checkpoint lifecycles " +
+            "(a fresh checkpoint renumbers from 0 and re-reads the whole watch dir, " +
+            "so merging would double-count and skipping would lose data). Resume " +
+            "with the original checkpoint, or point this run at a fresh stateDir.")
+      lines.head.trim.toLong >= batchId
+    }
+    if (!committed) {
+      val tmp = new org.apache.hadoop.fs.Path(stateDir + "__staging")
+      val old = new org.apache.hadoop.fs.Path(stateDir + "__prev")
+      // crash-window recovery FIRST — before the exists(state)
+      // probe below and before any delete: an attempt that died
+      // between the stage-out and swap-in renames left the ONLY
+      // copy of the rollup history at __prev with stateDir
+      // missing. Deleting __prev (or building `merged` off the
+      // missing state dir) would make the replayed batch commit
+      // delta-only state — silent loss of every prior batch.
+      // Restore it; the replay then re-merges onto the restored
+      // history (its marker holds the prior batch id, so
+      // `committed` above was correctly false).
+      if (fs.exists(old) && !fs.exists(state))
+        require(fs.rename(old, state),
+          s"ivmStateStream: could not restore staged-out state from $old")
+      val delta = graft.ops.Ivm.state(keys, valueCol)(batch)
+      val merged =
+        if (fs.exists(state))
+          graft.ops.Ivm.merge(keys)(s.read.parquet(stateDir), delta)
+        else delta
+      fs.delete(tmp, true); fs.delete(old, true)
+      merged.write.mode("overwrite").parquet(tmp.toString)
+      val out = fs.create(new org.apache.hadoop.fs.Path(tmp, "_ivm_batch"), true)
+      try out.write(s"$batchId\n$queryId"
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+      val hadState = fs.exists(state)
+      if (hadState)
+        require(fs.rename(state, old), s"ivmStateStream: could not stage out $stateDir")
+      if (!fs.rename(tmp, state)) {
+        val restored = !hadState || fs.rename(old, state)
+        throw new IllegalStateException(
+          s"ivmStateStream: could not swap in $tmp" +
+            (if (restored) s" (previous state restored at $stateDir)"
+             else s" (STATE MISSING at $stateDir — manual repair from $old)"))
       }
+      fs.delete(old, true)
+    }
   }
 
   /** Watermarked tumbling-window aggregation over an event stream —
@@ -521,35 +506,19 @@ object StreamingIngest {
         col("n_events"), col("max_value"))
 
   /** Seed the [[erResolveStream]] master store: the resolved master
-    * written under lifecycle partition `ingest_batch = -1` (the
-    * pre-stream state — streaming micro-batches accrete novels into
-    * their own `ingest_batch = <id>` partitions beside it). `master`
-    * must already carry the cluster column.
+    * written as the [[Streams.Seed]] batch (the pre-stream state —
+    * streaming micro-batches accrete novels into their own batch
+    * partitions beside it). `master` must already carry the cluster
+    * column.
     */
   def seedErMaster(master: DataFrame, masterDir: String): Unit =
-    master.withColumn("ingest_batch", lit(-1L))
-      .write.partitionBy("ingest_batch").mode("overwrite").parquet(masterDir)
+    Streams.writeBatch(master, masterDir, Streams.Seed)
 
   /** Streaming entity resolution against an EVOLVING master — the
     * steady-state CDC loop of [[graft.ops.EntityRes]] run as a
-    * drop-watch stream. Each micro-batch of arriving records:
-    *
-    *   1. resolves against the CURRENT master
-    *      ([[graft.ops.EntityRes.incrementalResolveAndMerges]] —
-    *      matched rows land on the post-merge cluster min, novels
-    *      become their own new cluster, `n_matches = 0` marks them
-    *      loudly);
-    *   2. appends the assignments to `outDir`;
-    *   3. accretes the NOVEL rows into `masterDir` as new entities
-    *      (cluster = own id) — so a later batch matching a past
-    *      batch's novel resolves to it (spec-pinned);
-    *   4. appends the micro-batch's master-cluster MERGE evidence to
-    *      `mergesDir` as a remap LOG — the merges come from the SAME
-    *      persisted candidate-pair plan as the assignments (the tuple
-    *      face), so the blocked join + Levenshtein (and the banded
-    *      explodes) run once per micro-batch, not twice. `mergesDir`
-    *      is seeded with an empty typed partition on first start, so
-    *      the compaction read works before any merge is logged.
+    * drop-watch stream over [[erResolveStep]]. `mergesDir` is seeded
+    * with an empty typed partition on first start, so the compaction
+    * read works before any merge is logged.
     *
     * The merge log is deliberately a log, not an in-place master
     * rewrite: applying remaps means rewriting arbitrary master
@@ -562,15 +531,12 @@ object StreamingIngest {
     * pre-merge cluster id — the assignment is still correct after
     * log-chasing, never silently wrong.
     *
-    * Idempotence: every sink write (assignments, novels, merges) is a
-    * dynamic partition OVERWRITE keyed on `ingest_batch = batchId`,
-    * so foreachBatch's at-least-once replay of a batch rewrites its
-    * own partitions byte-identically instead of duplicating — within
-    * one checkpoint lifecycle (batch ids renumber under a fresh
-    * checkpoint; same caveat as [[ivmStateStream]], here made safe by
-    * partition overwrite rather than marker-gating ONLY if the
-    * re-grouped drops land in the same partitions — reuse the
-    * checkpoint, or reseed the sinks with it).
+    * Idempotence is the [[Streams]] rule: every sink write
+    * (assignments, novels, merges) is batch `batchId`'s own
+    * partitions, so an at-least-once replay rewrites them
+    * byte-identically instead of duplicating — within one checkpoint
+    * lifecycle (batch ids renumber under a fresh checkpoint; reuse
+    * the checkpoint, or reseed the sinks with it).
     *
     * Scale shape per micro-batch: the batch-vs-master blocked join
     * (never batch×batch / master×master), pairs-sized aggregations,
@@ -594,7 +560,6 @@ object StreamingIngest {
       clusterCol: String,
       bands: Option[org.apache.spark.sql.Column] = None,
       adaptive: Boolean = false): DataStreamWriter[Row] = {
-    val raw = csvSource(spark, watchDir, schema)
     // seed the merge log with an empty TYPED partition (the
     // seedErMaster discipline): a stream whose batches never log a
     // merge would otherwise leave mergesDir footer-less (dynamic
@@ -605,7 +570,7 @@ object StreamingIngest {
     // idempotent on restart: an existing seed partition is left alone
     locally {
       import org.apache.hadoop.fs.Path
-      val seedPath = new Path(mergesDir, "ingest_batch=-1")
+      val seedPath = new Path(mergesDir, s"${Streams.BatchCol}=${Streams.Seed}")
       val fs = seedPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (!fs.exists(seedPath)) {
         val clusterType = spark.read.parquet(masterDir).schema(clusterCol).dataType
@@ -616,56 +581,76 @@ object StreamingIngest {
           .write.mode("overwrite").parquet(seedPath.toString)
       }
     }
-    def overwritePartition(df: DataFrame, dir: String, batchId: Long): Unit =
-      df.withColumn("ingest_batch", lit(batchId))
-        .write.partitionBy("ingest_batch").mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic").parquet(dir)
-    raw.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          // the master AS OF before this batch (partition-pruned):
-          // an at-least-once REPLAY must not see the crashed
-          // attempt's own novel partition, or former novels would
-          // match their own copies (n_matches 1, loudness lost) and
-          // the rewrite would not be byte-identical
-          val master = s.read.parquet(masterDir)
-            .where(col("ingest_batch") < lit(batchId))
-          // ONE persisted pair plan yields both faces — resolving and
-          // merge-logging separately would re-pay the blocked join +
-          // Levenshtein (and the banded explodes) per micro-batch,
-          // the exact ~3× double bill the batch face's sharing
-          // removed (SCALE.md round 15)
-          // adaptive: the steady-state loop is where the idle-cap
-          // price recurs — most micro-batches have NO hot block, and
-          // the eager block-count-sized hot set skips the banded arm
-          // exactly on those batches (SCALE.md round 17)
-          val (resolved, merges) = graft.ops.EntityRes.incrementalResolveAndMerges(
-            idCol, nameCol, blockCols, maxDist, maxBlock, clusterCol, bands,
-            adaptive)(batch, master)
-          overwritePartition(resolved, outDir, batchId)
-          val novelIds = resolved.where(col("n_matches") === 0L)
-            .select(col("batch_id").as(idCol))
-          val novel = batch.join(novelIds, Seq(idCol), "left_semi")
-            .withColumn(clusterCol, col(idCol))
-          overwritePartition(novel, masterDir, batchId)
-          overwritePartition(merges, mergesDir, batchId)
-          ()
-        }
-      }
+    Streams.lift(csvSource(spark, watchDir, schema), checkpointDir)(
+      erResolveStep(masterDir, outDir, mergesDir, idCol, nameCol, blockCols,
+        maxDist, maxBlock, clusterCol, bands, adaptive))
+  }
+
+  /** [[erResolveStream]]'s step. One batch of arriving records:
+    *
+    *   1. resolves against the master as of before this batch
+    *      ([[graft.ops.EntityRes.incrementalResolveAndMerges]] —
+    *      matched rows land on the post-merge cluster min, novels
+    *      become their own new cluster, `n_matches = 0` marks them
+    *      loudly);
+    *   2. writes the assignments to `outDir`;
+    *   3. accretes the NOVEL rows into `masterDir` as new entities
+    *      (cluster = own id) — so a later batch matching a past
+    *      batch's novel resolves to it (spec-pinned);
+    *   4. writes the batch's master-cluster MERGE evidence to
+    *      `mergesDir` as a remap LOG — the merges come from the SAME
+    *      persisted candidate-pair plan as the assignments (the tuple
+    *      face), so the blocked join + Levenshtein (and the banded
+    *      explodes) run once per batch, not twice.
+    */
+  def erResolveStep(
+      masterDir: String,
+      outDir: String,
+      mergesDir: String,
+      idCol: String,
+      nameCol: String,
+      blockCols: Seq[String],
+      maxDist: Int,
+      maxBlock: Long,
+      clusterCol: String,
+      bands: Option[org.apache.spark.sql.Column],
+      adaptive: Boolean)(batch: DataFrame, batchId: Long): Unit = {
+    // the master AS OF before this batch (partition-pruned): an
+    // at-least-once REPLAY must not see the crashed attempt's own
+    // novel partition, or former novels would match their own copies
+    // (n_matches 1, loudness lost) and the rewrite would not be
+    // byte-identical
+    val master = Streams.asOf(batch.sparkSession, masterDir, batchId)
+    // ONE persisted pair plan yields both faces — resolving and
+    // merge-logging separately would re-pay the blocked join +
+    // Levenshtein (and the banded explodes) per micro-batch, the
+    // exact ~3× double bill the batch face's sharing removed
+    // (SCALE.md round 15)
+    // adaptive: the steady-state loop is where the idle-cap price
+    // recurs — most micro-batches have NO hot block, and the eager
+    // block-count-sized hot set skips the banded arm exactly on
+    // those batches (SCALE.md round 17)
+    val (resolved, merges) = graft.ops.EntityRes.incrementalResolveAndMerges(
+      idCol, nameCol, blockCols, maxDist, maxBlock, clusterCol, bands,
+      adaptive)(batch, master)
+    Streams.writeBatch(resolved, outDir, batchId)
+    val novelIds = resolved.where(col("n_matches") === 0L)
+      .select(col("batch_id").as(idCol))
+    val novel = batch.join(novelIds, Seq(idCol), "left_semi")
+      .withColumn(clusterCol, col(idCol))
+    Streams.writeBatch(novel, masterDir, batchId)
+    Streams.writeBatch(merges, mergesDir, batchId)
   }
 
   /** Seed the binary store AND its chunk index before the streaming
     * loop starts — the [[seedErMaster]] discipline for
-    * [[binaryNearDupIngestStream]]: both tables get an
-    * `ingest_batch = -1` partition so the loop's as-of reads
-    * (`ingest_batch < batchId`) see the pre-stream corpus from batch
-    * 0 on, and the index read never hits a footer-less directory.
-    * `store` must carry the BINARY column `binCol`; the index is
-    * derived from it here once ([[graft.llm.Multimodal
-    * .binaryChunkIndex]]) — the only full-store chunking pass the
-    * steady state ever pays.
+    * [[binaryNearDupIngestStream]]: both tables get a
+    * [[Streams.Seed]] partition so the loop's as-of reads see the
+    * pre-stream corpus from batch 0 on, and the index read never hits
+    * a footer-less directory. `store` must carry the BINARY column
+    * `binCol`; the index is derived from it here once
+    * ([[graft.llm.Multimodal.binaryChunkIndex]]) — the only
+    * full-store chunking pass the steady state ever pays.
     */
   def seedBinaryStore(
       store: DataFrame,
@@ -692,49 +677,22 @@ object StreamingIngest {
       storeDir: String,
       indexDir: String,
       chunker: graft.llm.Multimodal.Chunker): Unit = {
-    store.withColumn("ingest_batch", lit(-1L))
-      .write.partitionBy("ingest_batch").mode("overwrite").parquet(storeDir)
-    graft.llm.Multimodal.binaryChunkIndex(binCol, idCol, chunker)(store)
-      .withColumn("ingest_batch", lit(-1L))
-      .write.partitionBy("ingest_batch").mode("overwrite").parquet(indexDir)
+    Streams.writeBatch(store, storeDir, Streams.Seed)
+    Streams.writeBatch(graft.llm.Multimodal.binaryChunkIndex(binCol, idCol, chunker)(store),
+      indexDir, Streams.Seed)
     graft.llm.Multimodal.writeChunkerTag(store.sparkSession, indexDir, chunker)
   }
 
   /** Streaming binary near-dup ingest against an EVOLVING store — the
-    * multimodal twin of [[erResolveStream]], closing the streaming
-    * family: each micro-batch of arriving rows
-    *
-    *   1. drops every binary with a CDC-chunk near-duplicate already
-    *      in the store, reading the store side from its PERSISTED
-    *      chunk index ([[graft.llm.Multimodal
-    *      .binaryIncrementalNearDupIndexed]]) — store BYTES are never
-    *      re-chunked in the loop, the exact amortization the batch
-    *      face documents;
-    *   2. near-dedups the survivors among themselves (keep-lowest,
-    *      same divisor/window/threshold/cap — one notion of "near");
-    *   3. appends the survivors to `storeDir`;
-    *   4. appends the survivors' chunk-index DELTA to `indexDir`
-    *      ([[graft.llm.Multimodal.ingestBinaryChunkIndex]]) — so the
-    *      NEXT batch's candidates include this batch's accretions,
-    *      and the index stays definitionally equal to
-    *      `binaryChunkIndex(store)` (bit-identical buckets to the
-    *      batch path; parity is spec-pinned).
+    * multimodal twin of [[erResolveStream]], run over
+    * [[binaryNearDupIngestStep]].
     *
     * The arriving CSV rows carry TEXT (`textCol`) which is encoded to
-    * the binary column inside the loop — the same harness the gate
+    * the binary column inside the step — the same harness the gate
     * queries use, because a CSV drop cannot carry raw bytes;
     * production swaps the source for a binary-bearing parquet /
     * binaryFile stream and skips the encode, nothing downstream
-    * changes. Idempotence is [[erResolveStream]]'s: every write is a
-    * dynamic partition OVERWRITE keyed on `ingest_batch = batchId`,
-    * and both as-of reads exclude the crashed attempt's own partition
-    * (`< batchId`), so an at-least-once replay rewrites its own
-    * partitions byte-identically.
-    *
-    * Scale shape per micro-batch: the batch's own chunking (twice —
-    * once inside the ingest, once for the delta; both batch-bounded),
-    * index-sized aggregations, and the cap-bounded posting join —
-    * nothing store-CONTENT-sized moves, ever.
+    * changes.
     */
   def binaryNearDupIngestStream(
       spark: SparkSession,
@@ -760,7 +718,7 @@ object StreamingIngest {
     * stream setup ([[graft.llm.Multimodal.requireChunkerTag]]) — the
     * one moment the mismatch is cheap to catch; every batch then
     * chunks with the same face that built and maintains the index.
-    * Everything else — idempotent partition overwrites, as-of reads,
+    * Everything else — idempotent batch partitions, as-of reads,
     * parity with the batch path — is face-independent (parity under
     * Gear is spec-pinned in StreamingSpec exactly like the md5 pin).
     */
@@ -777,33 +735,54 @@ object StreamingIngest {
       chunker: graft.llm.Multimodal.Chunker,
       maxDocFreq: Long): DataStreamWriter[Row] = {
     graft.llm.Multimodal.requireChunkerTag(spark, indexDir, chunker)
-    val raw = csvSource(spark, watchDir, schema)
-    def overwritePartition(df: DataFrame, dir: String, batchId: Long): Unit =
-      df.withColumn("ingest_batch", lit(batchId))
-        .write.partitionBy("ingest_batch").mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic").parquet(dir)
-    raw.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        if (!batch0.isEmpty) {
-          val s = batch0.sparkSession
-          val batch = graft.llm.Multimodal.withBinaryContent(textCol)(batch0)
-          val index = s.read.parquet(indexDir)
-            .where(col("ingest_batch") < lit(batchId))
-            .select(col(idCol), col("chunk_md5"), col("n_bytes"))
-          // survivors feed TWO sinks (store append + index delta) —
-          // batch-bounded, so the incrementalNearDedup checkpoint
-          // discipline applies rather than replaying the ingest plan
-          val survivors = graft.llm.Multimodal.binaryIncrementalNearDupIndexed(
-            "content", idCol, minJaccard, chunker, maxDocFreq)(batch, index)
-            .localCheckpoint(true)
-          overwritePartition(survivors, storeDir, batchId)
-          val delta = graft.llm.Multimodal.ingestBinaryChunkIndex(
-            "content", idCol, chunker)(survivors, index)
-          overwritePartition(delta, indexDir, batchId)
-          ()
-        }
-      }
+    Streams.lift(csvSource(spark, watchDir, schema), checkpointDir)(
+      binaryNearDupIngestStep(storeDir, indexDir, idCol, textCol, minJaccard,
+        chunker, maxDocFreq))
+  }
+
+  /** [[binaryNearDupIngestStream]]'s step. One batch of arriving rows:
+    *
+    *   1. drops every binary with a CDC-chunk near-duplicate already
+    *      in the store, reading the store side from its PERSISTED
+    *      chunk index as of before this batch ([[graft.llm.Multimodal
+    *      .binaryIncrementalNearDupIndexed]]) — store BYTES are never
+    *      re-chunked, the exact amortization the batch face
+    *      documents;
+    *   2. near-dedups the survivors among themselves (keep-lowest,
+    *      same divisor/window/threshold/cap — one notion of "near");
+    *   3. writes the survivors to `storeDir`;
+    *   4. writes the survivors' chunk-index DELTA to `indexDir`
+    *      ([[graft.llm.Multimodal.ingestBinaryChunkIndex]]) — so the
+    *      NEXT batch's candidates include this batch's accretions,
+    *      and the index stays definitionally equal to
+    *      `binaryChunkIndex(store)` (bit-identical buckets to the
+    *      batch path; parity is spec-pinned).
+    *
+    * Scale shape per batch: the batch's own chunking (twice — once
+    * inside the ingest, once for the delta; both batch-bounded),
+    * index-sized aggregations, and the cap-bounded posting join —
+    * nothing store-CONTENT-sized moves, ever.
+    */
+  def binaryNearDupIngestStep(
+      storeDir: String,
+      indexDir: String,
+      idCol: String,
+      textCol: String,
+      minJaccard: Double,
+      chunker: graft.llm.Multimodal.Chunker,
+      maxDocFreq: Long)(batch0: DataFrame, batchId: Long): Unit = {
+    val batch = graft.llm.Multimodal.withBinaryContent(textCol)(batch0)
+    val index = Streams.asOf(batch0.sparkSession, indexDir, batchId)
+      .select(col(idCol), col("chunk_md5"), col("n_bytes"))
+    // survivors feed TWO sinks (store + index delta) — batch-bounded,
+    // so the incrementalNearDedup checkpoint discipline applies rather
+    // than replaying the ingest plan
+    val survivors = graft.llm.Multimodal.binaryIncrementalNearDupIndexed(
+      "content", idCol, minJaccard, chunker, maxDocFreq)(batch, index)
+      .localCheckpoint(true)
+    Streams.writeBatch(survivors, storeDir, batchId)
+    Streams.writeBatch(graft.llm.Multimodal.ingestBinaryChunkIndex(
+      "content", idCol, chunker)(survivors, index), indexDir, batchId)
   }
 
   /** Streaming IVF index maintenance — the ANN family's steady-state
@@ -811,9 +790,10 @@ object StreamingIngest {
     * ([[binaryNearDupIngestStream]], [[erResolveStream]]): arriving
     * vectors are assigned under the PINNED model ([[graft.llm.Ivf
     * .saveModel]] discipline — training never happens in the loop)
-    * and appended into the partitioned cell layout, so
-    * [[graft.llm.Ivf.cellLayoutTopK]] sees them on its next probe
-    * with no rebuild and no loss of directory pruning.
+    * and written into the partitioned cell layout by
+    * [[ivfIngestStep]], so [[graft.llm.Ivf.cellLayoutTopK]] sees them
+    * on its next probe with no rebuild and no loss of directory
+    * pruning.
     *
     * The arriving CSV rows carry the vector as a `;`-joined string
     * (`vecTextCol`) — a CSV drop cannot carry arrays; production
@@ -821,10 +801,8 @@ object StreamingIngest {
     * downstream changes. Parse is `transform(split(·))` — per-row,
     * codegen, no UDF.
     *
-    * Idempotence is [[erResolveStream]]'s: the layout gains
-    * `ingest_batch` as a SECOND partition level under `centroid_id`
-    * and every write is a dynamic partition overwrite keyed on
-    * `ingest_batch = batchId`, so an at-least-once replay rewrites
+    * Idempotence is the [[Streams]] rule with the batch column as a
+    * SECOND partition level under `centroid_id`, so a replay rewrites
     * its own partitions byte-identically while probe reads still
     * prune on the leading `centroid_id` directory. Per micro-batch,
     * work is batch-bounded: one assign pass (k·d broadcast model) and
@@ -839,26 +817,31 @@ object StreamingIngest {
       idCol: String,
       vecTextCol: String,
       vecCol: String,
-      model: graft.llm.Ivf.IvfModel): DataStreamWriter[Row] = {
-    val raw = csvSource(spark, watchDir, schema)
-    raw.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        if (!batch0.isEmpty) {
-          val parsed = batch0.withColumn(vecCol,
-            expr(s"transform(split($vecTextCol, ';'), x -> cast(x AS double))"))
-            .select(col(idCol), col(vecCol))
-          graft.llm.Ivf.assign(parsed, idCol, vecCol, model)
-            .withColumn("ingest_batch", lit(batchId))
-            .write.partitionBy("centroid_id", "ingest_batch").mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic").parquet(layoutDir)
-          ()
-        }
-      }
-  }
+      model: graft.llm.Ivf.IvfModel): DataStreamWriter[Row] =
+    Streams.lift(csvSource(spark, watchDir, schema), checkpointDir)(
+      ivfIngestStep(layoutDir, idCol, vecTextCol, vecCol, model))
+
+  /** [[ivfIngestStream]]'s step: parse, assign, write the batch under
+    * each touched cell. */
+  def ivfIngestStep(
+      layoutDir: String,
+      idCol: String,
+      vecTextCol: String,
+      vecCol: String,
+      model: graft.llm.Ivf.IvfModel)(batch: DataFrame, batchId: Long): Unit =
+    Streams.writeBatch(
+      graft.llm.Ivf.assign(parseVectors(batch, idCol, vecTextCol, vecCol), idCol, vecCol, model),
+      layoutDir, batchId, Seq("centroid_id"))
+
+  /** The `;`-joined vector text of a CSV drop as (id, double array). */
+  private def parseVectors(
+      batch: DataFrame, idCol: String, vecTextCol: String, vecCol: String): DataFrame =
+    batch.withColumn(vecCol,
+      expr(s"transform(split($vecTextCol, ';'), x -> cast(x AS double))"))
+      .select(col(idCol), col(vecCol))
 
   /** Seed the streaming IVF layout: the pre-existing corpus written
-    * once as `ingest_batch = -1` partitions under each cell — the
+    * once as [[Streams.Seed]] partitions under each cell — the
     * [[seedBinaryStore]] shape, so stream appends and the seed are
     * indistinguishable to a probe read.
     */
@@ -868,21 +851,18 @@ object StreamingIngest {
       vecCol: String,
       model: graft.llm.Ivf.IvfModel,
       layoutDir: String): Unit =
-    graft.llm.Ivf.assign(corpus, idCol, vecCol, model)
-      .withColumn("ingest_batch", lit(-1L))
-      .write.partitionBy("centroid_id", "ingest_batch")
-      .mode("overwrite").parquet(layoutDir)
+    Streams.writeBatch(graft.llm.Ivf.assign(corpus, idCol, vecCol, model),
+      layoutDir, Streams.Seed, Seq("centroid_id"))
 
   /** Streaming maintenance of the QUANTIZED IVF layout — the
     * [[ivfIngestStream]] twin for the store the search tier actually
     * serves from ((id, scale, codes) behind cell-directory pruning):
     * arriving vectors are quantized + assigned under the PINNED model
-    * and appended as their own `ingest_batch` partitions under each
-    * touched cell. Same CSV harness, same idempotence (dynamic
-    * partition overwrite keyed on `ingest_batch = batchId`), same
-    * batch-bounded cost — the store is never read and never
-    * re-quantized in the loop. Parity with the batch append face is
-    * spec-pinned (StreamingSpec): streamed layout answers ==
+    * and written as their own batch partitions under each touched
+    * cell ([[ivfQuantIngestStep]]). Same CSV harness, same
+    * idempotence, same batch-bounded cost — the store is never read
+    * and never re-quantized in the loop. Parity with the batch append
+    * face is spec-pinned (StreamingSpec): streamed layout answers ==
     * rebuild-layout answers, probe for probe.
     */
   def ivfQuantIngestStream(
@@ -894,23 +874,21 @@ object StreamingIngest {
       idCol: String,
       vecTextCol: String,
       vecCol: String,
-      model: graft.llm.Ivf.IvfModel): DataStreamWriter[Row] = {
-    val raw = csvSource(spark, watchDir, schema)
-    raw.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        if (!batch0.isEmpty) {
-          val parsed = batch0.withColumn(vecCol,
-            expr(s"transform(split($vecTextCol, ';'), x -> cast(x AS double))"))
-            .select(col(idCol), col(vecCol))
-          graft.llm.Ivf.quantAssignedForStream(parsed, idCol, vecCol, model)
-            .withColumn("ingest_batch", lit(batchId))
-            .write.partitionBy("centroid_id", "ingest_batch").mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic").parquet(layoutDir)
-          ()
-        }
-      }
-  }
+      model: graft.llm.Ivf.IvfModel): DataStreamWriter[Row] =
+    Streams.lift(csvSource(spark, watchDir, schema), checkpointDir)(
+      ivfQuantIngestStep(layoutDir, idCol, vecTextCol, vecCol, model))
+
+  /** [[ivfQuantIngestStream]]'s step: parse, quantize + assign, write
+    * the batch under each touched cell. */
+  def ivfQuantIngestStep(
+      layoutDir: String,
+      idCol: String,
+      vecTextCol: String,
+      vecCol: String,
+      model: graft.llm.Ivf.IvfModel)(batch: DataFrame, batchId: Long): Unit =
+    Streams.writeBatch(graft.llm.Ivf.quantAssignedForStream(
+      parseVectors(batch, idCol, vecTextCol, vecCol), idCol, vecCol, model),
+      layoutDir, batchId, Seq("centroid_id"))
 
   /** Seed the streaming quantized layout — the [[seedIvfLayout]]
     * shape for the (id, scale, codes) store.
@@ -921,22 +899,18 @@ object StreamingIngest {
       vecCol: String,
       model: graft.llm.Ivf.IvfModel,
       layoutDir: String): Unit =
-    graft.llm.Ivf.quantAssignedForStream(corpus, idCol, vecCol, model)
-      .withColumn("ingest_batch", lit(-1L))
-      .write.partitionBy("centroid_id", "ingest_batch")
-      .mode("overwrite").parquet(layoutDir)
+    Streams.writeBatch(graft.llm.Ivf.quantAssignedForStream(corpus, idCol, vecCol, model),
+      layoutDir, Streams.Seed, Seq("centroid_id"))
 
   /** Streaming KN model maintenance — the LM family's steady-state
     * twin: each micro-batch of arriving TRUSTED-reference documents
-    * lands its bigram count delta as its own `ingest_batch` partition
-    * ([[graft.llm.LangModel.ingestKnModel]]), so the live model
-    * ([[graft.llm.LangModel.loadKnCounts]] — one vocab-bounded merge
-    * at read) stays definitionally equal to a from-scratch
+    * lands its bigram count delta as its own batch partition
+    * ([[graft.llm.LangModel.ingestKnModel]] is the step), so the live
+    * model ([[graft.llm.LangModel.loadKnCounts]] — one vocab-bounded
+    * merge at read) stays definitionally equal to a from-scratch
     * [[graft.llm.LangModel.refBigramCounts]] over everything ever
     * offered; counts are additive, so parity is exact, not
-    * approximate (spec-pinned, scores included). Idempotence is
-    * [[erResolveStream]]'s: the delta write is a dynamic partition
-    * overwrite keyed on `ingest_batch = batchId`. Per micro-batch
+    * approximate (spec-pinned, scores included). Per micro-batch
     * cost is batch-bounded (one explode + one vocab-bounded
     * aggregation); the store and its text are never read in the loop.
     */
@@ -946,20 +920,14 @@ object StreamingIngest {
       schema: StructType,
       modelDir: String,
       checkpointDir: String,
-      textCol: String): DataStreamWriter[Row] = {
-    val raw = csvSource(spark, watchDir, schema)
-    raw.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.llm.LangModel.ingestKnModel(batch, textCol, modelDir, batchId)
-      }
-  }
+      textCol: String): DataStreamWriter[Row] =
+    Streams.lift(csvSource(spark, watchDir, schema), checkpointDir)(
+      graft.llm.LangModel.ingestKnModel(_, textCol, modelDir, _))
 
   /** [[knModelStream]] at the production n-gram order: each
     * micro-batch lands its TWO-ORDER count delta (trigram + bigram
-    * backoff, [[graft.llm.LangModel.ingestKn3Model]]) as its own
-    * `ingest_batch` partition — same additivity, same idempotence,
+    * backoff, [[graft.llm.LangModel.ingestKn3Model]] is the step) as
+    * its own batch partition — same additivity, same idempotence,
     * same batch-bounded cost; the merged store stays definitionally
     * equal to a from-scratch build over everything ever offered
     * (spec-pinned, kn3 scores included).
@@ -970,15 +938,9 @@ object StreamingIngest {
       schema: StructType,
       modelDir: String,
       checkpointDir: String,
-      textCol: String): DataStreamWriter[Row] = {
-    val raw = csvSource(spark, watchDir, schema)
-    raw.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.llm.LangModel.ingestKn3Model(batch, textCol, modelDir, batchId)
-      }
-  }
+      textCol: String): DataStreamWriter[Row] =
+    Streams.lift(csvSource(spark, watchDir, schema), checkpointDir)(
+      graft.llm.LangModel.ingestKn3Model(_, textCol, modelDir, _))
 
   /** The whole ingest-curation stack as ONE streaming pipeline — the
     * canonical "crawl feed → training store" gate:

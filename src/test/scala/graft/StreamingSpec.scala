@@ -33,7 +33,7 @@ class StreamingSpec extends SparkSpec {
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "study_code STRING, view STRING, name STRING, score STRING")
     runToCompletion(
-      StreamingIngest.ingestStream(spark, watch, schema, "study_code", "view", store, ckpt)
+      StreamingIngest.upsertStream(spark, watch, schema, "study_code", "view", store, ckpt)
         .trigger(Trigger.AvailableNow()).start())
     val back = NestedStore.flatten(spark.read.parquet(store))
     assert(back.count() == 3)
@@ -605,7 +605,7 @@ class StreamingSpec extends SparkSpec {
     assert(compacted == Map(1L -> 10L, 2L -> 10L, 3L -> 3L, 102L -> 102L),
       s"got $compacted")
 
-    // STREAM == BATCH-REPLAY parity (the ErStreamScale tool's pin at
+    // STREAM == BATCH-REPLAY parity (the `StreamScale er` tool's pin at
     // fixture scale): replaying the identical two-batch sequence
     // through the batch faces — incrementalResolveAndMerges plus the
     // same novel accretion — reproduces the stream's assignments
