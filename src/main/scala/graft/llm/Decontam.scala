@@ -214,8 +214,8 @@ object Decontam {
   * candidates meet on the (band, band_hash) equi-join — the bench
   * side is eval-suite-sized, so AQE broadcasts it and the corpus
   * streams through — and exact Jaccard verification shingles ONLY
-  * collided docs (semi-join-scoped, the [[Dedup.nearDupPairs]]
-  * discipline). Never an all-pairs product; the oracle's all-pairs
+  * collided docs (semi-join-scoped, as in [[Dedup.nearDupPairs]]).
+  * Never an all-pairs product; the oracle's all-pairs
   * form is gate-side only, sound under the corpus-assumption spec
   * (LlmSpec pins no pairs in the banding miss zone).
   */
@@ -240,12 +240,11 @@ object MinhashDecontam {
     val bb = Dedup.lshBands(bench, idCol, textCol, numPerm, bands, shingleK)
       .toDF("bench_id", "band", "band_hash")
     // candidate pairs are consumed three times downstream (the verify
-    // join + both semi-join keep-sets) and are tiny (two ids a row) —
-    // persist so the banded join + distinct run once, the
-    // [[Dedup.nearDupPairs]] discipline
+    // join + both semi-join keep-sets); all three read the distinct's
+    // exchange (ReusedExchange), so the banded join runs once without
+    // a persist the lazy result could never release
     val cands = tb.join(bb, Seq("band", "band_hash"))
       .select("train_id", "bench_id").distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // exact verify on candidates only: shingle sets materialize for
     // the collided sliver of each side, never the whole corpus
     def sets(df: DataFrame, as: String, keep: DataFrame, keepCol: String) = df

@@ -125,27 +125,27 @@ object Dedup {
     * the Aggregate is an optimizer barrier so downstream band
     * explosion cannot re-inline the signature computation (which cost
     * a measured 30× slowdown in the expression-only form).
+    *
+    * Persists nothing (the allPairsJaccard rule: a lazily returned
+    * frame could never unpersist its cache). Consumers in one plan —
+    * the candidate self-join's probe and build sides — share the
+    * aggregate's shuffle through exchange reuse, so the shingle+hash
+    * pass runs once.
     */
   def minhashSignatures(
       df: DataFrame,
       idCol: String,
       textCol: String,
       numPerm: Int = 64,
-      shingleK: Int = 3,
-      cache: Boolean = false): DataFrame = {
+      shingleK: Int = 3): DataFrame = {
     val sh = df.select(col(idCol),
       explode(array_distinct(shingles(textCol, shingleK))).as("__sh"))
     // graft_minhash (functions/MinHashAgg.scala): one xxhash64 per
     // shingle + numPerm linear permutations in a single compact
     // aggregate buffer — vs numPerm separate min() aggs each
     // re-hashing the string
-    val sigs = sh.groupBy(col(idCol))
+    sh.groupBy(col(idCol))
       .agg(Native.minhash(col("__sh"), numPerm).as("__sig"))
-    // The candidate self-join consumes the signatures TWICE (probe +
-    // build). They're tiny relative to the corpus (id + numPerm
-    // longs ≈ 0.5 KB/doc), so persisting trades negligible memory for
-    // skipping a second full shingle+hash pass. Session-scoped.
-    if (cache) sigs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else sigs
   }
 
   /** Band hashes of a signature as an array<bigint> column: the
@@ -188,9 +188,8 @@ object Dedup {
       textCol: String,
       numPerm: Int = 64,
       bands: Int = 16,
-      shingleK: Int = 3,
-      cacheSignatures: Boolean = true): DataFrame = {
-    minhashSignatures(df, idCol, textCol, numPerm, shingleK, cacheSignatures)
+      shingleK: Int = 3): DataFrame = {
+    minhashSignatures(df, idCol, textCol, numPerm, shingleK)
       .select(col(idCol), posexplode(bandHashes(col("__sig"), numPerm, bands))
         .as(Seq("band", "band_hash")))
   }
@@ -210,10 +209,10 @@ object Dedup {
     val l = b.toDF("id_a", "band", "band_hash")
     val r = b.toDF("id_b", "band", "band_hash")
     // Unhinted: AQE picks broadcast at small scale and sort-merge at
-    // corpus scale from real size stats. Both sides read the persisted
-    // signatures (see minhashSignatures), so the shingle+hash pass
-    // runs once; forcing a shuffle join for exchange reuse instead
-    // measured slower.
+    // corpus scale from real size stats. Both sides read the one
+    // signature aggregate's shuffle (ReusedExchange), so the
+    // shingle+hash pass runs once; forcing a shuffle join for
+    // exchange reuse of the band rows as well measured slower.
     l.join(r, Seq("band", "band_hash"))
       .where(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
@@ -364,10 +363,10 @@ object Dedup {
       bands: Int = 16,
       shingleK: Int = 3): DataFrame = {
     // candidate pairs are consumed three times downstream (two semi-
-    // join id unions + the verification join) and are tiny (two ids a
-    // row) — persist so the LSH DAG runs once
+    // join id unions + the verification join); all three read the
+    // candidates' distinct exchange (ReusedExchange), so the LSH DAG
+    // runs once without a persist the lazy result could never release
     val cands = minhashCandidates(df, idCol, textCol, numPerm, bands, shingleK)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     ngramJaccard(cands, df, idCol, textCol, shingleK)
       .where(col("jaccard") >= threshold)
   }
@@ -646,8 +645,10 @@ object Dedup {
     * [[clusterSizeHistogram]] alarms on from the component side.
     */
   def graphTriangleCensus(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b"): DataFrame = {
+    // the edge distinct feeds five consumers; they share its exchange
+    // (ReusedExchange) instead of a persist the lazy result could
+    // never release
     val e = pairs.select(col(idA).as("a"), col(idB).as("b")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val verts = e.select(col("a").as("v")).unionByName(e.select(col("b").as("v")))
       .agg(countDistinct(col("v")).as("n_vertices"))
     val nEdges = e.select(count(lit(1)).as("n_edges"))
@@ -990,22 +991,18 @@ object Dedup {
     * combines map-side, vs the 64 separate sum-agg columns it
     * replaced), Aggregate barrier against re-inlining. `tokenHash`
     * defaults to xxhash64 (fastest); pass [[md5Hash60]] for
-    * engine-portable fingerprints.
+    * engine-portable fingerprints. Persists nothing: like
+    * [[minhashSignatures]], the pair self-join's two sides share the
+    * aggregate's shuffle through exchange reuse.
     */
   def simhashSignatures(
       df: DataFrame,
       idCol: String,
       textCol: String,
-      tokenHash: Column => Column = xxhash64(_),
-      cache: Boolean = false): DataFrame = {
-    val sigs = df.select(col(idCol), explode(split(col(textCol), " ")).as("__t"))
+      tokenHash: Column => Column = xxhash64(_)): DataFrame =
+    df.select(col(idCol), explode(split(col(textCol), " ")).as("__t"))
       .groupBy(col(idCol))
       .agg(Native.simhash(tokenHash(col("__t"))).as("fp"))
-    // same trade as minhashSignatures: the pair self-join reads the
-    // signatures twice, and they're 16 bytes/doc — persisting skips a
-    // second full tokenize+hash pass. Session-scoped.
-    if (cache) sigs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else sigs
-  }
 
   /** SimHash near-dup pairs: block on 16-bit fingerprint chunks
     * (pigeonhole: hamming<=3 pairs share at least one of 4 chunks),
@@ -1022,7 +1019,7 @@ object Dedup {
       textCol: String,
       maxHamming: Int = 3,
       tokenHash: Column => Column = xxhash64(_)): DataFrame = {
-    val fp = simhashSignatures(df, idCol, textCol, tokenHash, cache = true)
+    val fp = simhashSignatures(df, idCol, textCol, tokenHash)
     // the 4 chunk keys unroll to a plain array — the transform over
     // sequence(0, 3) it replaces ran through an interpreted Catalyst
     // lambda frame per row on BOTH sides of the chunk self-join
@@ -1167,28 +1164,22 @@ object Dedup {
       idCol: String,
       textCol: String,
       divisor: Int = 8): DataFrame = {
-    // the chunk table feeds BOTH the dup-set aggregation and the
-    // per-doc rollup; without a persist each side re-runs the full
-    // chunk construction (the simhashSignatures trade: cache
-    // digest+count rows — ~50 bytes/chunk, spill-capable — to skip a
-    // second corpus-wide HOF pass)
-    val chunks = cdcChunks(df, idCol, textCol, divisor)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // "≥ 2 distinct docs" ⟺ min(id) ≠ max(id): min/max partially
-    // aggregate map-side to one row per (chunk, partition) where
-    // count_distinct ships every distinct (chunk, id) pair (the
-    // duplicatedGrams r18 rewrite; identical dup set)
-    val dup = chunks.groupBy("chunk_md5")
-      .agg(min(col(idCol)).as("__lo"), max(col(idCol)).as("__hi"))
-      .filter(col("__lo") =!= col("__hi"))
-      .select(col("chunk_md5"), lit(1).as("__dup"))
-    val per = chunks.join(dup, Seq("chunk_md5"), "left")
+    // ONE consumer of the chunk table, so the corpus-wide chunking
+    // runs once with nothing persisted: "≥ 2 distinct docs" ⟺
+    // min(id) ≠ max(id) over the chunk's digest window, computed on
+    // the one digest shuffle, then the per-doc rollup. (A dup-set
+    // aggregate joined back gets no exchange reuse even over a shared
+    // repartition: column pruning and the join's inferred null filter
+    // make its exchange differ from the join side's.)
+    val byChunk = Window.partitionBy("chunk_md5")
+    val per = cdcChunks(df, idCol, textCol, divisor)
+      .withColumn("__dup", min(col(idCol)).over(byChunk) =!= max(col(idCol)).over(byChunk))
       .groupBy(col(idCol))
       .agg(
         count(lit(1)).as("__n_chunks"),
-        sum(when(col("__dup").isNotNull, 1L).otherwise(0L)).as("__dup_chunks"),
+        sum(when(col("__dup"), 1L).otherwise(0L)).as("__dup_chunks"),
         sum(col("n_words")).as("__n_words"),
-        sum(when(col("__dup").isNotNull, col("n_words")).otherwise(0L)).as("__dup_words"))
+        sum(when(col("__dup"), col("n_words")).otherwise(0L)).as("__dup_words"))
     df.select(col(idCol)).join(per, Seq(idCol), "left")
       .select(
         col(idCol),

@@ -828,31 +828,24 @@ object Multimodal {
     * in ANOTHER binary (cross-row: n_docs ≥ 2, within-row repetition
     * alone does not count). One row per SOURCE row, zero-filled, so
     * empty binaries cannot diverge from an oracle scanning the base
-    * table. Same persist trade as cdcDupCoverage: the chunk table
-    * (digest + small ints, ~50 bytes/chunk, spill-capable) feeds both
-    * the dup-set aggregation and the per-row rollup.
+    * table. Same single-consumer shape as cdcDupCoverage: the dup
+    * flag is a min/max window over the chunk digest, so the chunking
+    * runs once and nothing is persisted.
     */
   def binaryDupCoverage(
       binCol: String,
       idCol: String,
       divisor: Int = 32,
       window: Int = 8)(df: DataFrame): DataFrame = {
-    val chunks = binaryCdcChunks(binCol, idCol, divisor, window)(df)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // "≥ 2 distinct docs" ⟺ min(id) ≠ max(id) — the duplicatedGrams
-    // r18 rewrite: min/max partially aggregate map-side where
-    // count_distinct ships every distinct (chunk, id) pair
-    val dup = chunks.groupBy("chunk_md5")
-      .agg(min(col(idCol)).as("__lo"), max(col(idCol)).as("__hi"))
-      .filter(col("__lo") =!= col("__hi"))
-      .select(col("chunk_md5"), lit(1).as("__dup"))
-    val per = chunks.join(dup, Seq("chunk_md5"), "left")
+    val byChunk = org.apache.spark.sql.expressions.Window.partitionBy("chunk_md5")
+    val per = binaryCdcChunks(binCol, idCol, divisor, window)(df)
+      .withColumn("__dup", min(col(idCol)).over(byChunk) =!= max(col(idCol)).over(byChunk))
       .groupBy(col(idCol))
       .agg(
         count(lit(1)).as("__n_chunks"),
-        sum(when(col("__dup").isNotNull, 1L).otherwise(0L)).as("__dup_chunks"),
+        sum(when(col("__dup"), 1L).otherwise(0L)).as("__dup_chunks"),
         sum(col("n_bytes")).as("__n_bytes"),
-        sum(when(col("__dup").isNotNull, col("n_bytes")).otherwise(0L)).as("__dup_bytes"))
+        sum(when(col("__dup"), col("n_bytes")).otherwise(0L)).as("__dup_bytes"))
     df.select(col(idCol)).join(per, Seq(idCol), "left")
       .select(
         col(idCol),

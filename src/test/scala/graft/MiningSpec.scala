@@ -288,20 +288,6 @@ class MiningSpec extends SparkSpec {
       ("g2", "g3", 0L, 0.0)))
   }
 
-  test("vocabOverlapMatrix: the vocabulary distinct is computed once (ReusedExchange, no persist)") {
-    // the four consumers of the corpus explode + distinct must share
-    // ONE exchange — a persist here could never be unpersisted (the
-    // frame is returned lazily), and without reuse the corpus would be
-    // scanned four times
-    val docs = Seq((1L, "g1", "a b"), (2L, "g2", "b c")).toDF("doc_id", "source", "text")
-    val out = graft.llm.Drift.vocabOverlapMatrix(docs, "source", "text")
-    out.collect() // AQE resolves stage reuse at execution time
-    val plan = out.queryExecution.executedPlan.toString
-    assert(plan.contains("ReusedExchange") || plan.contains("ReusedQueryStage"),
-      s"expected a reused vocab exchange in:\n$plan")
-    assert(!plan.contains("InMemoryTableScan"), "vocabOverlapMatrix must not persist")
-  }
-
   // ===== jaccardThresholdCurve =====
 
   test("jaccardThresholdCurve: banded pair counts with at-or-above cumulative") {

@@ -13,4 +13,9 @@ object TestSession {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   def sc = spark.sparkContext
+
+  /** Whether the session's CacheManager holds no persisted plan. */
+  def cacheEmpty: Boolean = spark
+    .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    .sharedState.cacheManager.isEmpty
 }

@@ -39,10 +39,6 @@ class StudyRefreshSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       Standardized.toStandardized(study(store), ClinicalDemo.studyCode)
         .withColumn("view", lit("standardized")), out)
 
-  private def cacheEmpty: Boolean = spark
-    .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    .sharedState.cacheManager.isEmpty
-
   /** Jobs started while `body` runs, from any thread. Marker jobs in
     * their own job groups bracket it; listener events arrive in post
     * order, so once the closing marker is seen every job in between is.
