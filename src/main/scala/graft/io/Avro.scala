@@ -91,7 +91,7 @@ object Avro {
     if (driverFs.exists(root)) driverFs.delete(root, true)
     driverFs.mkdirs(root)
     // rdd plane: a per-partition binary writer is genuine imperative
-    // per-partition logic (the Sas.read rationale, sink-side).
+    // per-partition logic.
     // Task-commit protocol: each attempt writes an attempt-named temp
     // file and renames it into place only after a clean close —
     // a retried or speculative attempt can never interleave bytes

@@ -1,10 +1,10 @@
 package graft.io
 
-import java.nio.file.{Files, Paths}
-
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 
 import graft.model._
 import graft.parse.KvList
@@ -23,9 +23,12 @@ import graft.parse.KvList
   * <studyDir>/<Config>/tables/<NAME>.csv    — decision tables (lookup col + 'output')
   * }}}
   *
-  * Spark's CSV reader handles the quoting (cells legitimately contain
-  * commas — column lists, conditions); specs are worksheet-sized so
-  * collecting them driver-side IS the config plane, not a data path.
+  * The driver-side parse ([[parseCsvRows]]) handles the quoting
+  * (cells legitimately contain commas — column lists, conditions);
+  * specs are worksheet-sized, so parsing them on the driver IS the
+  * config plane, not a data path. Every path goes through the path's
+  * Hadoop `FileSystem`, so a local path, a `file:` URI and a remote
+  * store read the same way.
   */
 object ConfigReader {
 
@@ -38,12 +41,15 @@ object ConfigReader {
     * null under the default nullValue). Every `spark.read.csv` of a
     * config sheet cost TWO Spark jobs (header pass + collect) — 12 of
     * engine_study's 19 jobs were these fixed-cost config reads. The
-    * Spark-reader forms stay as PARITY REFERENCES
-    * ([[readSheetSpark]] / [[readDecisionTableSpark]]), pinned
-    * row-for-row over every fixture CSV in ConfigDifferentialSpec;
-    * the study/engine consumers are oracle-gated.
+    * file opens through its Hadoop `FileSystem` (the one
+    * [[Sas.readMeta]] uses). The Spark-reader forms stay as PARITY
+    * REFERENCES ([[readSheetSpark]] / [[readDecisionTableSpark]]),
+    * pinned row-for-row over every fixture CSV in
+    * ConfigDifferentialSpec; the study/engine consumers are
+    * oracle-gated.
     */
-  private[graft] def parseCsvRows(path: String): (Seq[String], Seq[Array[String]]) = {
+  private[graft] def parseCsvRows(
+      spark: SparkSession, path: String): (Seq[String], Seq[Array[String]]) = {
     val settings = new com.univocity.parsers.csv.CsvParserSettings
     settings.getFormat.setDelimiter(',')
     settings.getFormat.setQuote('"')
@@ -54,8 +60,10 @@ object ConfigReader {
     settings.setSkipEmptyLines(true)
     settings.setLineSeparatorDetectionEnabled(true)
     val parser = new com.univocity.parsers.csv.CsvParser(settings)
-    val all = scala.util.Using.resource(Files.newBufferedReader(
-        Paths.get(path), java.nio.charset.StandardCharsets.UTF_8)) { r =>
+    val p = new Path(path)
+    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+    val all = scala.util.Using.resource(
+        new java.io.InputStreamReader(in, java.nio.charset.StandardCharsets.UTF_8)) { r =>
       parser.parseAll(r).asScala.toSeq
     }
     require(all.nonEmpty, s"empty csv config: $path")
@@ -65,14 +73,44 @@ object ConfigReader {
     (header, all.tail)
   }
 
-  private[graft] def readSheet(spark: SparkSession, path: String): Seq[Map[String, String]] = {
-    val (cols, rows) = parseCsvRows(path)
-    rows.map { r =>
+  /** The files a config path names, sorted by path: the matches of a
+    * glob, the visible files of a directory (not its subdirectories,
+    * and not the names Spark's file listing skips — `_SUCCESS`,
+    * `.crc` files, `._COPYING_`), or the file itself; empty when
+    * nothing matches. One driver-side listing, zero Spark jobs. A path
+    * without glob characters skips Hadoop's globber (Spark's
+    * `isGlobPath` test), which costs about 0.7 ms per call on a local
+    * disk against 0.03 ms for one status lookup.
+    */
+  private[graft] def listFiles(spark: SparkSession, path: String): Seq[Path] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val matched =
+      if (path.exists("{}[]*?\\".contains(_))) Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Nil)
+      else try Seq(fs.getFileStatus(p)) catch { case _: java.io.FileNotFoundException => Nil }
+    matched.flatMap { st =>
+      if (st.isDirectory)
+        fs.listStatus(st.getPath).toSeq
+          .filter(c => c.isFile && !FooterSchema.hidden(c.getPath.getName))
+      else Seq(st)
+    }.map(_.getPath).sortBy(_.toString)
+  }
+
+  /** One config sheet: its header, and per row the non-null cells
+    * keyed by column name.
+    */
+  private[graft] def readHeadedSheet(
+      spark: SparkSession, path: String): (Seq[String], Seq[Map[String, String]]) = {
+    val (cols, rows) = parseCsvRows(spark, path)
+    (cols, rows.map { r =>
       cols.zipWithIndex.collect {
         case (c, i) if i < r.length && r(i) != null => c -> r(i)
       }.toMap
-    }
+    })
   }
+
+  private[graft] def readSheet(spark: SparkSession, path: String): Seq[Map[String, String]] =
+    readHeadedSheet(spark, path)._2
 
   /** The pre-r19 Spark-reader formulation of [[readSheet]] — the
     * executable PARITY REFERENCE for the driver-side parse.
@@ -130,7 +168,7 @@ object ConfigReader {
     }
 
   def readDecisionTable(spark: SparkSession, path: String, name: String): DecisionTable = {
-    val (cols, rows) = parseCsvRows(path)
+    val (cols, rows) = parseCsvRows(spark, path)
     val outIdx = cols.indexOf("output")
     require(outIdx >= 0, s"decision table $path has no 'output' column")
     val mapping = rows.map { r =>
@@ -156,21 +194,11 @@ object ConfigReader {
 
   /** Read one analyte's config directory (the per-analyte workbook). */
   def readAnalyte(spark: SparkSession, name: String, configDir: String): AnalyteSpec = {
-    val tablesDir = Paths.get(configDir, "tables")
     val tables: Map[String, DecisionTable] =
-      if (Files.isDirectory(tablesDir)) {
-        // Files.list holds an open directory descriptor until closed —
-        // a long-lived driver reading many configs would leak one fd
-        // per call without the Using wrapper
-        scala.util.Using.resource(Files.list(tablesDir)) { stream =>
-          stream.iterator().asScala
-            .filter(_.toString.endsWith(".csv"))
-            .map { p =>
-              val n = p.getFileName.toString.stripSuffix(".csv")
-              n -> readDecisionTable(spark, p.toString, n)
-            }.toMap
-        }
-      } else Map.empty
+      listFiles(spark, s"$configDir/tables").filter(_.getName.endsWith(".csv")).map { p =>
+        val n = p.getName.stripSuffix(".csv")
+        n -> readDecisionTable(spark, p.toString, n)
+      }.toMap
     AnalyteSpec(
       name = name,
       getData = readGetData(spark, s"$configDir/GET_DATA.csv"),

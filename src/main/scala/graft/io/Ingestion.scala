@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Hadoop `Configuration` is not `Serializable` (and Spark's
   * serializable wrapper is private[spark]), so native readers/writers
   * that need the conf on executors ship its entries and rebuild per
-  * partition. Shared by [[Sas]] and [[Avro]].
+  * partition. Shared by the sas7bdat scan and [[Avro]].
   */
 private[io] object HadoopConfSer {
   def entries(spark: SparkSession): Array[(String, String)] = {
@@ -39,16 +39,16 @@ object Ingestion {
     * write stringifies, and inference would make a NaN-free numeric
     * column sort numerically where the pinned pipeline sorts its
     * stringified form — the gate's oracles replay the all-string
-    * shape. SAS7BDAT goes through the native [[Sas]] page reader (the
-    * reference uses pd.read_sas); anything else fails loudly like the
-    * reference.
+    * shape. SAS7BDAT goes through the native `sas7bdat` DataSource V2
+    * scan ([[SasDataSource]]; the reference uses pd.read_sas); anything
+    * else fails loudly like the reference.
     */
   def readFile(spark: SparkSession, path: String): DataFrame =
     path.toLowerCase match {
       case p if p.endsWith(".csv") =>
         spark.read.option("header", "true").option("inferSchema", "false").csv(path)
       case p if p.endsWith(".parquet") => spark.read.parquet(path)
-      case p if p.endsWith(".sas7bdat") => Sas.read(spark, path)
+      case p if p.endsWith(".sas7bdat") => spark.read.format("sas7bdat").load(path)
       case other =>
         throw new IllegalArgumentException(s"We cannot handle this file format! ($other)")
     }
@@ -64,18 +64,12 @@ object Ingestion {
     * view id from the file's base name, source timestamp parsed from
     * the name when present, load timestamp at ingestion time. Driven
     * by input_file_name() so it stays correct when one job reads many
-    * files; `fallbackPath` covers sources that are NOT FileScans
-    * (the RDD-backed [[Sas.read]]), where input_file_name() returns
-    * '' on every row and the metadata would silently store empty
-    * view ids — which later nest into __HIVE_DEFAULT_PARTITION__
-    * keys [[NestedStore.erase]] refuses.
+    * files. Every source [[readFile]] returns is a file scan that
+    * reports its file (the `sas7bdat` scan included), so no row reads
+    * an empty name.
     */
-  def withFileMetadata(df: DataFrame, fallbackPath: Option[String] = None): DataFrame = {
-    val src = fallbackPath match {
-      case Some(p) => when(input_file_name() === "", lit(p)).otherwise(input_file_name())
-      case None => input_file_name()
-    }
-    val fname = regexp_extract(src, "([^/]+)$", 1)
+  def withFileMetadata(df: DataFrame): DataFrame = {
+    val fname = regexp_extract(input_file_name(), "([^/]+)$", 1)
     df.withColumn("source_file", fname)
       .withColumn("view_id", regexp_extract(fname, "^([^._]+)", 1))
       .withColumn("source_timestamp", regexp_extract(fname, "_(\\d{8,14})\\.", 1))
@@ -96,7 +90,7 @@ object Ingestion {
       k1: String,
       k2: String,
       storeDir: String): Unit = {
-    val df = withFileMetadata(nullFill(readFile(spark, path)), fallbackPath = Some(path))
+    val df = withFileMetadata(nullFill(readFile(spark, path)))
     NestedStore.upsert(NestedStore.nest(df, k1, k2), storeDir, k1, k2)
   }
 

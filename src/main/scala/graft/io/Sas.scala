@@ -1,7 +1,7 @@
 package graft.io
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 
 /** Native SAS7BDAT source — the reference ingests `.sas7bdat` through
@@ -19,10 +19,11 @@ import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructTy
   * ranges in parallel, each seeking straight to its first page —
   * pages are fixed-size and self-describing, so a 100 GB .sas7bdat
   * splits across a cluster exactly like a parquet row-group range,
-  * with no driver materialization anywhere. (An RDD underlies the
-  * page fan-out: a binary page parser is genuine per-partition
-  * imperative logic; the result is immediately a DataFrame so
-  * everything downstream stays declarative.)
+  * with no driver materialization anywhere. The one read path is the
+  * DataSource V2 scan ([[SasDataSource]],
+  * `spark.read.format("sas7bdat")`): page ranges are its input
+  * partitions, pruned columns reach the page parser, and each
+  * partition reports its file to `input_file_name()`.
   *
   * Type mapping mirrors `pd.read_sas`: SAS numerics (3-8 byte
   * truncated IEEE doubles, most-significant bytes kept) widen to
@@ -414,8 +415,8 @@ object Sas {
     * (data/mix pages) or a freshly decompressed row image (per-row
     * subheaders on compressed files' meta pages, decompressed when
     * shorter than the row length, stored raw otherwise —
-    * pd.read_sas's rule). Shared by the all-column Row materializer
-    * ([[read]]) and the column-pruned scan ([[SasDataSource]]).
+    * pd.read_sas's rule). The DSv2 scan ([[SasDataSource]]) decodes
+    * its pruned columns out of these images.
     */
   private[io] def pageRowImages(page: Array[Byte], meta: SasMeta): Iterator[(Array[Byte], Int)] = {
     val pr = new ByteReader(page, meta.littleEndian)
@@ -487,12 +488,6 @@ object Sas {
       (aligned, Seq(meta.mixPageRowCount, meta.rowCount, capacity).min)
     } else (0, 0L)
 
-  /** Parse the rows of ONE page (all columns, external Row form). */
-  private def pageRows(page: Array[Byte], meta: SasMeta): Iterator[Row] = {
-    val charset = java.nio.charset.Charset.forName(meta.encoding)
-    pageRowImages(page, meta).map { case (buf, base) => rowFrom(buf, base, meta, charset) }
-  }
-
   /** Width-w SAS numeric at `off` (most-significant bytes kept) —
     * the [[ByteReader.sasDouble]] logic as a static method for the
     * per-cell hot path.
@@ -512,16 +507,15 @@ object Sas {
 
   /** Decode ONE column of a fixed-width row image; null for SAS
     * missing numerics, trailing space/NUL pad stripped from strings.
-    * Shared by the all-column Row path and the column-pruned
-    * [[SasDataSource]] scan.
+    * The DSv2 scan calls it once per selected column per row.
     */
   private[io] def decodeCol(
       buf: Array[Byte], base: Int, c: SasColumn, meta: SasMeta,
       charset: java.nio.charset.Charset): Any = {
     val off = base + c.offset.toInt
     if (c.isNumeric) {
-      // static decode — this is the innermost per-row/per-column loop
-      // of both scan paths, so no per-cell reader allocation
+      // static decode — this is the scan's innermost per-row/per-column
+      // loop, so no per-cell reader allocation
       val d = sasDoubleAt(buf, meta.littleEndian, off, c.length)
       if (java.lang.Double.isNaN(d)) null else d // SAS missing -> Spark null
     } else {
@@ -530,44 +524,6 @@ object Sas {
       while (end > 0 && (s(end - 1) == ' ' || s(end - 1) == '\u0000')) end -= 1
       s.substring(0, end)
     }
-  }
-
-  /** Decode one fixed-width row image starting at `base` in `buf`. */
-  private def rowFrom(
-      buf: Array[Byte], base: Int, meta: SasMeta,
-      charset: java.nio.charset.Charset): Row =
-    Row.fromSeq(meta.columns.map(c => decodeCol(buf, base, c, meta, charset)))
-
-  /** Read a .sas7bdat into a DataFrame: one bounded driver-side
-    * metadata parse, then executors each parse a disjoint page range
-    * (seek + fixed-size reads — splittable like parquet row groups).
-    */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val meta = readMeta(spark, path)
-    // hadoop Configuration is not serializable; ship the entries and
-    // rebuild per partition ([[HadoopConfSer]], shared with Avro)
-    val confBc = spark.sparkContext.broadcast(HadoopConfSer.entries(spark))
-    val parallelism = math.max(1L,
-      math.min(meta.pageCount, spark.sparkContext.defaultParallelism.toLong)).toInt
-    val overrides = rowCountOverrides(spark, path, meta)
-    val rows = spark.sparkContext
-      .range(0L, meta.pageCount, numSlices = parallelism)
-      .mapPartitions { pages =>
-        val conf = HadoopConfSer.rebuild(confBc.value)
-        val p = new Path(path)
-        val fs = p.getFileSystem(conf)
-        val in = fs.open(p)
-        Option(org.apache.spark.TaskContext.get())
-          .foreach(_.addTaskCompletionListener[Unit](_ => in.close()))
-        val buf = new Array[Byte](meta.pageLength)
-        pages.flatMap { pi =>
-          in.readFully(meta.headerLength + pi * meta.pageLength, buf)
-          val it = pageRows(buf, meta)
-          overrides.get(pi).map(it.take).getOrElse(it)
-            .toVector // buf is reused: materialize the page's rows
-        }
-      }
-    spark.createDataFrame(rows, meta.schema)
   }
 
   /** Count the data rows of ONE page without decompressing or
@@ -598,10 +554,11 @@ object Sas {
     * the CRC'd prefix) but CAN still add or drop physical rows on
     * trailing pages, leaving a stale cached census; accepted as
     * strictly narrower than the pre-fingerprint (path,mtime,length)
-    * blind spot, which also missed rowsize/row_count rewrites. A static file pays the census job ONCE per driver, not
-    * once per `Sas.read` call / per DSv2 DataFrame (for compressed
-    * files the uncached census re-reads the whole file — 2× I/O per
-    * read on the overwhelmingly common well-formed case).
+    * blind spot, which also missed rowsize/row_count rewrites. A static
+    * file pays the census job ONCE per driver, not once per
+    * `format("sas7bdat")` load (for compressed files the uncached
+    * census re-reads the whole file — 2× I/O per read on the
+    * overwhelmingly common well-formed case).
     * Access-ordered and bounded so a long-lived driver scanning many
     * files cannot grow it without bound; entries are
     * page-index→take-limit maps, empty for well-formed files, so

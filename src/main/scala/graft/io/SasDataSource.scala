@@ -10,23 +10,24 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.execution.datasources.InputFileBlock
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** DataSource V2 face of the native sas7bdat reader —
-  * `spark.read.format("sas7bdat").load(path)`. Where [[Sas.read]] is
-  * the RDD-backed all-column reader, this is the scan Spark can
-  * OPTIMIZE: required columns are pushed into the page parser
-  * (`SupportsPushDownRequiredColumns` — a 2-column projection of a
-  * 300-column clinical export decodes 2 column slices per row, and
-  * `.explain` shows the pruned ReadSchema on the scan node), and page
-  * ranges surface as real `InputPartition`s, so Spark's scheduler —
-  * not an RDD split — owns locality and task sizing, exactly as it
-  * does for parquet row groups. Same driver/executor split as
-  * [[Sas.read]]: metadata parses once on the driver, each partition
-  * seeks straight to its page range.
+/** The sas7bdat read path — `spark.read.format("sas7bdat").load(path)`,
+  * the one way graft reads a SAS file ([[Ingestion.readFile]] and the
+  * registry both go through it). Required columns are pushed into the
+  * page parser (`SupportsPushDownRequiredColumns` — a 2-column
+  * projection of a 300-column clinical export decodes 2 column slices
+  * per row, and `.explain` shows the pruned ReadSchema on the scan
+  * node), and page ranges surface as real `InputPartition`s, so
+  * Spark's scheduler owns locality and task sizing, exactly as it does
+  * for parquet row groups. [[Sas.readMeta]] parses the metadata once on
+  * the driver; each partition seeks straight to its page range and
+  * reports its file to `input_file_name()`, as Spark's own file scans
+  * do.
   */
 class SasDataSource extends TableProvider with DataSourceRegister {
 
@@ -168,6 +169,8 @@ private[io] case class SasReaderFactory(
   * image (compressed rows still decompress whole — the format stores
   * them row-wise — but per-column string/double materialization is
   * skipped for unselected columns, the dominant cost on wide tables).
+  * Like Spark's `FilePartitionReader`, it records its file and byte
+  * range for `input_file_name()` while it is open.
   */
 private[io] class SasPartitionReader(
     path: String,
@@ -183,9 +186,11 @@ private[io] class SasPartitionReader(
     throw new IllegalArgumentException(s"sas7bdat $path has no column '$n'")))
   private val charset = java.nio.charset.Charset.forName(meta.encoding)
 
-  private val fs = new org.apache.hadoop.fs.Path(path)
-    .getFileSystem(HadoopConfSer.rebuild(confEntries))
-  private val in = fs.open(new org.apache.hadoop.fs.Path(path))
+  private val file = new org.apache.hadoop.fs.Path(path)
+  private val fs = file.getFileSystem(HadoopConfSer.rebuild(confEntries))
+  private val in = fs.open(file)
+  InputFileBlock.set(fs.makeQualified(file).toUri.toString,
+    meta.headerLength + startPage * meta.pageLength, (endPage - startPage) * meta.pageLength)
   private val pageBuf = new Array[Byte](meta.pageLength)
   private var page = startPage
   private var rows: Iterator[(Array[Byte], Int)] = Iterator.empty
@@ -214,5 +219,8 @@ private[io] class SasPartitionReader(
   }
 
   override def get(): InternalRow = current
-  override def close(): Unit = in.close()
+  override def close(): Unit = {
+    InputFileBlock.unset()
+    in.close()
+  }
 }

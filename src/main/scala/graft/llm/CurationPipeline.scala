@@ -32,45 +32,49 @@ object CurationPipeline {
   /** Load a recipe from a CSV config: header `op,params`, one stage
     * per row in order, params as `key=value` pairs separated by `;`
     * (values may contain commas — stop lists, blocklists). The
-    * file-config face of [[run]], mirroring
-    * [[graft.io.ConfigReader]]'s worksheet discipline: config reads
-    * are driver-side and worksheet-sized, and malformed params fail
-    * loudly with the offending row.
+    * file-config face of [[run]], read like every other config sheet:
+    * [[graft.io.ConfigReader.listFiles]] lists what `path` names (a
+    * file, a directory or a glob) and each file is parsed on the
+    * driver by [[graft.io.ConfigReader]] — zero Spark jobs. Every file
+    * must carry the same header. Stage ORDER is load-bearing (a
+    * reordered safety stage is a silent semantics change), so when
+    * more than one file contributes rows an explicit `seq` column must
+    * make the order data; within one file, file order holds, and `seq`
+    * is honored whenever present. The rule counts files, so it holds
+    * under every session layout. Malformed params fail loudly with the
+    * offending row.
     */
   def readRecipe(
       spark: org.apache.spark.sql.SparkSession,
       path: String): Seq[Stage] = {
-    val fsPath = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.isRegularFile(fsPath)) {
-      // single worksheet file: the driver-side config parse
-      // ([[graft.io.ConfigReader.parseCsvRows]] — zero Spark jobs,
-      // the r19 config-plane discipline); row order is file order by
-      // construction, so the multi-partition seq guard below cannot
-      // apply (seq still honored when present). Parity pinned against
-      // [[readRecipeSpark]] on the fixture recipes in
-      // ConfigDifferentialSpec.
-      val (cols, raw) = graft.io.ConfigReader.parseCsvRows(path)
-      val maps = raw.map(r => cols.zipWithIndex.collect {
-        case (c, i) if i < r.length && r(i) != null => c -> r(i)
-      }.toMap)
-      stagesFromRows(path, cols.toSet, maps)
-    } else readRecipeSpark(spark, path)
+    import graft.io.ConfigReader
+    val files = ConfigReader.listFiles(spark, path)
+    require(files.nonEmpty, s"recipe $path: no file found")
+    val sheets = files.map(f => ConfigReader.readHeadedSheet(spark, f.toString))
+    val header = sheets.head._1
+    files.zip(sheets).foreach { case (f, (h, _)) =>
+      require(h == header, s"recipe $path: $f has header ${h.mkString(",")}, " +
+        s"but ${files.head} has ${header.mkString(",")}")
+    }
+    val contributing = sheets.count(_._2.nonEmpty)
+    require(header.contains("seq") || contributing <= 1,
+      s"recipe $path: $contributing files contribute stages; add a 'seq' column to pin stage order")
+    stagesFromRows(path, header.toSet, sheets.flatMap(_._2))
   }
 
-  /** The Spark-reader formulation of [[readRecipe]] — still the LIVE
-    * path for recipe DIRECTORIES / globs (where the multi-partition
-    * seq contract applies), and the executable PARITY REFERENCE for
-    * the single-file driver-side parse.
+  /** The Spark-reader formulation of [[readRecipe]] — the executable
+    * PARITY REFERENCE for the driver-side parse, pinned stage-for-stage
+    * over the fixture recipes in ConfigDifferentialSpec. No live path
+    * calls it: recipe directories and globs go through the driver
+    * listing too.
     */
   private[graft] def readRecipeSpark(
       spark: org.apache.spark.sql.SparkSession,
       path: String): Seq[Stage] = {
     val df = spark.read.option("header", "true").csv(path)
-    // stage ORDER is load-bearing (a reordered safety stage is a
-    // silent semantics change), and Spark preserves CSV row order only
-    // incidentally for a single small file. An explicit `seq` column
-    // makes the order DATA: required whenever the read spans more than
-    // one partition (recipe directories, split files), honored always.
+    // Spark preserves CSV row order only incidentally for a single
+    // small file, so a read spanning more than one partition needs
+    // an explicit `seq` column
     require(df.columns.contains("seq") || df.rdd.getNumPartitions <= 1,
       s"recipe $path spans multiple partitions; add a 'seq' column to pin stage order")
     val cols = df.columns

@@ -180,8 +180,7 @@ object LangModel {
       idCol: String,
       textCol: String,
       discount: Double = 0.75,
-      fpScale: Double = 1e6,
-      broadcastModel: Boolean = true): DataFrame = {
+      fpScale: Double = 1e6): DataFrame = {
     require(discount > 0 && discount < 1, s"discount in (0,1), got $discount")
     val (hist, cont, types) = knTables(refBigrams)
     // model tables are reference-VOCAB-bounded (constant under corpus
@@ -189,9 +188,7 @@ object LangModel {
     // broadcast them so the corpus-side explode is literally one pass
     // — no shuffle of doc bigrams for each model join (guide §3.1; the
     // r18 plan paid 3 SortMergeJoins = 3 exchanges of the exploded
-    // corpus). `broadcastModel = false` is the escape hatch for a
-    // reference whose vocab outgrows executor memory.
-    def m(t: DataFrame) = if (broadcastModel) broadcast(t) else t
+    // corpus)
 
     val docBigrams = df.select(col(idCol), explode(
         Dedup.shinglesOf(coalesce(col(textCol).cast("string"), lit("")), 2)).as("__bg"))
@@ -204,9 +201,9 @@ object LangModel {
       d * coalesce(col("__n1l"), lit(0L)).cast("double") * pcont) /
       col("__c1").cast("double")
     val scored = docBigrams
-      .join(m(refBigrams), Seq("__bg"), "left")
-      .join(m(hist), Seq("__w1"), "left")
-      .join(m(cont), Seq("__w2"), "left")
+      .join(broadcast(refBigrams), Seq("__bg"), "left")
+      .join(broadcast(hist), Seq("__w1"), "left")
+      .join(broadcast(cont), Seq("__w2"), "left")
       .crossJoin(broadcast(types))
       .withColumn("__lp_fp",
         floor(log(when(coalesce(col("__c1"), lit(0L)) > 0, pSeen).otherwise(pcont))
@@ -272,13 +269,11 @@ object LangModel {
       idCol: String,
       textCol: String,
       discount: Double = 0.75,
-      fpScale: Double = 1e6,
-      broadcastModel: Boolean = true): DataFrame = {
+      fpScale: Double = 1e6): DataFrame = {
     require(discount > 0 && discount < 1, s"discount in (0,1), got $discount")
     val (hist, cont, types) = knTables(refBigrams)
     // same broadcast-the-model contract as [[withKnScoreFromCounts]]:
     // all five model tables are reference-vocab-bounded
-    def m(t: DataFrame) = if (broadcastModel) broadcast(t) else t
     def w3of(sp: Column) = element_at(sp, -1)
     def w2of(sp: Column) = when(size(sp) >= 2, element_at(sp, -2)).otherwise(lit(""))
     def h2of(sp: Column) =
@@ -308,11 +303,11 @@ object LangModel {
       col("__c2h").cast("double")
     val p3 = when(coalesce(col("__c2h"), lit(0L)) > 0, p3seen).otherwise(p2)
     val scored = docTri
-      .join(m(tri), Seq("__g3"), "left")
-      .join(m(hist3), Seq("__h2"), "left")
-      .join(m(refBigrams), Seq("__bg"), "left")
-      .join(m(hist.withColumnRenamed("__w1", "__w2")), Seq("__w2"), "left")
-      .join(m(cont.withColumnRenamed("__w2", "__w3")), Seq("__w3"), "left")
+      .join(broadcast(tri), Seq("__g3"), "left")
+      .join(broadcast(hist3), Seq("__h2"), "left")
+      .join(broadcast(refBigrams), Seq("__bg"), "left")
+      .join(broadcast(hist.withColumnRenamed("__w1", "__w2")), Seq("__w2"), "left")
+      .join(broadcast(cont.withColumnRenamed("__w2", "__w3")), Seq("__w3"), "left")
       .crossJoin(broadcast(types))
       .withColumn("__lp_fp",
         floor(log(p3) * lit(fpScale) + lit(0.5)).cast("long"))

@@ -278,8 +278,8 @@ private[graft] object EngineStoreQueries {
     // pd.read_sas's independent rdc_decompress before commit
     "s5_sas_rdc" -> ((s, _) =>
       graft.io.Ingestion.readFile(s, Fixtures.path("sas/graft_fixture_rdc.sas7bdat"))),
-    // the DataSource V2 face: required-column pushdown reaches the
-    // page parser (only the selected slices decode per row) and page
+    // a pruned read: required-column pushdown reaches the page
+    // parser (only the selected slices decode per row) and page
     // ranges surface as Spark-planned InputPartitions
     "s5_sas_dsv2" -> ((s, _) =>
       s.read.format("sas7bdat")
@@ -290,24 +290,24 @@ private[graft] object EngineStoreQueries {
     // every small real-world export), and windows-1252 text with
     // non-ASCII characters; all pd.read_sas-validated fixtures
     "s5_sas_variants" -> ((s, _) =>
-      graft.io.Sas.read(s, Fixtures.path("sas/graft_fixture_32le.sas7bdat"))
+      s.read.format("sas7bdat").load(Fixtures.path("sas/graft_fixture_32le.sas7bdat"))
         .withColumn("variant", lit("32le"))
         .unionByName(
-          graft.io.Sas.read(s, Fixtures.path("sas/graft_fixture_64be.sas7bdat"))
+          s.read.format("sas7bdat").load(Fixtures.path("sas/graft_fixture_64be.sas7bdat"))
             .withColumn("variant", lit("64be")))
         .unionByName(
-          graft.io.Sas.read(s, Fixtures.path("sas/graft_fixture_mix.sas7bdat"))
+          s.read.format("sas7bdat").load(Fixtures.path("sas/graft_fixture_mix.sas7bdat"))
             .withColumn("variant", lit("mix")))
         .unionByName(
-          graft.io.Sas.read(s, Fixtures.path("sas/graft_fixture_w1252.sas7bdat"))
+          s.read.format("sas7bdat").load(Fixtures.path("sas/graft_fixture_w1252.sas7bdat"))
             .withColumn("variant", lit("w1252")))),
     // pd.read_sas parity on files shortened in place: both fixtures
     // declare row_count=100 but physically carry stale trailing rows
     // (105 RLE subheaders / 110 inline rows); the decode-free census
-    // truncates at exactly 100 on both read paths — pandas-validated
+    // truncates both at exactly 100 — pandas-validated
     // at fixture generation (tools/make_sas_fixture.py)
     "s5_sas_stale" -> ((s, _) =>
-      graft.io.Sas.read(s, Fixtures.path("sas/graft_fixture_rle_stale.sas7bdat"))
+      s.read.format("sas7bdat").load(Fixtures.path("sas/graft_fixture_rle_stale.sas7bdat"))
         .select("id", "val", "name").withColumn("variant", lit("rle"))
         .unionByName(
           s.read.format("sas7bdat")

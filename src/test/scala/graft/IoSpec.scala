@@ -238,16 +238,35 @@ class IoSpec extends SparkSpec {
     assert(NestedStore.flatten(spark.read.parquet(s"$store/project=p1/Folder=f9")).count() == 1)
   }
 
-  test("withFileMetadata falls back to the explicit path for non-FileScan sources (sas7bdat)") {
+  test("readStudy over a file: URI equals the plain-path read") {
+    val plain = ConfigReader.readStudy(spark, "fixtures/clinical_study")
+    val uri = java.nio.file.Paths.get("fixtures/clinical_study").toAbsolutePath
+      .toUri.toString.stripSuffix("/")
+    assert(uri.startsWith("file:"), uri)
+    assert(ConfigReader.readStudy(spark, uri) == plain)
+    // the tables/ listing is part of what is compared
+    assert(plain.analytes.map(_.decisionTables.size).sum == 4)
+  }
+
+  test("sas7bdat scan reports its file to input_file_name(); ingest stores view 'graft'") {
     import graft.io.Ingestion
-    // Sas.read is RDD-backed: input_file_name() is '' on every row, so
-    // without the fallback the metadata silently stores empty view ids
     val f = "fixtures/sas/graft_fixture.sas7bdat"
-    val md = Ingestion.withFileMetadata(graft.io.Sas.read(spark, f), fallbackPath = Some(f))
+    val names = spark.read.format("sas7bdat").load(f)
+      .select(input_file_name()).distinct().collect().map(_.getString(0)).toSeq
+    assert(names.length == 1 && names.head.startsWith("file:") &&
+      names.head.endsWith("/graft_fixture.sas7bdat"), names)
+    // so the file metadata needs no fallback: every row names the file
+    val md = Ingestion.withFileMetadata(Ingestion.readFile(spark, f))
       .select("source_file", "view_id").distinct().collect()
-    assert(md.length == 1)
-    assert(md.head.getString(0) == "graft_fixture.sas7bdat")
-    assert(md.head.getString(1) == "graft")
+      .map(r => (r.getString(0), r.getString(1))).toSeq
+    assert(md == Seq(("graft_fixture.sas7bdat", "graft")))
+    val store = Files.createTempDirectory("graft_ingest_sas").toString + "/store"
+    Ingestion.ingestFile(spark, f, "view_id", "source_file", store)
+    val back = NestedStore.flatten(spark.read.parquet(store))
+    assert(back.count() == 100)
+    assert(back.select("view_id", "source_file").distinct().collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq ==
+      Seq(("graft", "graft_fixture.sas7bdat")))
   }
 
   test("ORC roundtrip is lossless and the scan takes pushed filters + pruned columns") {

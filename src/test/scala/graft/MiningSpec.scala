@@ -169,6 +169,49 @@ class MiningSpec extends SparkSpec {
     assert(e.getMessage.contains("duplicate seq"))
   }
 
+  test("recipe directory: seq orders stages across files under every layout") {
+    import graft.llm.CurationPipeline
+    val dir = SparkEntry.cleanedTempDir("recipe_dir_")
+    def write(rel: String, body: String): Unit = {
+      val p = java.nio.file.Paths.get(s"$dir/$rel")
+      java.nio.file.Files.createDirectories(p.getParent)
+      java.nio.file.Files.write(p, body.getBytes)
+    }
+    // the stage order must not follow how Spark would pack the files
+    // into partitions: minPartitionNum=1 packs both into one
+    def withMinPartitions[T](n: Int)(body: => T): T = {
+      val key = "spark.sql.files.minPartitionNum"
+      val old = spark.conf.getOption(key)
+      spark.conf.set(key, n.toString)
+      try body finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    write("noseq/a.csv", "op,params\nQUALITY FILTER,\n")
+    write("noseq/b.csv", "op,params\nEXACT DEDUP,\nHASH SPLIT,val_pct=5\n")
+    withMinPartitions(1) {
+      val e = intercept[IllegalArgumentException] {
+        CurationPipeline.readRecipe(spark, s"$dir/noseq")
+      }
+      assert(e.getMessage.contains(s"$dir/noseq") && e.getMessage.contains("seq"), e.getMessage)
+    }
+    write("seq/a.csv", "op,params,seq\nQUALITY FILTER,,1\nHASH SPLIT,val_pct=5,4\n")
+    write("seq/b.csv", "op,params,seq\nEXACT DEDUP,,2\nBLOCKLIST FILTER,terms=slow,3\n")
+    write("seq/_SUCCESS", "")
+    for (n <- Seq(1, 4)) withMinPartitions(n) {
+      assert(CurationPipeline.readRecipe(spark, s"$dir/seq").map(_.op) ==
+        Seq("QUALITY FILTER", "EXACT DEDUP", "BLOCKLIST FILTER", "HASH SPLIT"), s"minPartitionNum=$n")
+    }
+    // a glob lists the same files
+    assert(CurationPipeline.readRecipe(spark, s"$dir/seq/*.csv") ==
+      CurationPipeline.readRecipe(spark, s"$dir/seq"))
+    // a file whose header differs from the others fails, naming it
+    write("mixed/a.csv", "op,params,seq\nQUALITY FILTER,,1\n")
+    write("mixed/b.csv", "op,seq\nEXACT DEDUP,2\n")
+    val e = intercept[IllegalArgumentException] {
+      CurationPipeline.readRecipe(spark, s"$dir/mixed")
+    }
+    assert(e.getMessage.contains("b.csv") && e.getMessage.contains("header"), e.getMessage)
+  }
+
   test("SPAN CUT stage removes duplicated spans in place; composes with EXACT DEDUP") {
     import graft.llm.CurationPipeline
     import graft.llm.CurationPipeline.Stage

@@ -16,8 +16,8 @@ import graft.io.Sas
   * 32/64-bit and endianness flags, header-declared page size, meta
   * pages carrying rowsize/colsize/text/colname/colattrs subheaders,
   * fixed-width rows on data and mix pages, per-row RLE/RDC subheaders
-  * on compressed files) and read back through BOTH faces — `Sas.read`
-  * and the DSv2 `sas7bdat` source — against the in-memory model.
+  * on compressed files) and read back through the DSv2 `sas7bdat`
+  * scan — full and column-pruned — against the in-memory model.
   *
   * Randomized per case: word size (32/64-bit), endianness, header
   * alignment flag, encoding (UTF-8 / ISO-8859-1 / windows-1252),
@@ -518,7 +518,7 @@ class SasDifferentialSpec extends SparkSpec {
 
   private val cases: Int = sys.env.getOrElse("GRAFT_SAS_DIFF_CASES", "60").toInt
 
-  test("sas7bdat differential: random files round-trip through Sas.read and DSv2") {
+  test("sas7bdat differential: random files round-trip through the DSv2 scan") {
     val prop = Prop.forAll(fileGen) { case (f, seed) =>
       val dir = Files.createTempDirectory("graft_sasdiff_")
       val file = dir.resolve("t.sas7bdat")
@@ -527,7 +527,8 @@ class SasDifferentialSpec extends SparkSpec {
         val meta = Sas.readMeta(spark, file.toString)
         val schemaOk = meta.schema.fields.map(x => (x.name, x.dataType.typeName)).toVector ==
           f.cols.map(c => (c.name, if (c.numeric) "double" else "string"))
-        val got = Sas.read(spark, file.toString).collect()
+        val dsv2 = spark.read.format("sas7bdat").load(file.toString)
+        val got = dsv2.collect()
           .map(_.toSeq.toVector).sortBy(r => r(0).asInstanceOf[Double])
         // the reader's contract: exactly the first `declared` rows in
         // page order, regardless of stale tails / inflated mix counts
@@ -537,8 +538,7 @@ class SasDifferentialSpec extends SparkSpec {
           case s => s
         })
         val readOk = got.toVector == want
-        // the DSv2 face over the same bytes, with column pruning
-        val dsv2 = spark.read.format("sas7bdat").load(file.toString)
+        // the same scan with column pruning
         val dsv2Ok = dsv2.count() == want.size && {
           val ids = dsv2.select(f.cols.head.name).collect()
             .map(_.getDouble(0)).sorted.toVector

@@ -11,6 +11,14 @@ class SasSpec extends SparkSpec {
 
   private val fixture = "fixtures/sas/graft_fixture.sas7bdat"
 
+  /** The one SAS read path: the DSv2 `sas7bdat` scan. */
+  private def sas(f: String) = spark.read.format("sas7bdat").load(f)
+
+  /** The closed-form `(id, val, name)` of fixture row `i`. */
+  private def assertBaseRow(r: org.apache.spark.sql.Row, i: Int, ctx: String = ""): Unit =
+    assert(r.getDouble(0) == i.toDouble && r.getDouble(1) == i * 0.25 &&
+      r.getString(2) == f"row_$i%03d", s"$ctx row $i: $r")
+
   test("metadata: 64-bit LE header, 3 columns, 100 rows, multi-page") {
     val m = Sas.readMeta(spark, fixture)
     assert(m.u64 && m.littleEndian)
@@ -21,7 +29,7 @@ class SasSpec extends SparkSpec {
   }
 
   test("full read matches the closed-form contents pd.read_sas validated") {
-    val df = Sas.read(spark, fixture)
+    val df = sas(fixture)
     assert(df.schema.fieldNames.toSeq == Seq("id", "val", "name"))
     val rows = df.collect().sortBy(_.getDouble(0))
     assert(rows.length == 100)
@@ -49,7 +57,7 @@ class SasSpec extends SparkSpec {
   }
 
   test("RLE read matches the closed-form contents pd.read_sas validated") {
-    val df = Sas.read(spark, rleFixture)
+    val df = sas(rleFixture)
     assert(df.schema.fieldNames.toSeq == Seq("id", "val", "name", "tag"))
     val rows = df.collect().sortBy(_.getDouble(0))
     assert(rows.length == 100)
@@ -68,7 +76,7 @@ class SasSpec extends SparkSpec {
     val m = Sas.readMeta(spark, rdcFixture)
     assert(m.compression == Sas.CompressRdc)
     assert(m.rowCount == 100 && m.rowLength == 88)
-    val df = Sas.read(spark, rdcFixture)
+    val df = sas(rdcFixture)
     assert(df.schema.fieldNames.toSeq == Seq("id", "val", "name", "pat", "tag"))
     val rows = df.collect().sortBy(_.getDouble(0))
     assert(rows.length == 100)
@@ -89,13 +97,9 @@ class SasSpec extends SparkSpec {
       val m = Sas.readMeta(spark, f)
       assert(m.u64 == u64 && m.littleEndian == le, f)
       assert(m.rowCount == 100 && m.rowLength == 24, f)
-      val rows = Sas.read(spark, f).collect().sortBy(_.getDouble(0))
+      val rows = sas(f).collect().sortBy(_.getDouble(0))
       assert(rows.length == 100, f)
-      for ((r, i0) <- rows.zipWithIndex) {
-        val i = i0 + 1
-        assert(r.getDouble(0) == i.toDouble && r.getDouble(1) == i * 0.25 &&
-          r.getString(2) == f"row_$i%03d", s"$f row $i")
-      }
+      for ((r, i0) <- rows.zipWithIndex) assertBaseRow(r, i0 + 1, f)
     }
   }
 
@@ -111,29 +115,25 @@ class SasSpec extends SparkSpec {
         s"$f: pruned scan should decode only 'id':\n$plan")
       assert(pruned.collect().map(_.getDouble(0)).sorted.sameElements((1 to 100).map(_.toDouble)), f)
     }
-    // values identical to the RDD reader on the compressed fixture
-    val a = spark.read.format("sas7bdat").load(rleFixture)
-      .orderBy("id").collect().map(_.toSeq).toSeq
-    val b = Sas.read(spark, rleFixture).orderBy("id").collect().map(_.toSeq).toSeq
-    assert(a == b)
+    // a pruned read decodes the right slices: (id, tag) is closed-form
+    assert(sas(rleFixture).select("id", "tag").collect()
+      .map(r => (r.getDouble(0), r.getString(1))).sortBy(_._1).toSeq ==
+      (1 to 100).map(i => (i.toDouble, s"tag_$i")))
   }
 
   test("mix page: inline rows after the metadata subheaders parse with the alignment clamp") {
     val f = "fixtures/sas/graft_fixture_mix.sas7bdat"
     val m = Sas.readMeta(spark, f)
     assert(m.mixPageRowCount == 40 && m.rowCount == 100)
-    val rows = Sas.read(spark, f).collect().sortBy(_.getDouble(0))
+    val rows = sas(f).collect().sortBy(_.getDouble(0))
     assert(rows.length == 100)
-    for ((r, i0) <- rows.zipWithIndex) {
-      val i = i0 + 1
-      assert(r.getDouble(0) == i.toDouble && r.getString(2) == f"row_$i%03d", s"row $i")
-    }
+    for ((r, i0) <- rows.zipWithIndex) assertBaseRow(r, i0 + 1)
   }
 
   test("windows-1252 encoding: non-ASCII characters decode per the header's charset") {
     val f = "fixtures/sas/graft_fixture_w1252.sas7bdat"
     assert(Sas.readMeta(spark, f).encoding == "windows-1252")
-    val rows = Sas.read(spark, f).collect().sortBy(_.getDouble(0))
+    val rows = sas(f).collect().sortBy(_.getDouble(0))
     assert(rows.length == 100)
     for ((r, i0) <- rows.zipWithIndex) {
       val i = i0 + 1
@@ -144,49 +144,37 @@ class SasSpec extends SparkSpec {
   test("stale trailing row subheaders truncate at row_count, like pd.read_sas") {
     // fixture carries 105 row subheaders but declares row_count=100;
     // pd.read_sas returns exactly the first 100 (validated at
-    // generation) — both read paths must agree via the census
-    val stale = "fixtures/sas/graft_fixture_rle_stale.sas7bdat"
-    val rdd = Sas.read(spark, stale)
-    assert(rdd.count() == 100)
-    assert(rdd.select("id").collect().map(_.getDouble(0)).sorted
-      .sameElements((1 to 100).map(_.toDouble)))
-    val dsv2 = spark.read.format("sas7bdat").load(stale)
-    assert(dsv2.count() == 100)
-    assert(dsv2.orderBy("id").collect().map(_.toSeq).toSeq ==
-      rdd.orderBy("id").collect().map(_.toSeq).toSeq)
+    // generation) — the census must truncate the scan there
+    val rows = sas("fixtures/sas/graft_fixture_rle_stale.sas7bdat").collect().sortBy(_.getDouble(0))
+    assert(rows.length == 100)
+    for ((r, i0) <- rows.zipWithIndex) assertBaseRow(r, i0 + 1)
   }
 
   test("stale trailing INLINE rows on an uncompressed file truncate at row_count too") {
     // the uncompressed twin of the census: the last data page's u16
     // block count covers 10 stale rows (ids 9001..9010) past the
     // declared row_count=100; pd.read_sas returns exactly the first
-    // 100 (validated at generation) — both read paths must agree
-    val stale = "fixtures/sas/graft_fixture_plain_stale.sas7bdat"
-    val rdd = Sas.read(spark, stale)
-    assert(rdd.count() == 100)
-    assert(rdd.select("id").collect().map(_.getDouble(0)).sorted
-      .sameElements((1 to 100).map(_.toDouble)))
-    val dsv2 = spark.read.format("sas7bdat").load(stale)
-    assert(dsv2.count() == 100)
-    assert(dsv2.orderBy("id").collect().map(_.toSeq).toSeq ==
-      rdd.orderBy("id").collect().map(_.toSeq).toSeq)
+    // 100 (validated at generation)
+    val rows = sas("fixtures/sas/graft_fixture_plain_stale.sas7bdat").collect().sortBy(_.getDouble(0))
+    assert(rows.length == 100)
+    for ((r, i0) <- rows.zipWithIndex) assertBaseRow(r, i0 + 1)
   }
 
   test("census runs once per file: repeated reads and DSv2 re-loads hit the driver cache") {
     // compressed file: an uncached census re-reads the WHOLE file per
     // read (2x I/O) — the cache must make it once per (path, mtime,
-    // length), across both the RDD and DSv2 faces
-    Sas.read(spark, rleFixture).count() // warm (may or may not be the first census)
+    // length), across separate loads (each load builds a new table)
+    sas(rleFixture).count() // warm (may or may not be the first census)
     val before = Sas.censusRuns.get()
-    Sas.read(spark, rleFixture).count()
-    Sas.read(spark, rleFixture).count()
-    spark.read.format("sas7bdat").load(rleFixture).count()
+    sas(rleFixture).count()
+    sas(rleFixture).count()
+    sas(rleFixture).select("id").count()
     assert(Sas.censusRuns.get() == before,
       s"census re-ran ${Sas.censusRuns.get() - before} times on a cached file")
     // the cache keys on the file identity, so the stale fixture (a
     // different path) still pays — and still truncates — its own census
     val staleBefore = Sas.censusRuns.get()
-    assert(Sas.read(spark, "fixtures/sas/graft_fixture_rle_stale.sas7bdat").count() == 100)
+    assert(sas("fixtures/sas/graft_fixture_rle_stale.sas7bdat").count() == 100)
     assert(Sas.censusRuns.get() <= staleBefore + 1)
   }
 
@@ -207,9 +195,9 @@ class SasSpec extends SparkSpec {
       val pinned = FileTime.fromMillis(1700000000000L)
       Files.copy(Paths.get(rleFixture), tmp, StandardCopyOption.REPLACE_EXISTING)
       Files.setLastModifiedTime(tmp, pinned)
-      Sas.read(spark, tmp.toString).count()
+      sas(tmp.toString).count()
       val n1 = Sas.censusRuns.get()
-      Sas.read(spark, tmp.toString).count() // cached: same path/mtime/len/fingerprint
+      sas(tmp.toString).count() // cached: same path/mtime/len/fingerprint
       assert(Sas.censusRuns.get() == n1)
       // rewrite IN PLACE: flip a byte in the header's dataset-name
       // region (offset 100 — read by readMeta's 288-byte header read,
@@ -220,7 +208,7 @@ class SasSpec extends SparkSpec {
       Files.write(tmp, bytes)
       Files.setLastModifiedTime(tmp, pinned)
       assert(Files.size(tmp) == Files.size(Paths.get(rleFixture)))
-      Sas.read(spark, tmp.toString).count()
+      sas(tmp.toString).count()
       assert(Sas.censusRuns.get() == n1 + 1,
         "same-(path,mtime,length) rewrite must re-run the census via the fingerprint")
     } finally Files.deleteIfExists(tmp)
