@@ -82,7 +82,9 @@ trait SourceResolver {
   * nested-store parquet at `<storeDir>` partitioned by
   * (study_code, view) — partition pruning turns the keyed scan into a
   * file-level point lookup, the Spark analogue of the reference's
-  * DynamoDB Query on the same keys.
+  * DynamoDB Query on the same keys. Both read their schema from the
+  * parquet footers on the driver ([[ParquetResolver.footerSchema]]),
+  * so building a plan over either fires no Spark job.
   */
 final class ParquetResolver(spark: SparkSession, dir: String, storeDir: Option[String] = None)
     extends SourceResolver {
@@ -97,9 +99,7 @@ final class ParquetResolver(spark: SparkSession, dir: String, storeDir: Option[S
     // 'data', meta=['study_code','view']) (Configurable_ETL_Python
     // .py:36-41) — a config may project or filter on them.
     val viewDir = s"$sd/study_code=$studyCode/view=$view"
-    val reader = ParquetResolver.footerSchema(spark, viewDir)
-      .fold(spark.read)(spark.read.schema(_))
-    val flat = graft.io.NestedStore.flatten(reader.parquet(viewDir))
+    val flat = graft.io.NestedStore.flatten(ParquetResolver.read(spark, viewDir))
     // a payload field named like a key would make json_normalize raise
     // a conflicting-metadata error in the reference; fail equally loud.
     // Case-INSENSITIVE check: withColumn resolves case-insensitively
@@ -111,19 +111,27 @@ final class ParquetResolver(spark: SparkSession, dir: String, storeDir: Option[S
         "field that conflicts with the document keys")
     flat.withColumn("study_code", lit(studyCode)).withColumn("view", lit(view))
   }
-  def table(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
+  def table(name: String): DataFrame = ParquetResolver.read(spark, s"$dir/$name.parquet")
 }
 
 object ParquetResolver {
 
+  /** `spark.read.parquet(path)` with the schema from
+    * [[footerSchema]]; without one, Spark infers it (one job) or
+    * raises its usual error.
+    */
+  def read(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path).fold(spark.read)(spark.read.schema(_)).parquet(path)
+
   /** The schema `spark.read.parquet(dir).schema` reports, read on the
-    * driver so building a plan over the directory fires no Spark job
-    * (inference runs one job per read). It decodes the footer(s)
-    * inference would: with `spark.sql.parquet.mergeSchema` off,
-    * `_common_metadata`, else `_metadata`, else the first data file by
-    * path; with it on, every file (data files skipped when
+    * driver so building a plan over `dir` fires no Spark job
+    * (inference runs one job per read). `dir` may also name a single
+    * parquet file, which lists as itself. It decodes the
+    * footer(s) inference would: with `spark.sql.parquet.mergeSchema`
+    * off, `_common_metadata`, else `_metadata`, else the first data
+    * file by path; with it on, every file (data files skipped when
     * `spark.sql.parquet.respectSummaryFiles` is on). None for a
-    * missing directory, one with no data file, or one with
+    * missing path, a directory with no data file, or one with
     * subdirectories (partition discovery) — the caller then reads
     * without a schema and Spark raises its usual error.
     */

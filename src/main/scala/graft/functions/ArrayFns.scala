@@ -149,8 +149,8 @@ case class CosineSim(left: Expression, right: Expression)
   * long)` over two `array<int>` code columns, one codegen'd loop in
   * place of the composed `aggregate(zip_with(a, b, (x, y) =>
   * (x*y).cast(long)), 0L, +)` form, which evaluated INTERPRETED per
-  * element inside the candidate join (kept as
-  * [[graft.llm.Quantize.idotHof]], the parity reference). Exactly the
+  * element inside the candidate join (ArrayFnsSpec keeps it as the
+  * parity reference). Exactly the
   * composed semantics: the per-element product is a 32-bit int
   * multiply widened AFTER (int8 codes cannot overflow it), and the
   * result is NULL when the arrays' lengths differ or any element is

@@ -463,7 +463,7 @@ case class GopherSignals(child: Expression, stops: Expression)
 /** `graft_quality(text, stopwords)` → struct(n_tokens, ttr,
   * mean_token_len, stopword_ratio, punct_ratio): the round-5 quality
   * battery ([[graft.llm.TextAnalysis.withQualityScores]]) in ONE
-  * native pass — bit-identical to the column formulation (kept as the
+  * native pass — bit-identical to the column formulation (LlmSpec's
   * parity reference), which paid an array_distinct + a filter lambda
   * per token plus a full-text regexp_replace per row. Semantics:
   * tokens = `split(text, " ")` with empties kept; ttr over DISTINCT
@@ -827,8 +827,8 @@ case class BlocklistStats(child: Expression, terms: Expression)
   * band hashes of a MinHash signature — band `b` is
   * `xxhash64(concat_ws('_', cast(slice(sig, b·rows + 1, rows) as
   * array<string>)), 42)` — in ONE native loop instead of the
-  * interpreted per-band `transform` lambda it replaces (kept as
-  * [[graft.llm.Dedup.bandHashesHof]], the parity reference): that
+  * interpreted per-band `transform` lambda it replaces (the parity
+  * reference in LlmSpec and ArrayFnsSpec): that
   * form re-entered an interpreted HOF frame per band and rendered
   * every slice through a generic array cast. Bit-identical by
   * construction: each signature value is rendered with

@@ -3,7 +3,7 @@ package graft.io
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 
 import graft.model._
@@ -42,11 +42,10 @@ object ConfigReader {
     * config sheet cost TWO Spark jobs (header pass + collect) — 12 of
     * engine_study's 19 jobs were these fixed-cost config reads. The
     * file opens through its Hadoop `FileSystem` (the one
-    * [[Sas.readMeta]] uses). The Spark-reader forms stay as PARITY
-    * REFERENCES ([[readSheetSpark]] / [[readDecisionTableSpark]]),
-    * pinned row-for-row over every fixture CSV in
-    * ConfigDifferentialSpec; the study/engine consumers are
-    * oracle-gated.
+    * [[Sas.readMeta]] uses). ConfigDifferentialSpec keeps the
+    * Spark-reader forms as PARITY REFERENCES and pins this parse
+    * row-for-row against them over every fixture CSV; the
+    * study/engine consumers are oracle-gated.
     */
   private[graft] def parseCsvRows(
       spark: SparkSession, path: String): (Seq[String], Seq[Array[String]]) = {
@@ -112,19 +111,6 @@ object ConfigReader {
   private[graft] def readSheet(spark: SparkSession, path: String): Seq[Map[String, String]] =
     readHeadedSheet(spark, path)._2
 
-  /** The pre-r19 Spark-reader formulation of [[readSheet]] — the
-    * executable PARITY REFERENCE for the driver-side parse.
-    */
-  private[graft] def readSheetSpark(spark: SparkSession, path: String): Seq[Map[String, String]] = {
-    val df = spark.read.option("header", "true").csv(path)
-    val cols = df.columns
-    df.collect().toSeq.map { (r: Row) =>
-      cols.zipWithIndex.collect {
-        case (c, i) if !r.isNullAt(i) => c -> r.getString(i)
-      }.toMap
-    }
-  }
-
   private def get(row: Map[String, String], key: String): Option[String] =
     row.get(key).map(_.trim).filter(_.nonEmpty)
 
@@ -174,20 +160,6 @@ object ConfigReader {
     val mapping = rows.map { r =>
       def at(i: Int) = if (i < r.length) Option(r(i)) else None
       (at(0).getOrElse(""), at(outIdx).getOrElse(""))
-    }
-    DecisionTable(name, mapping)
-  }
-
-  /** The pre-r19 Spark-reader formulation of [[readDecisionTable]] —
-    * the executable PARITY REFERENCE for the driver-side parse.
-    */
-  private[graft] def readDecisionTableSpark(
-      spark: SparkSession, path: String, name: String): DecisionTable = {
-    val df = spark.read.option("header", "true").csv(path)
-    val lookupCol = df.columns.head
-    val mapping = df.collect().toSeq.map { r =>
-      (Option(r.getAs[String](lookupCol)).getOrElse(""),
-       Option(r.getAs[String]("output")).getOrElse(""))
     }
     DecisionTable(name, mapping)
   }

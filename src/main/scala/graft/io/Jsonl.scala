@@ -17,8 +17,7 @@ import org.apache.spark.sql.types.StructType
   *     gzipped.
   *   - [[read]] takes an explicit schema: schema inference is a whole
   *     extra pass over the data (at 100 TB, a second 100 TB scan) and
-  *     can type the same column differently between runs. Inference
-  *     stays available via [[readInferred]] for exploration.
+  *     can type the same column differently between runs.
   *   - JSON scans have no column pruning or predicate pushdown —
   *     every byte is parsed. The pattern is jsonl → parquet once at
   *     ingest, queries on the parquet (exactly what the nested store
@@ -36,10 +35,6 @@ object Jsonl {
       schema: StructType,
       mode: String = "FAILFAST"): DataFrame =
     spark.read.schema(schema).option("mode", mode).json(path)
-
-  /** Schema-inferring read — exploration only (extra full pass). */
-  def readInferred(spark: SparkSession, path: String): DataFrame =
-    spark.read.json(path)
 
   /** Write as JSON Lines, one object per line. Nulls are emitted as
     * explicit `"col": null` entries (ignoreNullFields=false) so the

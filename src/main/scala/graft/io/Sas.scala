@@ -104,8 +104,6 @@ object Sas {
       case 8 => u64v(off)
     }
     def bytes(off: Int, len: Int): Array[Byte] = java.util.Arrays.copyOfRange(buf, off, off + len)
-    /** SAS numeric — delegates to the one decode ([[sasDoubleAt]]). */
-    def sasDouble(off: Int, w: Int): Double = sasDoubleAt(buf, le, off, w)
   }
 
   private val PageTypeMask = 0xF00
@@ -488,9 +486,8 @@ object Sas {
       (aligned, Seq(meta.mixPageRowCount, meta.rowCount, capacity).min)
     } else (0, 0L)
 
-  /** Width-w SAS numeric at `off` (most-significant bytes kept) —
-    * the [[ByteReader.sasDouble]] logic as a static method for the
-    * per-cell hot path.
+  /** Width-w SAS numeric at `off` (most-significant bytes kept): the
+    * one numeric decode, a static method for the per-cell hot path.
     */
   private def sasDoubleAt(buf: Array[Byte], le: Boolean, off: Int, w: Int): Double = {
     var bits = 0L

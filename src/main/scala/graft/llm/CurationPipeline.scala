@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, Column}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.Native
@@ -62,31 +62,7 @@ object CurationPipeline {
     stagesFromRows(path, header.toSet, sheets.flatMap(_._2))
   }
 
-  /** The Spark-reader formulation of [[readRecipe]] — the executable
-    * PARITY REFERENCE for the driver-side parse, pinned stage-for-stage
-    * over the fixture recipes in ConfigDifferentialSpec. No live path
-    * calls it: recipe directories and globs go through the driver
-    * listing too.
-    */
-  private[graft] def readRecipeSpark(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[Stage] = {
-    val df = spark.read.option("header", "true").csv(path)
-    // Spark preserves CSV row order only incidentally for a single
-    // small file, so a read spanning more than one partition needs
-    // an explicit `seq` column
-    require(df.columns.contains("seq") || df.rdd.getNumPartitions <= 1,
-      s"recipe $path spans multiple partitions; add a 'seq' column to pin stage order")
-    val cols = df.columns
-    val maps = df.collect().toSeq.map { r =>
-      cols.zipWithIndex.collect {
-        case (c, i) if !r.isNullAt(i) => c -> r.getString(i)
-      }.toMap
-    }
-    stagesFromRows(path, cols.toSet, maps)
-  }
-
-  private def stagesFromRows(
+  private[graft] def stagesFromRows(
       path: String,
       cols: Set[String],
       maps: Seq[Map[String, String]]): Seq[Stage] = {
@@ -230,7 +206,7 @@ object CurationPipeline {
       // coalesced text (terms non-empty, no null elements on either
       // side) — the native battery ([[graft.functions
       // .BlocklistStats]]) replaces the interpreted per-token lower()
-      // transform lambda; [[blocklistHitHof]] is the parity reference.
+      // transform lambda, which LlmSpec keeps as the parity reference.
       val terms = list(st, "terms", Seq.empty)
       require(terms.nonEmpty, "BLOCKLIST FILTER needs terms=a,b,...")
       df.where(Native.blocklist(coalesce(col(textCol).cast("string"), lit("")),
@@ -303,15 +279,4 @@ object CurationPipeline {
       // recipe must never silently no-op a safety stage
       throw new IllegalArgumentException(s"unknown curation stage: '$other'")
   }
-
-  /** The pre-r19 BLOCKLIST FILTER hit predicate — the executable
-    * PARITY REFERENCE for the native form above (`n_hits === 0` keeps
-    * exactly the rows where this is false; LlmSpec pins it).
-    */
-  private[graft] def blocklistHitHof(textCol: String, terms: Seq[String]): Column =
-    arrays_overlap(
-      transform(
-        TextAnalysis.tokens(coalesce(col(textCol).cast("string"), lit(""))),
-        t => lower(t)),
-      typedLit(terms.map(_.toLowerCase)))
 }

@@ -92,19 +92,6 @@ object Dedup {
     // oracle hash-gates it).
     Native.shingles(text, k)
 
-  /** The pre-r18 column formulation of [[shinglesOf]] — kept as the
-    * executable PARITY REFERENCE for the native expression that
-    * replaced it.
-    */
-  private[graft] def shinglesOfHof(text: Column, k: Int = 3): Column = {
-    val toks = split(text, " ")
-    val joined = (1 until k).foldLeft(toks: Column) { (acc, off) =>
-      zip_with(acc, slice(toks, lit(off + 1), size(toks)), (a, b) => concat(a, lit(" "), b))
-    }
-    when(size(toks) < k, array(concat_ws(" ", toks)))
-      .otherwise(filter(joined, x => x.isNotNull))
-  }
-
   /** MinHash signature as a single expression: `numPerm` permutations
     * approximated by seeding xxhash64 with the permutation index
     * (standard one-hash-family construction). Returns array<bigint>.
@@ -159,22 +146,12 @@ object Dedup {
     require(numPerm % bands == 0, s"bands ($bands) must divide numPerm ($numPerm)")
     val rows = numPerm / bands
     // ONE native loop ([[graft.functions.BandHashes]]) in place of the
-    // interpreted per-band transform lambda below (kept as
-    // [[bandHashesHof]], the parity reference) — the last interpreted
-    // HOF in the minhash chain after r18 went native on shingles and
-    // signatures (r19 §4; LlmSpec parity pin, every banded consumer's
-    // candidate set is oracle-gated downstream).
+    // interpreted per-band transform lambda (the parity reference in
+    // LlmSpec and ArrayFnsSpec) — the last interpreted HOF in the
+    // minhash chain after r18 went native on shingles and signatures
+    // (r19 §4; LlmSpec parity pin, every banded consumer's candidate
+    // set is oracle-gated downstream).
     Native.bandHashes(sig, bands, rows)
-  }
-
-  /** The pre-r19 column formulation of [[bandHashes]] — the
-    * executable PARITY REFERENCE for the native expression.
-    */
-  private[graft] def bandHashesHof(sig: Column, numPerm: Int, bands: Int): Column = {
-    require(numPerm % bands == 0, s"bands ($bands) must divide numPerm ($numPerm)")
-    val rows = numPerm / bands
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => xxhash64(concat_ws("_", slice(sig, b * rows + 1, lit(rows)))))
   }
 
   /** (doc, band, band_hash) exploded rows: the LSH index. Signature is
@@ -957,24 +934,6 @@ object Dedup {
 
   // ===== SimHash =====
 
-  /** 64-bit SimHash fingerprint of the token stream. Bit j is set when
-    * the weighted sum of per-token hash bits at position j is
-    * positive. Pure Catalyst (nested higher-order functions), no UDF.
-    */
-  def simhash64(textCol: String): Column = {
-    val toksSql = s"split($textCol, ' ')"
-    expr(
-      s"""aggregate(
-         |  sequence(0, 63), CAST(0 AS BIGINT),
-         |  (acc, j) -> acc + IF(
-         |    aggregate($toksSql, 0,
-         |      (s, t) -> s + IF((shiftright(xxhash64(t), j) & 1) = 1, 1, -1)) > 0,
-         |    shiftleft(CAST(1 AS BIGINT), j), CAST(0 AS BIGINT)))""".stripMargin)
-  }
-
-  def withSimhash(textCol: String, outCol: String = "simhash")(df: DataFrame): DataFrame =
-    df.withColumn(outCol, simhash64(textCol))
-
   /** 60-bit token hash from the md5 hex prefix (15 hex chars). Slower
     * than xxhash64 but portable: any engine that parses hex replicates
     * it bit-for-bit, which is what lets the correctness gate hold an
@@ -1069,9 +1028,9 @@ object Dedup {
       textCol: String,
       divisor: Int = 8): DataFrame = {
     // ONE native loop per row ([[graft.functions.CdcWordChunks]]) in
-    // place of the higher-order-function formulation below (kept as
-    // [[cdcChunksHof]], the parity reference) — that paid an
-    // interpreted md5Hash60 lambda per WORD plus array_join slices.
+    // place of the higher-order-function formulation (LlmSpec's
+    // parity reference) — that paid an interpreted md5Hash60 lambda
+    // per WORD plus array_join slices.
     // Bit-identical output: LlmSpec parity pin + the CDC consumers'
     // DuckDB oracles.
     df.select(col(idCol),
@@ -1080,54 +1039,6 @@ object Dedup {
       .select(col(idCol),
         col("__chunk.chunk_md5").as("chunk_md5"),
         col("__chunk.n_words").as("n_words"))
-  }
-
-  /** The pre-r18 column formulation of [[cdcChunks]] — the executable
-    * PARITY REFERENCE for the native expression that replaced it.
-    */
-  private[graft] def cdcChunksHof(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      divisor: Int = 8): DataFrame = {
-    val words = filter(split(col(textCol), " "), w => length(w) > 0)
-    df.select(col(idCol), words.as("__w"))
-      .withColumn("__n", size(col("__w")))
-      // 1-based word positions that END a chunk (boundary word
-      // included). The when-guard keeps sequence() off the n=0 case
-      // instead of a pre-Filter: a Filter on a derived column gets
-      // predicate-pushed below the Projects with its alias chain
-      // SUBSTITUTED — the whole HOF pipeline re-evaluated as a scan
-      // filter (the bpePairCounts lambda-re-eval trap, Filter form).
-      .withColumn("__bpos",
-        when(col("__n") > 0,
-          filter(sequence(lit(1), col("__n")),
-            i => md5Hash60(element_at(col("__w"), i)) % divisor === 0))
-          .otherwise(array().cast("array<int>")))
-      .withColumn("__starts",
-        concat(array(lit(1)), transform(col("__bpos"), i => i + 1)))
-      .withColumn("__ends", concat(col("__bpos"), array(col("__n"))))
-      // the trailing (n+1, n) pair when the last word is itself a
-      // boundary yields null and is filtered — no empty chunks
-      .withColumn("__chunks",
-        filter(
-          zip_with(col("__starts"), col("__ends"), (s, e) =>
-            when(s <= e, array_join(slice(col("__w"), s, e - s + 1), " "))),
-          c => c.isNotNull))
-      // explode_outer, NOT explode: InferFiltersFromGenerate would put
-      // `size(__chunks) > 0 AND isnotnull(__chunks)` above the child
-      // and predicate pushdown would re-inline the full chunk
-      // construction into a per-row scan Filter (2x the HOF work).
-      // The outer variant infers nothing; the cheap null filter on the
-      // GENERATED column cannot sink below the Generate and also
-      // drops empty documents (their empty chunk array yields one
-      // null row).
-      .select(col(idCol), explode_outer(col("__chunks")).as("__chunk"))
-      .filter(col("__chunk").isNotNull)
-      .select(
-        col(idCol),
-        md5(col("__chunk")).as("chunk_md5"),
-        size(split(col("__chunk"), " ")).cast("long").as("n_words"))
   }
 
   /** Corpus-level duplicated-chunk inventory: every CDC chunk that

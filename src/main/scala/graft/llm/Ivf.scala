@@ -405,8 +405,8 @@ object Ivf {
         quantCodes(col("__pv")).as("__pq"))
     // native integer-code dot ([[graft.functions.IntDot]]) — three
     // dots per candidate pair inside the cell join ran interpreted in
-    // the composed form ([[Quantize.idotHof]], the parity reference;
-    // r19 §4)
+    // the composed zip_with + aggregate form (ArrayFnsSpec's parity
+    // reference; r19 §4)
     def idot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       Native.dotInt(a, b)
     val normProd =

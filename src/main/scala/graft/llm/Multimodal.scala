@@ -190,12 +190,6 @@ object Multimodal {
       .drop("__idx")
   }
 
-  /** Frame-sample stub: pick every `stride`-th chunk — the shape of
-    * video frame sampling (decode replaced by the chunk bytes).
-    */
-  def sampleChunks(stride: Int)(chunked: DataFrame): DataFrame =
-    chunked.where(col("chunk_idx") % stride === 0)
-
   /** Content-defined chunking over BINARY content — the byte-level
     * sibling of [[graft.llm.Dedup.cdcChunks]] (word-level CDC over
     * text), and the fingerprint substrate for CONTENT-level media
@@ -233,76 +227,19 @@ object Multimodal {
       window: Int = 8)(df: DataFrame): DataFrame = {
     require(divisor >= 2 && window >= 1, s"bad divisor=$divisor / window=$window")
     // ONE native loop per row ([[graft.functions.CdcMd5Chunks]]) in
-    // place of the higher-order-function formulation below — that
+    // place of the higher-order-function formulation — that
     // paid an interpreted Catalyst lambda (substr + md5 + conv string
     // round-trip) per BYTE and was the measured dominant CPU term of
     // the whole mm family (bench_full_r17's four slowest rows).
     // Output is bit-identical — LlmSpec pins native == HOF on real
     // corpus bytes, and every mm oracle hash-gates it — so the HOF
-    // face survives only as the parity reference
-    // [[binaryCdcChunksHof]].
+    // face survives only as LlmSpec's parity reference.
     df.select(col(idCol),
         explode_outer(Native.cdcMd5(col(binCol), divisor, window)).as("__chunk"))
       .filter(col("__chunk").isNotNull)
       .select(col(idCol),
         col("__chunk.chunk_md5").as("chunk_md5"),
         col("__chunk.n_bytes").as("n_bytes"))
-  }
-
-  /** The pre-r18 column formulation of [[binaryCdcChunks]] — kept as
-    * the executable PARITY REFERENCE for the native expression that
-    * replaced it (LlmSpec pins equality on real corpus bytes), and as
-    * the readable statement of the gate-face semantics the DuckDB
-    * oracle replays. Never on a production path: ~2 µs/byte of
-    * interpreted lambda overhead vs the native loop's md5-bound rate.
-    */
-  private[graft] def binaryCdcChunksHof(
-      binCol: String,
-      idCol: String,
-      divisor: Int = 32,
-      window: Int = 8)(df: DataFrame): DataFrame = {
-    require(divisor >= 2 && window >= 1, s"bad divisor=$divisor / window=$window")
-    import graft.llm.Dedup.md5Hash60
-    // upper() on both engines' hex: Spark and DuckDB both emit
-    // uppercase today, but the md5 inputs must agree FOREVER, so the
-    // case is pinned rather than assumed
-    df.select(col(idCol), upper(hex(col(binCol))).as("__hx"),
-        octet_length(col(binCol)).as("__n"))
-      // boundary AFTER byte i (1-based), decided by the window of
-      // bytes i-window+1 .. i; rows shorter than the window carry no
-      // boundary and fall through as one whole-content chunk. The
-      // when-guard keeps sequence() off the n < window case (a
-      // descending sequence) instead of a pre-Filter — the
-      // cdcChunks predicate-pushdown trap, Filter form.
-      .withColumn("__bpos",
-        when(col("__n") >= window,
-          filter(sequence(lit(window), col("__n")), i =>
-            md5Hash60(col("__hx").substr(
-              (i - window) * 2 + 1, lit(2 * window))) % divisor === 0))
-          .otherwise(array().cast("array<int>")))
-      .withColumn("__starts",
-        concat(array(lit(1)), transform(col("__bpos"), i => i + 1)))
-      .withColumn("__ends", concat(col("__bpos"), array(col("__n"))))
-      // trailing (n+1, n) pair when the last byte is itself a boundary
-      // yields null and is filtered — no empty chunks; chunks stay in
-      // HEX (2 chars per byte) so the digest below hashes a plain
-      // string both engines agree on
-      .withColumn("__chunks",
-        filter(
-          zip_with(col("__starts"), col("__ends"), (s, e) =>
-            when(s <= e, col("__hx").substr((s - 1) * 2 + 1, (e - s + 1) * 2))),
-          c => c.isNotNull))
-      // explode_outer, NOT explode: same InferFiltersFromGenerate
-      // re-inlining trap as cdcChunks — the outer variant infers
-      // nothing, and the null filter on the GENERATED column also
-      // drops empty/NULL binaries (their empty chunk array yields one
-      // null row)
-      .select(col(idCol), explode_outer(col("__chunks")).as("__chunk"))
-      .filter(col("__chunk").isNotNull)
-      .select(
-        col(idCol),
-        md5(col("__chunk")).as("chunk_md5"),
-        (length(col("__chunk")) / 2).cast("long").as("n_bytes"))
   }
 
   /** [[binaryCdcChunks]] on the PRODUCTION boundary detector — the
@@ -378,17 +315,6 @@ object Multimodal {
     val tag = s"gear-$divisor-$window"
     def chunk(binCol: String, idCol: String)(df: DataFrame): DataFrame =
       binaryCdcChunksGear(binCol, idCol, divisor, window)(df)
-  }
-  object Chunker {
-    /** Inverse of [[Chunker.tag]] — loads the identity persisted
-      * beside an index back into the value that built it.
-      */
-    def fromTag(tag: String): Chunker = tag.split("-") match {
-      case Array("md5", d, w) => Md5Chunker(d.toInt, w.toInt)
-      case Array("gear", d, w) => GearChunker(d.toInt, w.toInt)
-      case _ => throw new IllegalArgumentException(
-        s"unrecognized chunker tag '$tag' (want md5-<divisor>-<window> or gear-<divisor>-<window>)")
-    }
   }
 
   private def chunkerTagPath(dir: String) =

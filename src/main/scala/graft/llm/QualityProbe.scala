@@ -42,21 +42,14 @@ object QualityProbe {
     size(split(coalesce(col(textCol), lit("")), " ")).cast("long")
   def markerCount(textCol: String, marker: String): Column =
     // ONE native byte scan ([[graft.functions.MarkerCount]]) in place
-    // of the interpreted per-token filter lambda below (kept as
-    // [[markerCountHof]], the parity reference) — the r19 §4
+    // of the interpreted per-token filter lambda (the parity
+    // reference in LlmSpec and ArrayFnsSpec) — the r19 §4
     // treatment: the probe gate evaluates this feature over the whole
     // corpus (train aggregate + every scored row, twice in the gated
     // pipelines), and the lambda form also dropped the projection out
     // of whole-stage codegen. Bit-identical (LlmSpec parity pin + the
     // probe consumers' oracles).
     Native.markerCount(coalesce(col(textCol), lit("")), Seq(marker))
-
-  /** The pre-r19 column formulation of [[markerCount]] — the
-    * executable PARITY REFERENCE for the native expression.
-    */
-  private[graft] def markerCountHof(textCol: String, marker: String): Column =
-    size(filter(split(coalesce(col(textCol), lit("")), " "),
-      t => t === marker)).cast("long")
 
   /** The fitted probe: exact normal-equation sums, BigInt Cramer
     * determinants, and the derived double weights.

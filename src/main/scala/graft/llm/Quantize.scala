@@ -88,14 +88,6 @@ object Quantize {
     df.select(col(idCol), Native.int8Quant(asDouble(col(vecCol))).as("__qz"))
       .select(col(idCol), col("__qz.scale").as("scale"), col("__qz.codes").as("codes"))
 
-  /** The pre-r19 composed formulation of the integer-code dot — the
-    * executable PARITY REFERENCE for [[graft.functions.IntDot]]
-    * (exact semantics including the null-poisoning of a length
-    * mismatch via zip_with padding).
-    */
-  private[graft] def idotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x * y).cast("long")), lit(0L), (acc, x) => acc + x)
-
   /** Recall audit: per probe, |top-k by quantized cosine ∩ top-k by
     * exact cosine| / k. In the quantized cosine the two max-abs
     * scales cancel, so the ranking needs ONLY the integer codes:
@@ -145,8 +137,8 @@ object Quantize {
         .withColumn("__sim", Native.cosine(col("__cv"), col("__pv"))),
       "__sim")
     // ONE codegen'd loop ([[graft.functions.IntDot]]) per dot in
-    // place of the composed form below ([[idotHof]], the parity
-    // reference): the quantized ranking evaluates three dots per
+    // place of the composed zip_with + aggregate form (ArrayFnsSpec's
+    // parity reference): the quantized ranking evaluates three dots per
     // CANDIDATE PAIR inside the cross/cell join — the hottest
     // expression site of the quant family — and the composed
     // zip_with+aggregate pair ran interpreted per element there

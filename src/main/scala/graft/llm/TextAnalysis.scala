@@ -33,12 +33,6 @@ object TextAnalysis {
     // text_tokens_bpe oracle-gated)
     array_remove(split(c, """[^\p{L}\p{N}]+"""), "")
 
-  /** The pre-r19 lambda formulation of [[tokensRegex]] — the
-    * executable PARITY REFERENCE for the built-in rewrite.
-    */
-  private[graft] def tokensRegexHof(c: Column): Column =
-    filter(split(c, """[^\p{L}\p{N}]+"""), t => length(t) > 0)
-
   /** Canonical text cleanup — the stage every web-scale pipeline
     * (C4, CCNet, RefinedWeb) runs BEFORE hashing, dedup, or quality
     * scoring, because un-normalized variants of the same content
@@ -83,28 +77,14 @@ object TextAnalysis {
       df: DataFrame): DataFrame =
     // ONE whole-document native pass ([[graft.functions
     // .BpeTokenCount]]) in place of the per-word transform lambda +
-    // aggregate fold below (kept as [[withBpeTokenCountHof]], the
-    // parity reference): the per-word encode was already native,
-    // but every word still paid an interpreted HOF frame and the
-    // row an interpreted fold. Bit-identical (shared encode loop +
+    // aggregate fold (LlmSpec's parity reference): the per-word
+    // encode was already native, but every word still paid an
+    // interpreted HOF frame and the row an interpreted fold. Bit-identical (shared encode loop +
     // LlmSpec parity pin + the fertility oracles).
     df.withColumn("n_tokens_ws", size(tokens(col(textCol))))
       .withColumn("n_tokens_bpe", Native.bpeCount(col(textCol), merges))
       .withColumn("fertility",
         col("n_tokens_bpe").cast("double") / col("n_tokens_ws"))
-
-  /** The pre-r19 per-word lambda formulation of [[withBpeTokenCount]]
-    * — the executable PARITY REFERENCE for the native count.
-    */
-  private[graft] def withBpeTokenCountHof(textCol: String, merges: Seq[(String, String)])(
-      df: DataFrame): DataFrame = {
-    val perWord = transform(tokens(col(textCol)), w => size(Native.bpeEncode(w, merges)))
-    df.withColumn("n_tokens_ws", size(tokens(col(textCol))))
-      .withColumn("n_tokens_bpe",
-        aggregate(perWord, lit(0), (acc, x) => acc + x))
-      .withColumn("fertility",
-        col("n_tokens_bpe").cast("double") / col("n_tokens_ws"))
-  }
 
   /** token_count + char_count + distinct-token count. */
   def withTokenStats(textCol: String)(df: DataFrame): DataFrame = {
@@ -124,34 +104,14 @@ object TextAnalysis {
       textCol: String,
       stopwords: Seq[String] = Seq("the", "a"))(df: DataFrame): DataFrame = {
     // ONE native pass ([[graft.functions.QualityScores]]) in place of
-    // the column formulation below (kept as [[withQualityScoresHof]],
-    // the parity reference): that form paid an array_distinct + a
-    // filter lambda per token plus a full-text regexp_replace per
-    // row. Bit-identical output — LlmSpec parity pin + the gated
+    // the column formulation (LlmSpec's parity reference): that form
+    // paid an array_distinct + a filter lambda per token plus a
+    // full-text regexp_replace per row. Bit-identical output — LlmSpec parity pin + the gated
     // consumers' oracles.
     val out = df.withColumn("__q", Native.quality(col(textCol), stopwords))
     Seq("n_tokens", "ttr", "mean_token_len", "stopword_ratio", "punct_ratio")
       .foldLeft(out)((d, c) => d.withColumn(c, col(s"__q.$c")))
       .drop("__q")
-  }
-
-  /** The pre-r18 column formulation of [[withQualityScores]] — the
-    * executable PARITY REFERENCE for the native expression.
-    */
-  private[graft] def withQualityScoresHof(
-      textCol: String,
-      stopwords: Seq[String] = Seq("the", "a"))(df: DataFrame): DataFrame = {
-    val toks = tokens(col(textCol))
-    val n = size(toks).cast("double")
-    val stops = array(stopwords.map(lit): _*)
-    val nChars = length(col(textCol)).cast("double")
-    df.withColumn("n_tokens", size(toks))
-      .withColumn("ttr", size(array_distinct(toks)).cast("double") / n)
-      .withColumn("mean_token_len", (nChars - n + lit(1.0)) / n)
-      .withColumn("stopword_ratio",
-        size(filter(toks, t => array_contains(stops, t))).cast("double") / n)
-      .withColumn("punct_ratio",
-        (nChars - length(regexp_replace(col(textCol), "[.,;:!?]", "")).cast("double")) / nChars)
   }
 
   /** Language-ID heuristic: marker-token frequency profiles, label =
@@ -167,8 +127,8 @@ object TextAnalysis {
     require(profiles.nonEmpty, "need at least one language profile")
     // ONE native byte scan per profile ([[graft.functions
     // .MarkerCount]]) in place of the per-token interpreted filter
-    // lambda (kept as [[withLangIdHof]], the parity reference): the
-    // lambda form walked the token array per profile through an
+    // lambda (LlmSpec's parity reference): the lambda form walked
+    // the token array per profile through an
     // interpreted HOF frame AND dropped the whole projection out of
     // whole-stage codegen (r19 §4 treatment; LlmSpec parity pin, the
     // text_langid / pipeline_preprocess oracles hash-gate it). A NULL
@@ -176,30 +136,6 @@ object TextAnalysis {
     // size(filter(NULL)) propagation of the reference.
     val scores: Seq[(String, Column)] = profiles.map { case (lang, markers) =>
       lang -> Native.markerCount(col(textCol), markers).cast("int")
-    }
-    val withScores = scores.foldLeft(df) {
-      case (d, (lang, s)) => d.withColumn(s"score_$lang", s)
-    }
-    val maxScore = greatest(scores.map { case (l, _) => col(s"score_$l") }: _*)
-    // first profile reaching the max wins — deterministic tie-break
-    val label = scores.foldRight(lit(null).cast("string")) { case ((lang, _), acc) =>
-      when(col(s"score_$lang") === maxScore, lit(lang)).otherwise(acc)
-    }
-    withScores.withColumn(outCol, label)
-  }
-
-  /** The pre-r19 lambda formulation of [[withLangId]] — the
-    * executable PARITY REFERENCE for the native expression.
-    */
-  private[graft] def withLangIdHof(
-      textCol: String,
-      profiles: Seq[(String, Seq[String])],
-      outCol: String = "lang_pred")(df: DataFrame): DataFrame = {
-    require(profiles.nonEmpty, "need at least one language profile")
-    val toks = tokens(col(textCol))
-    val scores: Seq[(String, Column)] = profiles.map { case (lang, markers) =>
-      val m = array(markers.map(lit): _*)
-      lang -> size(filter(toks, t => array_contains(m, t)))
     }
     val withScores = scores.foldLeft(df) {
       case (d, (lang, s)) => d.withColumn(s"score_$lang", s)
@@ -316,18 +252,10 @@ object TextAnalysis {
     // order on a null-free array (split never yields null elements;
     // they differ only in null placement), but array_sort carries an
     // interpreted comparator LAMBDA per element pair while sort_array
-    // is a plain expression — parity pinned in LlmSpec against
-    // [[withBagFingerprintHof]]
+    // is a plain expression — parity pinned in LlmSpec against the
+    // array_sort form
     df.withColumn(outCol,
       md5(concat_ws(" ", sort_array(array_distinct(tokens(col(textCol)))))))
-
-  /** The pre-r19 array_sort formulation of [[withBagFingerprint]] —
-    * the executable PARITY REFERENCE for the sort_array swap.
-    */
-  private[graft] def withBagFingerprintHof(
-      textCol: String, outCol: String = "bag_fingerprint")(df: DataFrame): DataFrame =
-    df.withColumn(outCol,
-      md5(concat_ws(" ", array_sort(array_distinct(tokens(col(textCol)))))))
 
   /** Gopher-style repetition signals per document: `top_gram_frac` =
     * the most frequent word-n-gram's share of all gram positions,
@@ -478,22 +406,14 @@ object TextAnalysis {
     require(k > 0, s"k must be positive, got $k")
     val tk = col("__tk")
     // adjacent pairs as a zip of the two shifted slices — lambda-free
-    // (the transform-over-sequence form it replaces, kept below as
-    // [[adjacentPairsHof]], entered an interpreted Catalyst frame per
+    // (the transform-over-sequence form it replaces, LlmSpec's parity
+    // reference, entered an interpreted Catalyst frame per
     // row; arrays_zip + slice stay inside whole-stage codegen, r19
     // §4). liftTopK's size>=2 guard bounds the slice lengths >= 1.
     liftTopK(df, textCol, k, minPair,
       arrays_zip(slice(tk, lit(1), size(tk) - 1).as("w1"),
         slice(tk, lit(2), size(tk) - 1).as("w2")))
   }
-
-  /** The pre-r19 lambda formulation of [[collocationTopK]]'s pair
-    * array — the executable PARITY REFERENCE for the zip-of-slices
-    * form (LlmSpec pins equality).
-    */
-  private[graft] def adjacentPairsHof(tk: Column): Column =
-    transform(sequence(lit(1), size(tk) - 1),
-      i => struct(element_at(tk, i).as("w1"), element_at(tk, i + 1).as("w2")))
 
   /** The shared count → join → lift → top-k pipeline under
     * [[collocationTopK]] and [[skipgramLiftTopK]] — ONE definition so
@@ -554,9 +474,9 @@ object TextAnalysis {
     // per DISTANCE instead of per position: for each d in 1..window
     // (a plan-time constant) the d-apart pairs are one zip of two
     // shifted slices — the same pair MULTISET as the nested
-    // per-position transform (kept below as [[skipgramPairsHof]], the
-    // parity reference; LlmSpec pins multiset equality), and the
-    // downstream count groupBy is enumeration-order-blind. The nested
+    // per-position transform (LlmSpec's parity reference; it pins
+    // multiset equality), and the downstream count groupBy is
+    // enumeration-order-blind. The nested
     // lambda form entered an interpreted frame per position per row;
     // the unrolled zips stay inside whole-stage codegen (r19 §4).
     val byDistance = (1 to window).map { d =>
@@ -567,15 +487,6 @@ object TextAnalysis {
     }
     liftTopK(df, textCol, k, minPair, concat(byDistance: _*))
   }
-
-  /** The pre-r19 nested-lambda formulation of [[skipgramLiftTopK]]'s
-    * pair array — the executable PARITY REFERENCE for the unrolled
-    * zip-of-slices form (LlmSpec pins pair-multiset equality).
-    */
-  private[graft] def skipgramPairsHof(tk: Column, window: Int): Column =
-    flatten(transform(sequence(lit(1), size(tk) - 1), i =>
-      transform(sequence(lit(1), least(lit(window), size(tk) - i)),
-        d => struct(element_at(tk, i).as("w1"), element_at(tk, i + d).as("w2")))))
 
   /** Overlapping fixed-width character chunks — retrieval-index prep
     * (every RAG corpus build slices documents into windows with
@@ -663,7 +574,7 @@ object TextAnalysis {
     * so a SQL oracle reproduces it bit-for-bit. Zero shuffles —
     * embarrassingly parallel per row, linear at 100 TB.
     */
-  private val gopherSignalCols = Seq("n_words", "mean_word_len", "frac_alpha_words",
+  private[graft] val gopherSignalCols = Seq("n_words", "mean_word_len", "frac_alpha_words",
     "symbol_ratio", "frac_bullet_lines", "frac_ellipsis_lines", "n_stopwords_present")
 
   /** All input columns + the seven Gopher signals + `passes_gopher`.
@@ -683,64 +594,15 @@ object TextAnalysis {
     require(clash.isEmpty,
       s"withGopherSignals would clobber input column(s): ${clash.mkString(", ")}")
     // ONE native pass ([[graft.functions.GopherSignals]]) in place of
-    // the column formulation below (kept as [[withGopherSignalsHof]],
-    // the parity reference) — that form paid interpreted lambda
-    // frames per WORD (length fold, rlike per word, distinct+lower+
-    // isin) plus two full-text regexp_replace calls per row. Output
+    // the column formulation (LlmSpec's parity reference) — that
+    // form paid interpreted lambda frames per WORD (length fold,
+    // rlike per word, distinct+lower+isin) plus two full-text regexp_replace calls per row. Output
     // is bit-identical: LlmSpec pins native == HOF on the edge
     // fixtures, and every gated consumer hash-gates it.
     val out = df.withColumn("__g", Native.gopher(col(textCol), stopwords))
     (gopherSignalCols :+ "passes_gopher")
       .foldLeft(out)((d, c) => d.withColumn(c, col(s"__g.$c")))
       .drop("__g")
-  }
-
-  /** The pre-r18 column formulation of [[withGopherSignals]] — the
-    * executable PARITY REFERENCE for the native expression that
-    * replaced it, and the readable statement of each signal's
-    * definition.
-    */
-  private[graft] def withGopherSignalsHof(
-      textCol: String,
-      stopwords: Seq[String] = gopherStopwords)(df: DataFrame): DataFrame = {
-    val reserved = Seq("__w", "__lines", "passes_gopher") ++ gopherSignalCols
-    val clash = df.columns.toSeq.intersect(reserved)
-    require(clash.isEmpty,
-      s"withGopherSignals would clobber input column(s): ${clash.mkString(", ")}")
-    val w = col("__w")
-    val ls = col("__lines")
-    val nWords = size(w)
-    val nWordsD = nWords.cast("double")
-    val nLinesD = size(ls).cast("double")
-    val sumWordLen = aggregate(transform(w, t => length(t)), lit(0), (a, x) => a + x)
-    val nAlphaWords = size(filter(w, t => t.rlike("[A-Za-z]")))
-    val nStop = size(filter(
-      array_distinct(transform(w, t => lower(t))),
-      t => t.isin(stopwords.map(x => x: Any): _*)))
-    // '#' count = chars removed by replace; '...' count = removed/3
-    val nHash = length(col(textCol)) - length(regexp_replace(col(textCol), "#", ""))
-    val nEllipsis =
-      (length(col(textCol)) - length(regexp_replace(col(textCol), "\\.\\.\\.", ""))) / lit(3)
-    val nBullet = size(filter(ls, l => substring(l, 1, 1).isin("-", "*", "•")))
-    val nEllLine = size(filter(ls, l => l.endsWith("...") || l.endsWith("…")))
-    df.withColumn("__w", tokens(col(textCol)))
-      .withColumn("__lines", split(col(textCol), "\n"))
-      .withColumn("n_words", nWords.cast("int"))
-      .withColumn("mean_word_len", sumWordLen.cast("double") / nWordsD)
-      .withColumn("frac_alpha_words", nAlphaWords.cast("double") / nWordsD)
-      .withColumn("symbol_ratio", (nHash + nEllipsis).cast("double") / nWordsD)
-      .withColumn("frac_bullet_lines", nBullet.cast("double") / nLinesD)
-      .withColumn("frac_ellipsis_lines", nEllLine.cast("double") / nLinesD)
-      .withColumn("n_stopwords_present", nStop.cast("int"))
-      .withColumn("passes_gopher",
-        col("n_words").between(50, 100000) &&
-          col("mean_word_len").between(3.0, 10.0) &&
-          col("symbol_ratio") <= 0.1 &&
-          col("frac_bullet_lines") <= 0.9 &&
-          col("frac_ellipsis_lines") <= 0.3 &&
-          col("frac_alpha_words") > 0.8 &&
-          col("n_stopwords_present") >= 2)
-      .drop("__w", "__lines")
   }
 
   def gopherRules(
@@ -781,9 +643,9 @@ object TextAnalysis {
     require(blocklist.nonEmpty, "empty blocklist")
     val terms = blocklist.map(_.toLowerCase)
     // ONE native byte scan ([[graft.functions.BlocklistStats]]) for
-    // all three counts, in place of the column formulation below
-    // (kept as [[blocklistScanHof]], the parity reference) — that
-    // form paid two interpreted per-token filter lambdas plus an
+    // all three counts, in place of the column formulation
+    // (LlmSpec's parity reference) — that form paid two interpreted
+    // per-token filter lambdas plus an
     // array_distinct allocation per row, and dropped the projection
     // out of whole-stage codegen. Bit-identical: LlmSpec pins
     // native == HOF on the edge fixtures, and the consumers'
@@ -794,35 +656,6 @@ object TextAnalysis {
         col("__b.n_hits").as("n_blocklist_hits"),
         col("__b.n_terms").as("n_blocklist_terms"),
         col("__b.n_words").as("__nw"))
-      .withColumn("frac_blocklist",
-        col("n_blocklist_hits").cast("double") / col("__nw").cast("double"))
-      .withColumn("flagged", col("n_blocklist_hits") > 0)
-      .drop("__nw")
-  }
-
-  /** The pre-r19 column formulation of [[blocklistScan]] — the
-    * executable PARITY REFERENCE for the native expression, and the
-    * readable statement of each count's definition.
-    */
-  private[graft] def blocklistScanHof(
-      idCol: String,
-      textCol: String,
-      blocklist: Seq[String])(df: DataFrame): DataFrame = {
-    require(blocklist.nonEmpty, "empty blocklist")
-    val terms = blocklist.map(_.toLowerCase)
-    val wl = col("__wl")
-    val isBlocked: Column => Column = t => t.isin(terms.map(x => x: Any): _*)
-    // lowercase ONCE behind the Project boundary (lambda expressions
-    // are excluded from subexpression elimination — the bpePairCounts
-    // re-eval trap), then count hits once and derive the fraction
-    df.select(col(idCol),
-        transform(tokens(col(textCol)), t => lower(t)).as("__wl"))
-      .select(
-        col(idCol),
-        size(filter(wl, isBlocked)).cast("int").as("n_blocklist_hits"),
-        size(filter(array_distinct(wl), isBlocked)).cast("int")
-          .as("n_blocklist_terms"),
-        size(wl).as("__nw"))
       .withColumn("frac_blocklist",
         col("n_blocklist_hits").cast("double") / col("__nw").cast("double"))
       .withColumn("flagged", col("n_blocklist_hits") > 0)
@@ -887,7 +720,7 @@ object TextAnalysis {
     // transform form paid an interpreted lambda frame per window and
     // materialized every window array inside the generate; the slice
     // now runs codegen'd per output row (parity pinned in LlmSpec
-    // against [[tokenWindowsHof]])
+    // against the transform form)
     df.select(col(idCol), tokens(col(textCol)).as("__tk"))
       .select(col(idCol), tk, posexplode(sequence(lit(0), nStarts - 1)))
       .select(col(idCol), col("pos").cast("int").as("win_idx"),
@@ -897,25 +730,5 @@ object TextAnalysis {
         col("win_idx"),
         concat_ws(" ", col("__win")).as("win_text"),
         size(col("__win")).cast("int").as("n_win_tokens"))
-  }
-
-  /** The pre-r19 transform-lambda formulation of [[tokenWindows]] —
-    * the executable PARITY REFERENCE for the slice-after-generate
-    * rewrite.
-    */
-  private[graft] def tokenWindowsHof(idCol: String, textCol: String, win: Int, stride: Int)(
-      df: DataFrame): DataFrame = {
-    require(win > 0 && stride > 0 && stride <= win, s"bad window ($win, $stride)")
-    val tk = col("__tk")
-    val nStarts = floor((size(tk) - 1).cast("double") / stride).cast("int") + 1
-    df.select(col(idCol), tokens(col(textCol)).as("__tk"))
-      .select(col(idCol), tk,
-        posexplode(transform(sequence(lit(0), nStarts - 1),
-          i => slice(tk, i * stride + 1, lit(win)))))
-      .select(
-        col(idCol),
-        col("pos").cast("int").as("win_idx"),
-        concat_ws(" ", col("col")).as("win_text"),
-        size(col("col")).cast("int").as("n_win_tokens"))
   }
 }

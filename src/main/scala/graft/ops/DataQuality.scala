@@ -35,7 +35,7 @@ object DataQuality {
   final case class PatternRule(name: String, column: String, regex: String) extends Rule
 
   /** The rule's VIOLATION predicate (true = row fails the rule). */
-  private def violation(r: Rule): Column = r match {
+  private[graft] def violation(r: Rule): Column = r match {
     case NotNullRule(_, c) => col(c).isNull
     case BoundsRule(_, c, lo, hi) =>
       col(c).isNotNull && (col(c) < lo || col(c) > hi)
@@ -45,7 +45,7 @@ object DataQuality {
       col(c).isNotNull && !col(c).rlike(re)
   }
 
-  private def requireRules(rules: Seq[Rule]): Unit = {
+  private[graft] def requireRules(rules: Seq[Rule]): Unit = {
     require(rules.nonEmpty, "at least one rule required")
     val dup = rules.groupBy(_.name).collect { case (n, rs) if rs.size > 1 => n }
     require(dup.isEmpty, s"duplicate rule names: ${dup.mkString(", ")}")
@@ -111,24 +111,12 @@ object DataQuality {
     // passing (or null-verdict) rule contributes an empty array —
     // the same element sequence the old when()-array + interpreted
     // isNotNull filter LAMBDA produced, fully codegen'd (parity
-    // pinned in DataQualitySpec against [[rowFlagsHof]])
+    // pinned in DataQualitySpec against the filter-lambda form)
     val flags = concat(rules.map(r =>
       when(violation(r), array(lit(r.name)))
         .otherwise(typedLit(Seq.empty[String]))): _*)
     df.select(keyCols.map(col) :+
       explode(flags).as("rule_name"): _*)
-  }
-
-  /** The pre-r19 filter-lambda formulation of [[rowFlags]] — the
-    * executable PARITY REFERENCE for the concat rewrite.
-    */
-  private[graft] def rowFlagsHof(
-      df: DataFrame, rules: Seq[Rule], keyCols: Seq[String]): DataFrame = {
-    requireRules(rules)
-    require(keyCols.nonEmpty, "keyCols must be non-empty")
-    val flags = array(rules.map(r => when(violation(r), lit(r.name))): _*)
-    df.select(keyCols.map(col) :+
-      explode(filter(flags, f => f.isNotNull)).as("rule_name"): _*)
   }
 
   /** The pass-through complement of [[rowFlags]]: rows violating NO

@@ -157,7 +157,7 @@ object EntityRes {
     // `numBands` is a plan-time constant, so the band loop unrolls to a
     // plain `array(f(0), …, f(n-1))` — the IDENTICAL expression tree
     // with the lambda variable replaced by a literal (OpsSpec pins
-    // equality against [[segmentBandsHof]]). The `transform` over
+    // equality against the lambda form). The `transform` over
     // `sequence(0, n-1)` it replaces evaluated through an interpreted
     // Catalyst lambda frame per row inside the band posexplode of
     // every er_*banded query — the unrolled form stays inside
@@ -169,20 +169,6 @@ object EntityRes {
       concat(len.cast("string"), lit(":"), c.substr(start, end - start))
     }
     array(bands: _*)
-  }
-
-  /** The pre-r19 higher-order-function formulation of
-    * [[segmentBands]] — the executable PARITY REFERENCE for the
-    * unrolled form (OpsSpec pins equality).
-    */
-  private[graft] def segmentBandsHof(c: Column, numBands: Int): Column = {
-    require(numBands >= 2, s"segmentBands needs >= 2 bands, got $numBands")
-    val len = length(c)
-    transform(sequence(lit(0), lit(numBands - 1)), i => {
-      val start = floor(i * len / numBands).cast("int") + 1
-      val end = floor((i + 1) * len / numBands).cast("int") + 1
-      concat(len.cast("string"), lit(":"), c.substr(start, end - start))
-    })
   }
 
   /** MinHash band keys over character `shingleK`-grams — the
@@ -205,30 +191,14 @@ object EntityRes {
     require(shingleK >= 1 && numBands >= 1,
       s"bad shingleK=$shingleK / numBands=$numBands")
     // ONE native loop per row ([[graft.functions.MinHashBands]]) in
-    // place of the higher-order-function formulation below — that
-    // paid an interpreted Catalyst lambda (substr + concat + md5 +
-    // conv(16,10) string round-trip) per band PER SHINGLE, the
+    // place of the higher-order-function formulation (OpsSpec's
+    // parity reference) — that paid an interpreted Catalyst lambda
+    // (substr + concat + md5 + conv(16,10) string round-trip) per
+    // band PER SHINGLE, the
     // measured dominant term of er_pairs_minhash_sub. Output is
-    // bit-identical — ErSpec pins native == HOF, and the query's
+    // bit-identical — OpsSpec pins native == HOF, and the query's
     // DuckDB oracle hash-gates it.
     Native.minhashBands(c, shingleK, numBands)
-  }
-
-  /** The pre-r18 column formulation of [[minhashBands]] — kept as the
-    * executable PARITY REFERENCE for the native expression that
-    * replaced it (ErSpec pins equality), and as the readable
-    * statement of the band semantics the DuckDB oracle replays.
-    */
-  private[graft] def minhashBandsHof(c: Column, shingleK: Int = 3, numBands: Int = 4): Column = {
-    require(shingleK >= 1 && numBands >= 1,
-      s"bad shingleK=$shingleK / numBands=$numBands")
-    val shingles = transform(
-      sequence(lit(1), greatest(length(c) - (shingleK - 1), lit(1))),
-      i => c.substr(i, lit(shingleK)))
-    transform(sequence(lit(0), lit(numBands - 1)), b =>
-      array_min(transform(shingles, sh =>
-        graft.llm.Sampling.hashKey(concat(b.cast("string"), lit(":"), sh))))
-        .cast("string"))
   }
 
   /** Candidate match pairs: records sharing the blocking key, paired

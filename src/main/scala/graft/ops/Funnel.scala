@@ -235,7 +235,7 @@ object Funnel {
       // differ only in null placement; struct order is field order,
       // __rn first, distinct per user) and .getField extracts the
       // type column positionally without the per-element transform
-      // LAMBDA — parity pinned in OpsSpec against [[pathHof]]
+      // LAMBDA — parity pinned in OpsSpec against the transform form
       .agg(array_join(
         sort_array(collect_list(struct(col("__rn"), col(typeCol).as("t"))))
           .getField("t"),
@@ -244,12 +244,4 @@ object Funnel {
       .agg(count(lit(1)).as("n_users"))
       .where(col("n_users") >= minSupport)
   }
-
-  /** The pre-r19 array_sort + transform formulation of [[topPaths]]'
-    * path assembly — the executable PARITY REFERENCE for the
-    * sort_array + getField swap (input: the collected
-    * array<struct<__rn,t>> column).
-    */
-  private[graft] def pathHof(collected: Column): Column =
-    array_join(transform(array_sort(collected), x => x("t")), ">")
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Global running sums without a single-partition window, and the
@@ -90,8 +90,8 @@ object Sweep {
     // curve down by one). A NULL start cannot be placed on the line
     // at all and contributes nothing.
     //
-    // Both boundaries EXPLODE out of one scan: the pre-r19 form (kept
-    // as [[concurrencyUnionHof]], the parity reference) unioned two
+    // Both boundaries EXPLODE out of one scan: the pre-r19 form (the
+    // parity reference OpsSpec pins this one against) unioned two
     // selects over `intervals`, so the caller's interval pipeline —
     // typically a sessionization window over the raw event log — ran
     // TWICE inside the checkpoint job. Same delta multiset: the +1
@@ -105,27 +105,6 @@ object Sweep {
           struct(col(endCol).as("ts"), lit(-1).as("delta")))).as("__b") +: keep): _*)
       .select((col("__b.ts").as("ts") +: col("__b.delta").as("delta") +: keep): _*)
       .where(col("ts").isNotNull)
-      .withColumn("__d", to_date(col("ts")))
-      .withColumn("__nd", -col("delta"))
-      .localCheckpoint(true)
-    globalRunningSum("delta", "__d", Seq("ts", "__nd") ++ tieCols, "concurrent")(deltas)
-      .drop("__d", "__nd")
-  }
-
-  /** The pre-r19 two-scan union formulation of [[concurrency]] — the
-    * executable PARITY REFERENCE for the explode rewrite.
-    */
-  private[graft] def concurrencyUnionHof(
-      startCol: String,
-      endCol: String,
-      tieCols: Seq[String])(intervals: DataFrame): DataFrame = {
-    val keep = tieCols.map(col)
-    val deltas = intervals
-      .where(col(startCol).isNotNull)
-      .select((col(startCol).as("ts") +: lit(1).as("delta") +: keep): _*)
-      .unionByName(intervals
-        .where(col(startCol).isNotNull && col(endCol).isNotNull)
-        .select((col(endCol).as("ts") +: lit(-1).as("delta") +: keep): _*))
       .withColumn("__d", to_date(col("ts")))
       .withColumn("__nd", -col("delta"))
       .localCheckpoint(true)

@@ -84,9 +84,9 @@ class ArrayFnsSpec extends SparkSpec {
       (v.zip(model.centroids(c)).map { case (x, y) => (x - y) * (x - y) }.sum, c)
     }.take(2)
     (in, Seq(
-      ("shinglesOf", Dedup.shinglesOf(col("t"), 3), Dedup.shinglesOfHof(col("t"), 3)),
-      ("bandHashes", Dedup.bandHashes(col("sig"), 8, 4), Dedup.bandHashesHof(col("sig"), 8, 4)),
-      ("markerCount", QualityProbe.markerCount("t", "the"), QualityProbe.markerCountHof("t", "the")),
+      ("shinglesOf", Dedup.shinglesOf(col("t"), 3), ParityRefs.shinglesOfHof(col("t"), 3)),
+      ("bandHashes", Dedup.bandHashes(col("sig"), 8, 4), ParityRefs.bandHashesHof(col("sig"), 8, 4)),
+      ("markerCount", QualityProbe.markerCount("t", "the"), ParityRefs.markerCountHof("t", "the")),
       ("lshBucket", Similarity.lshBucket(col("v"), planes), lit(bucketRef)),
       ("probeCentroids", Ivf.probeCentroids(col("v"), model, 2), typedLit(cellsRef)),
       ("dot", Native.dot(col("v"), col("w")), Similarity.dot(col("v"), col("w"))),
@@ -174,17 +174,17 @@ class ArrayFnsSpec extends SparkSpec {
     ).toDF("a", "b")
     val r = df.select(
       Native.dotInt(col("a"), col("b")).as("n"),
-      graft.llm.Quantize.idotHof(col("a"), col("b")).as("h")).collect()
+      ParityRefs.idotHof(col("a"), col("b")).as("h")).collect()
     r.foreach(row => assert(row.getLong(0) == row.getLong(1)))
     // length mismatch → null on BOTH forms (zip_with pads nulls)
     val mm = Seq((Array(1, 2, 3), Array(10))).toDF("a", "b")
       .select(Native.dotInt(col("a"), col("b")).as("n"),
-        graft.llm.Quantize.idotHof(col("a"), col("b")).as("h")).collect()(0)
+        ParityRefs.idotHof(col("a"), col("b")).as("h")).collect()(0)
     assert(mm.isNullAt(0) && mm.isNullAt(1))
     // null element → null on BOTH forms (product null poisons the fold)
     val ne = Seq((Some(Seq(Some(1), None)), Some(Seq(Some(2), Some(3))))).toDF("a", "b")
       .select(Native.dotInt(col("a"), col("b")).as("n"),
-        graft.llm.Quantize.idotHof(col("a"), col("b")).as("h")).collect()(0)
+        ParityRefs.idotHof(col("a"), col("b")).as("h")).collect()(0)
     assert(ne.isNullAt(0) && ne.isNullAt(1))
     // null array → null
     val na = Seq((Option.empty[Seq[Int]], Some(Seq(1)))).toDF("a", "b")

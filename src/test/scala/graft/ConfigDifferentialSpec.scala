@@ -346,13 +346,13 @@ class ConfigDifferentialSpec extends SparkSpec {
     assert(csvs.size > 20, s"expected the fixture sheets, found ${csvs.size}")
     csvs.foreach { p =>
       val nat = ConfigReader.readSheet(spark, p)
-      val ref = ConfigReader.readSheetSpark(spark, p)
+      val ref = ParityRefs.readSheetSpark(spark, p)
       assert(nat == ref, s"$p: driver parse $nat != spark $ref")
     }
     // decision-table face on every sheet that has an 'output' column
     csvs.filter(_.contains("/tables/")).foreach { p =>
       val nat = ConfigReader.readDecisionTable(spark, p, "t")
-      val ref = ConfigReader.readDecisionTableSpark(spark, p, "t")
+      val ref = ParityRefs.readDecisionTableSpark(spark, p, "t")
       assert(nat == ref, s"$p: decision table ${nat.mapping} != ${ref.mapping}")
     }
     // recipe face: single-file driver-side parse == the Spark reader
@@ -360,7 +360,7 @@ class ConfigDifferentialSpec extends SparkSpec {
     import graft.llm.CurationPipeline
     csvs.filter(_.contains("curation_demo")).foreach { p =>
       val nat = CurationPipeline.readRecipe(spark, p)
-      val ref = CurationPipeline.readRecipeSpark(spark, p)
+      val ref = ParityRefs.readRecipeSpark(spark, p)
       assert(nat == ref, s"$p: recipe $nat != $ref")
     }
   }

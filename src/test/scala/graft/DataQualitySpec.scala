@@ -70,7 +70,7 @@ class DataQualitySpec extends SparkSpec {
       df.collect().map(r => (r.getAs[Long]("id"), r.getAs[String]("rule_name")))
         .sortBy(identity).toSeq
     val nat = rowsOf(DataQuality.rowFlags(rows, rules, Seq("id")))
-    val hof = rowsOf(DataQuality.rowFlagsHof(rows, rules, Seq("id")))
+    val hof = rowsOf(ParityRefs.rowFlagsHof(rows, rules, Seq("id")))
     assert(nat == hof, s"native $nat != HOF $hof")
     // still interpreted-lambda-free AND shuffle-free
     val plan = planOf(DataQuality.rowFlags(rows, rules, Seq("id")))

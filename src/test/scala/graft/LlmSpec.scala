@@ -430,7 +430,7 @@ class LlmSpec extends SparkSpec {
     val adj = df.where(size(tk) >= 2).select(
       arrays_zip(slice(tk, lit(1), size(tk) - 1).as("w1"),
         slice(tk, lit(2), size(tk) - 1).as("w2")).as("z"),
-      TextAnalysis.adjacentPairsHof(tk).as("h")).collect()
+      ParityRefs.adjacentPairsHof(tk).as("h")).collect()
     adj.foreach { r =>
       assert(r.getSeq[org.apache.spark.sql.Row](0) == r.getSeq[org.apache.spark.sql.Row](1))
     }
@@ -445,7 +445,7 @@ class LlmSpec extends SparkSpec {
       }
       val sg = df.where(size(tk) >= 2).select(
         concat(byDistance: _*).as("z"),
-        TextAnalysis.skipgramPairsHof(tk, w).as("h")).collect()
+        ParityRefs.skipgramPairsHof(tk, w).as("h")).collect()
       sg.foreach { r =>
         val zs = r.getSeq[org.apache.spark.sql.Row](0).groupBy(identity).view.mapValues(_.size).toMap
         val hs = r.getSeq[org.apache.spark.sql.Row](1).groupBy(identity).view.mapValues(_.size).toMap
@@ -1439,7 +1439,7 @@ class LlmSpec extends SparkSpec {
         out.collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
           .sortBy(t => (t._1, t._2, t._3)).toSeq
       val nat = rows(Dedup.cdcChunks(df, "doc_id", "text", divisor))
-      val hof = rows(Dedup.cdcChunksHof(df, "doc_id", "text", divisor))
+      val hof = rows(ParityRefs.cdcChunksHof(df, "doc_id", "text", divisor))
       assert(nat == hof, s"divisor=$divisor: native != HOF reference")
       assert(nat.nonEmpty)
     }
@@ -1463,7 +1463,7 @@ class LlmSpec extends SparkSpec {
           case v => v
         }).toMap
     val nat = rows(TextAnalysis.withQualityScores("text")(df))
-    val hof = rows(TextAnalysis.withQualityScoresHof("text")(df))
+    val hof = rows(ParityRefs.withQualityScoresHof("text")(df))
     assert(nat.keySet == hof.keySet)
     nat.foreach { case (id, v) => assert(v == hof(id), s"id=$id: $v != ${hof(id)}") }
   }
@@ -1477,7 +1477,7 @@ class LlmSpec extends SparkSpec {
     // markerCount: single-marker native scan vs the filter lambda
     val mc = df.select(col("id"),
       QualityProbe.markerCount("text", "the").as("n"),
-      QualityProbe.markerCountHof("text", "the").as("h"))
+      ParityRefs.markerCountHof("text", "the").as("h"))
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
     mc.foreach { case (id, n, h) => assert(n == h, s"id=$id: native $n != HOF $h") }
     // and a marker that can hit the empty tokens of a space run
@@ -1495,7 +1495,7 @@ class LlmSpec extends SparkSpec {
     def rows(out: org.apache.spark.sql.DataFrame) =
       out.select("id", cols: _*).collect().map(r => r.getInt(0) -> r.toSeq).toMap
     val nat = rows(TextAnalysis.withLangId("text", profiles)(df))
-    val hof = rows(TextAnalysis.withLangIdHof("text", profiles)(df))
+    val hof = rows(ParityRefs.withLangIdHof("text", profiles)(df))
     assert(nat.keySet == hof.keySet)
     nat.foreach { case (id, v) => assert(v == hof(id), s"id=$id: $v != ${hof(id)}") }
     // bandHashes: native loop vs the per-band transform lambda, on
@@ -1506,7 +1506,7 @@ class LlmSpec extends SparkSpec {
     for ((np, nb) <- Seq((64, 16), (64, 8), (8, 4), (128, 32))) {
       val cmp = sigs.select(col("doc_id"),
         Dedup.bandHashes(col("__sig"), np, nb).as("n"),
-        Dedup.bandHashesHof(col("__sig"), np, nb).as("h"))
+        ParityRefs.bandHashesHof(col("__sig"), np, nb).as("h"))
         .collect().map(r => (r.getLong(0), r.getSeq[Long](1), r.getSeq[Long](2)))
       cmp.foreach { case (id, n, h) =>
         assert(n == h, s"doc=$id numPerm=$np bands=$nb: native $n != HOF $h") }
@@ -1516,7 +1516,7 @@ class LlmSpec extends SparkSpec {
       .zipWithIndex.map(_.swap).toDF("id", "text")
       .select(col("id"),
         TextAnalysis.tokensRegex(col("text")).as("n"),
-        TextAnalysis.tokensRegexHof(col("text")).as("h"))
+        ParityRefs.tokensRegexHof(col("text")).as("h"))
       .collect().map(r => (r.getInt(0), r.getSeq[String](1), r.getSeq[String](2)))
     tr.foreach { case (id, n, h) => assert(n == h, s"id=$id: $n != $h") }
   }
@@ -1540,7 +1540,7 @@ class LlmSpec extends SparkSpec {
           case v => v
         }).toMap
     val nat = rows(TextAnalysis.blocklistScan("doc_id", "text", terms)(df))
-    val hof = rows(TextAnalysis.blocklistScanHof("doc_id", "text", terms)(df))
+    val hof = rows(ParityRefs.blocklistScanHof("doc_id", "text", terms)(df))
     assert(nat.keySet == hof.keySet)
     nat.foreach { case (id, v) => assert(v == hof(id), s"id=$id: $v != ${hof(id)}") }
     // spot-pin the definitions, not just parity: "SLOW road slow Slow"
@@ -1556,7 +1556,7 @@ class LlmSpec extends SparkSpec {
         CurationPipeline.Stage("BLOCKLIST FILTER", Map("terms" -> "slow,junk")),
         "doc_id", "text", None)
       .collect().map(_.getInt(0)).toSet
-    val keptHof = df.where(!CurationPipeline.blocklistHitHof("text", Seq("slow", "junk")))
+    val keptHof = df.where(!ParityRefs.blocklistHitHof("text", Seq("slow", "junk")))
       .collect().map(_.getInt(0)).toSet
     assert(kept == keptHof, s"native kept $kept != HOF kept $keptHof")
     assert(kept.contains(11), "NULL-text row must be kept by the total predicate")
@@ -1564,7 +1564,7 @@ class LlmSpec extends SparkSpec {
     // bag fingerprint: sort_array swap == array_sort reference on
     // unicode / empty-token / duplicate-token bags
     val bf = TextAnalysis.withBagFingerprint("text")(
-        TextAnalysis.withBagFingerprintHof("text", "ref")(df))
+        ParityRefs.withBagFingerprintHof("text", "ref")(df))
       .select("doc_id", "bag_fingerprint", "ref")
       .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2)))
     bf.foreach { case (id, n, h) => assert(n == h, s"id=$id: $n != $h") }
@@ -1587,7 +1587,7 @@ class LlmSpec extends SparkSpec {
             case v => v
           }).toMap
       val nat = rows(TextAnalysis.withBpeTokenCount("text", merges)(df))
-      val hof = rows(TextAnalysis.withBpeTokenCountHof("text", merges)(df))
+      val hof = rows(ParityRefs.withBpeTokenCountHof("text", merges)(df))
       assert(nat.keySet == hof.keySet)
       nat.foreach { case (id, v) =>
         assert(v == hof(id), s"id=$id merges=$merges: $v != ${hof(id)}") }
@@ -1599,7 +1599,7 @@ class LlmSpec extends SparkSpec {
         out.collect().map(r =>
           (r.getInt(0), r.getInt(1), r.getString(2), r.getInt(3))).sorted.toSeq
       val nat = rows(TextAnalysis.tokenWindows("doc_id", "text", win, stride)(df))
-      val hof = rows(TextAnalysis.tokenWindowsHof("doc_id", "text", win, stride)(df))
+      val hof = rows(ParityRefs.tokenWindowsHof("doc_id", "text", win, stride)(df))
       assert(nat == hof, s"($win,$stride): $nat != $hof")
     }
   }
@@ -1621,7 +1621,7 @@ class LlmSpec extends SparkSpec {
       "frac_bullet_lines", "frac_ellipsis_lines", "n_stopwords_present", "passes_gopher")
     val nat = TextAnalysis.withGopherSignals("text")(df)
       .select("id", cols: _*).collect().map(r => r.getInt(0) -> r.toSeq).toMap
-    val hof = TextAnalysis.withGopherSignalsHof("text")(df)
+    val hof = ParityRefs.withGopherSignalsHof("text")(df)
       .select("id", cols: _*).collect().map(r => r.getInt(0) -> r.toSeq).toMap
     assert(nat.keySet == hof.keySet)
     nat.foreach { case (id, v) =>
@@ -1630,7 +1630,7 @@ class LlmSpec extends SparkSpec {
     // and with a CUSTOM stopword list (the probe-teacher call shape)
     val nat2 = TextAnalysis.withGopherSignals("text", Seq("the", "a"))(df)
       .select("id", cols: _*).collect().map(r => r.getInt(0) -> r.toSeq).toMap
-    val hof2 = TextAnalysis.withGopherSignalsHof("text", Seq("the", "a"))(df)
+    val hof2 = ParityRefs.withGopherSignalsHof("text", Seq("the", "a"))(df)
       .select("id", cols: _*).collect().map(r => r.getInt(0) -> r.toSeq).toMap
     nat2.foreach { case (id, v) =>
       assert(v == hof2(id), s"id=$id custom stopwords: native $v != HOF ${hof2(id)}")
@@ -1652,7 +1652,7 @@ class LlmSpec extends SparkSpec {
     for (k <- Seq(1, 2, 3, 5)) {
       val rows = df.select(col("id"),
           graft.llm.Dedup.shinglesOf(col("text"), k).as("nat"),
-          graft.llm.Dedup.shinglesOfHof(col("text"), k).as("hof"))
+          ParityRefs.shinglesOfHof(col("text"), k).as("hof"))
         .collect()
       rows.foreach { r =>
         assert(r.isNullAt(1) == r.isNullAt(2), s"id=${r.getInt(0)} k=$k null mismatch")
@@ -1684,7 +1684,7 @@ class LlmSpec extends SparkSpec {
         .sortBy(t => (t._1, t._2, t._3)).toSeq
     for ((div, win) <- Seq((16, 8), (4, 3), (32, 8))) {
       val native = rows(Multimodal.binaryCdcChunks("content", "doc_id", div, win)(df))
-      val hof = rows(Multimodal.binaryCdcChunksHof("content", "doc_id", div, win)(df))
+      val hof = rows(ParityRefs.binaryCdcChunksHof("content", "doc_id", div, win)(df))
       assert(native == hof, s"divisor=$div window=$win: native != HOF reference")
       assert(native.nonEmpty)
     }

@@ -1302,7 +1302,7 @@ class OpsSpec extends SparkSpec {
     (2 to 5).foreach { n =>
       val r = df.select(
         EntityRes.segmentBands(col("s"), n).as("u"),
-        EntityRes.segmentBandsHof(col("s"), n).as("h")).collect()
+        ParityRefs.segmentBandsHof(col("s"), n).as("h")).collect()
       r.foreach { row =>
         assert(row.getSeq[String](0) == row.getSeq[String](1),
           s"n=$n: ${row.getSeq[String](0)} != ${row.getSeq[String](1)}")
@@ -1319,7 +1319,7 @@ class OpsSpec extends SparkSpec {
     for ((k, nb) <- Seq((3, 4), (2, 6), (5, 1))) {
       val rows = df.select(col("id"),
           EntityRes.minhashBands(col("name"), k, nb).as("nat"),
-          EntityRes.minhashBandsHof(col("name"), k, nb).as("hof"))
+          ParityRefs.minhashBandsHof(col("name"), k, nb).as("hof"))
         .collect()
       rows.foreach { r =>
         assert(r.getSeq[String](1) == r.getSeq[String](2),
@@ -1484,7 +1484,7 @@ class OpsSpec extends SparkSpec {
         (Option(r.getTimestamp(0)).map(_.toString), r.getInt(1), r.getLong(2), r.getLong(3)))
         .sortBy(x => (x._1, x._2, x._3, x._4)).toSeq
     val nat = rows(Sweep.concurrency("st", "en", Seq("id"))(iv))
-    val hof = rows(Sweep.concurrencyUnionHof("st", "en", Seq("id"))(iv))
+    val hof = rows(ParityRefs.concurrencyUnionHof("st", "en", Seq("id"))(iv))
     assert(nat == hof, s"explode $nat != union $hof")
   }
 
@@ -1701,7 +1701,7 @@ class OpsSpec extends SparkSpec {
   test("topPaths: sort_array+getField assembly == array_sort+transform reference") {
     import graft.ops.Funnel
     // the r19 lambda-free path assembly against the pre-r19 HOF form
-    // ([[Funnel.pathHof]]), on paths with ties, truncation, and a
+    // ([[ParityRefs.pathHof]]), on paths with ties, truncation, and a
     // single-event user — identical (path, n_users) sets
     val ev = Seq(
       (1L, 10L, 1L, "a"), (1L, 20L, 2L, "b"), (1L, 30L, 3L, "c"), (1L, 40L, 4L, "d"),
@@ -1714,7 +1714,7 @@ class OpsSpec extends SparkSpec {
         .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
       ev.withColumn("__rn", row_number().over(w)).where(col("__rn") <= maxLen)
         .groupBy(col("user_id"))
-        .agg(Funnel.pathHof(
+        .agg(ParityRefs.pathHof(
           collect_list(struct(col("__rn"), col("event_type").as("t")))).as("path"))
         .groupBy(col("path")).agg(count(lit(1)).as("n_users"))
         .collect().map(x => x.getString(0) -> x.getLong(1)).toMap

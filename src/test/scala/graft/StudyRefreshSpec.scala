@@ -20,12 +20,13 @@ import graft.model.SourceKind
 /** The study refresh is pure plan construction plus one sink: building
   * the plan fires no Spark job, re-read analytes are served by exchange
   * reuse instead of a cache, so nothing outlives a refresh, and the
-  * driver-side view schemas match Spark's own inference.
+  * driver-side view and table schemas match Spark's own inference.
   */
 class StudyRefreshSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private val configDir = "fixtures/clinical_study"
+  private val sf = "/root/testdata/sf0.001"
 
   private def tmp(prefix: String): String = Files.createTempDirectory(prefix).toString
 
@@ -99,8 +100,15 @@ class StudyRefreshSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("building the clinical study plan fires no Spark job") {
     val store = tmp("graft_refresh_jobs")
     ClinicalDemo.buildStore(spark, store)
-    val jobs = jobsDuring(study(store))
-    assert(jobs == 0, s"readStudy + StudyRunner.run fired $jobs job(s)")
+    // study_demo's GET_DATA rows all read `Parquet` tables
+    val builds = Seq(
+      "clinical_study" -> (() => study(store)),
+      "study_demo" -> (() => StudyRunner.run(
+        ConfigReader.readStudy(spark, "fixtures/study_demo"), new ParquetResolver(spark, sf))))
+    for ((name, build) <- builds) {
+      val jobs = jobsDuring(build())
+      assert(jobs == 0, s"$name: readStudy + StudyRunner.run fired $jobs job(s)")
+    }
   }
 
   test("the executed study plan scans each store read once and caches nothing") {
@@ -160,7 +168,10 @@ class StudyRefreshSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
     def parity(d: String): Unit =
       assert(ParquetResolver.footerSchema(spark, d) == Some(spark.read.parquet(d).schema), d)
-    Seq(typed, two).foreach(parity)
+    // single-file paths, as ParquetResolver.table reads them
+    val tables = new java.io.File(sf).listFiles().map(_.getPath).filter(_.endsWith(".parquet"))
+    assert(tables.length >= 10, tables.mkString(", "))
+    (Seq(typed, two) ++ tables.sorted).foreach(parity)
     spark.conf.set("spark.sql.parquet.mergeSchema", "true")
     try {
       assert(spark.read.parquet(two).schema.fieldNames.toSeq == Seq("id", "s", "x"))
